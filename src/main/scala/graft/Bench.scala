@@ -116,15 +116,7 @@ object Bench {
     val jvmUp = java.lang.management.ManagementFactory.getRuntimeMXBean.getUptime / 1000.0
     val sbtAge = parentAgeSec().getOrElse(-1.0)
     provenance = f""""idle":${load1 >= 0 && load1 < 4.0},"load1_before":$load1%.2f,"jvm_uptime_at_main_sec":$jvmUp%.1f,"sbt_age_at_main_sec":$sbtAge%.1f,"cpus":$cpus"""
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // WSCG methods past HotSpot's 8000-bytecode JIT limit never compile
-      // and run as interpreted bytecode — fall back to expression codegen
-      // instead (see GraftSession; measured 1.7x on the gram/bloom stage)
-      .config("spark.sql.codegen.hugeMethodLimit", "8000")
+    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt)
       .config("spark.sql.warehouse.dir", "/tmp/graft_bench_warehouse")
       // a loaded host can stall block-manager RPCs past the 10s default;
       // the resulting TimeoutException stacks are harmless but pollute the
@@ -531,7 +523,6 @@ object Bench {
         // here on purpose: at 256 merges it is a 256-deep expression
         // tree — the exact wide-codegen OOM shape the native path
         // exists to avoid.
-        graft.text.BpeEncoder.register(spark)
         val encT0 = System.nanoTime()
         docs.select(md5(graft.text.BpeEncoder.encode(col("text"),
             seqModel.merges.map { case (a, b, _) => (a, b) })).as("h"))
@@ -961,7 +952,6 @@ object Bench {
       val tIQ = timed(graft.text.InvertedIndex.query(spark, s"$invBase/idx",
         Seq("spark", "window", "hash")).queryExecution.toRdd.count())
       // q182's recipe: stale slice build, full retrain + root swap
-      graft.ml.VecOps.register(spark)
       val e = spark.read.parquet(s"$sfDir/embeddings.parquet")
       val annBase = graft.io.Scratch.dir("graft_ann_rebuild_stages")
       val tAB = timed(graft.ml.AnnIndex.build(spark,

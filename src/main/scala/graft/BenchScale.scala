@@ -112,11 +112,7 @@ object BenchScale {
     val subset = sys.env.get("SPARK_GRAFT_SCALE_SUBSET")
       .map(_.split(",").map(_.trim).toSet)
     val boarded = subset.fold(headline)(sel => headline.filter(sel))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt)
       .config("spark.sql.warehouse.dir", "/tmp/graft_bench_warehouse")
       .config("spark.rpc.askTimeout", "600s")
       .config("spark.network.timeout", "600s")

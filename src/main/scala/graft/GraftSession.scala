@@ -3,15 +3,31 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Engine entry point: a SparkSession wired with the graft extensions
-  * (spatial expressions + optimizer rule, vector ops) and the confs the
-  * engine is tuned for. Users of the reference switch by building their
-  * session here and calling the `graft.api` pipelines / `graft.queries`
-  * operators.
+  * (native expressions, table functions, optimizer rule — see
+  * [[sql.NativeCatalog]]) and the confs the engine is tuned for. Users of
+  * the reference switch by building their session here and calling the
+  * `graft.api` pipelines / `graft.queries` operators.
   */
 object GraftSession {
 
-  /** Pre-configured builder; caller may override any conf before
-    * getOrCreate.
+  /** The engine profile every session runs under — users, mains and the
+    * test suite alike.
+    */
+  val engineConf: Map[String, String] = Map(
+    "spark.sql.adaptive.enabled" -> "true",
+    // align whole-stage-codegen's fallback threshold with HotSpot's
+    // actual JIT limit (-XX:DontCompileHugeMethods refuses methods over
+    // 8000 bytecodes): Spark's 65535 default lets it keep a generated
+    // stage whose method the JVM will NEVER JIT-compile, which then runs
+    // as interpreted bytecode — measured 1.7x slower than the per-
+    // expression-codegen fallback on the gram/bloom projection. A JVM
+    // constant, not a data-scale tunable: identical on any cluster.
+    "spark.sql.codegen.hugeMethodLimit" -> "8000",
+    "spark.sql.session.timeZone" -> "UTC",
+    "spark.ui.enabled" -> "false")
+
+  /** Pre-configured builder; caller may add deployment settings (warehouse
+    * dir, timeouts) before getOrCreate.
     */
   def builder(master: String = "local[*]", shufflePartitions: Int = 32): SparkSession.Builder =
     SparkSession.builder()
@@ -19,28 +35,16 @@ object GraftSession {
       .appName("graft-engine")
       .withExtensions(new geo.GraftExtensions)
       .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.adaptive.enabled", "true")
-      // align whole-stage-codegen's fallback threshold with HotSpot's
-      // actual JIT limit (-XX:DontCompileHugeMethods refuses methods over
-      // 8000 bytecodes): Spark's 65535 default lets it keep a generated
-      // stage whose method the JVM will NEVER JIT-compile, which then runs
-      // as interpreted bytecode — measured 1.7x slower than the per-
-      // expression-codegen fallback on the gram/bloom projection. A JVM
-      // constant, not a data-scale tunable: identical on any cluster.
-      .config("spark.sql.codegen.hugeMethodLimit", "8000")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+      .config(engineConf)
 
-  /** Build the session and finish runtime registrations that the
-    * extensions path can't cover (rule install on pre-existing sessions,
-    * vec_dot).
+  /** Build the session. When one already existed (spark-shell, notebooks,
+    * a second call), `getOrCreate` returns it without running the
+    * extensions, so the native catalog is installed on it here; on a
+    * session the extensions built, the install changes nothing.
     */
   def create(master: String = "local[*]", shufflePartitions: Int = 32): SparkSession = {
     val spark = builder(master, shufflePartitions).getOrCreate()
-    geo.GeoClip.register(spark)
-    geo.ContainsPoint.register(spark)
-    ml.VecOps.register(spark)
-    sql.SqlTableFunctions.register(spark)
+    sql.NativeCatalog.install(spark)
     spark.sparkContext.setLogLevel("WARN")
     spark
   }

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -7,16 +6,7 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // see GraftSession: align WSCG fallback with the JVM's 8000-bytecode
-      // JIT limit so no stage runs as never-JIT'd interpreted bytecode
-      .config("spark.sql.codegen.hugeMethodLimit", "8000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.create(s"local[$cpus]", cpus.toInt)
     new java.io.File(outDir).mkdirs()
     // Dev-loop filter: SPARK_GRAFT_ONLY=q129_pq_adc,q130_... runs a subset
     // (the driver never sets it, so the gate always sweeps everything).

@@ -26,7 +26,6 @@ object GeoPipeline {
     * @param samples    (x, y, value) point samples
     */
   def zonalSlopeStats(boundaries: DataFrame, samples: DataFrame): DataFrame = {
-    ContainsPoint.register(boundaries.sparkSession)
     val polys = broadcast(boundaries
       .withColumn("env", GeoFunctions.stEnvelope(col("geom"))))
     samples.join(polys,
@@ -67,7 +66,6 @@ object GeoPipeline {
     * @param admin    (district, sector, admin_geom)
     */
   def tagAdmin(features: DataFrame, admin: DataFrame): DataFrame = {
-    ContainsPoint.register(features.sparkSession)
     val withCentroid = features
       .withColumn("centroid", GeoFunctions.stCentroidVertexMean(col("geom")))
     val adminEnv = broadcast(admin
@@ -107,7 +105,6 @@ object GeoPipeline {
     */
   def reprojectFeatures(features: DataFrame, sourceEpsg: Option[Int] = None,
       prjWkt: Option[String] = None): DataFrame = {
-    StReproject.register(features.sparkSession)
     // resolution ladder mirrors the reference: explicit sourceEpsg
     // override, then the .prj sidecar's WKT (CRS.from_wkt,
     // SlopeGeoJsonUploadView.py:157-162), then the coordinate probe —
@@ -139,7 +136,6 @@ object GeoPipeline {
     * vertex counts match the reference's decimated output behavior.
     */
   def simplifyFeatures(features: DataFrame, tolerance: Double = 0.001): DataFrame = {
-    StSimplify.register(features.sparkSession)
     features
       .withColumn("geom", StSimplify(col("geom"), tolerance))
       .filter(col("geom").isNotNull && GeoFunctions.stIsValidPolygon(col("geom")))

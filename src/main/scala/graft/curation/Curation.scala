@@ -1,8 +1,10 @@
 package graft.curation
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.ShiftRight
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge
 import graft.text.TextFunctions.{shingles, tokens}
 
 /** Public training-data curation API over arbitrary DataFrames — the
@@ -631,7 +633,6 @@ object Curation {
   def surprisalReport(docs: DataFrame, textCol: String = "text",
       idCol: String = "doc_id", strataCol: String = "lang",
       flagBits: Int = 3): DataFrame = {
-    graft.text.TextSketch.register(docs.sparkSession)
     def h60(c: Column) = graft.text.TextSketch.md5PrefixLong(c, 15)
     val bi = docs.select(col(idCol), col(strataCol),
         explode(graft.text.TextSketch.wordShingles(col(textCol), 2)).as("g"))
@@ -693,7 +694,6 @@ object Curation {
     */
   private def bigramFrame(df: DataFrame, textCol: String,
       carry: Seq[Column]): DataFrame = {
-    graft.text.TextSketch.register(df.sparkSession)
     df.select(carry :+
         explode(graft.text.TextSketch.wordShingles(col(textCol), 2)).as("g"): _*)
       .withColumn("bh", h60(col("g")))
@@ -775,7 +775,6 @@ object Curation {
   private def trigramCrossSurprisalPerDoc(target: DataFrame,
       reference: DataFrame, textCol: String, idCol: String,
       strataCol: String, backoffBits: Int, oovBits: Int): DataFrame = {
-    graft.text.TextSketch.register(target.sparkSession)
     def h60(c: Column) = graft.text.TextSketch.md5PrefixLong(c, 15)
     def trigrams(df: DataFrame, carry: Seq[Column]): DataFrame =
       df.select(carry :+
@@ -1231,7 +1230,6 @@ object Curation {
     // the native one-pass shingle expression, not the arrays_zip/transform
     // HOF chain: at gramK=8 the HOF materializes 8 sliced arrays plus a
     // zipped struct array per document — measured ~3x the shingle cost
-    graft.text.TextSketch.register(corpus.sparkSession)
     val benchGrams = bench.select(
         explode(graft.text.TextSketch.wordShingles(col(benchTextCol), gramK))
           .as("gram"))
@@ -1245,7 +1243,9 @@ object Curation {
 
     def testBit(pos: Column): Column = {
       val word = element_at(bitsLit, shiftright(pos, 6).cast("int") + 1)
-      call_function("shiftright", word, pos.bitwiseAND(lit(63L)).cast("int"))
+      // functions.shiftright takes only a literal shift count
+      ColumnBridge.native(
+          e => ShiftRight(e(0), e(1)), word, pos.bitwiseAND(lit(63L)).cast("int"))
         .bitwiseAND(lit(1L)) === lit(1L)
     }
 
@@ -1938,7 +1938,6 @@ object Curation {
     */
   def minhashSignatures(docs: DataFrame, idCol: String = "doc_id",
       textCol: String = "text", shingleWidth: Int = 3): DataFrame = {
-    graft.text.TextSketch.register(docs.sparkSession)
     docs
       .filter(size(split(trim(col(textCol)), "\\s+")) >= shingleWidth)
       .select(col(idCol).as("doc_id"),

@@ -2,13 +2,11 @@ package graft.geo
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types.{BooleanType, DataType}
-import org.apache.spark.sql.SparkSession
 
 /** `st_contains_point(geom, x, y)` — even-odd ray-casting containment as a
   * native Catalyst Expression. Semantics identical to
@@ -63,22 +61,7 @@ case class ContainsPoint(children: Seq[Expression])
 
 object ContainsPoint {
 
-  private val name = "st_contains_point"
-
-  /** Runtime registration (per session). Idempotent. Also installs
-    * [[SpatialFilterRule]] so constant-polygon containment filters gain
-    * parquet-pushable envelope range predicates.
-    */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier(name),
-      new ExpressionInfo(classOf[ContainsPoint].getName, name),
-      (exprs: Seq[Expression]) => ContainsPoint(exprs))
-    if (!spark.experimental.extraOptimizations.contains(SpatialFilterRule))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ SpatialFilterRule
-  }
-
+  /** Column API: builds the expression directly (no registry lookup). */
   def apply(geom: Column, x: Column, y: Column): Column =
-    call_function(name, geom, x, y)
+    ColumnBridge.native(ContainsPoint(_), geom, x, y)
 }

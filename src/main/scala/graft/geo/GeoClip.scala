@@ -1,11 +1,10 @@
 package graft.geo
 
-import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.{Column, SparkSessionExtensions}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types.{DataType, DoubleType}
 
 /** `st_rect_clip_area(geom, minx, miny, maxx, maxy)` — area of a polygon
@@ -17,8 +16,8 @@ import org.apache.spark.sql.types.{DataType, DoubleType}
   * UDF: operates directly on the columnar `ArrayData` without
   * Row→case-class deserialization, is null-strict, and keeps the plan
   * inspectable. Holes (rings beyond the first) subtract their clipped
-  * area. Registered under both a session-extensions injector
-  * ([[GraftExtensions]]) and a runtime helper ([[GeoClip.register]]).
+  * area. Reached from SQL through [[graft.sql.NativeCatalog]] and from
+  * Scala through [[GeoClip.rectIntersectionArea]].
   */
 case class RectClipArea(children: Seq[Expression])
     extends Expression with CodegenFallback {
@@ -115,41 +114,19 @@ case class RectClipArea(children: Seq[Expression])
 
 object GeoClip {
 
-  private val name = "st_rect_clip_area"
-
-  /** Runtime registration (per session). Idempotent. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier(name),
-      new ExpressionInfo(classOf[RectClipArea].getName, name),
-      (exprs: Seq[Expression]) => RectClipArea(exprs))
-
-  /** Column API over the registered function. */
+  /** Column API: builds [[RectClipArea]] directly (no registry lookup). */
   def rectIntersectionArea(geom: Column, minx: Column, miny: Column,
       maxx: Column, maxy: Column): Column =
-    call_function(name, geom, minx, miny, maxx, maxy)
+    ColumnBridge.native(RectClipArea(_), geom, minx, miny, maxx, maxy)
 }
 
 /** `spark.sql.extensions=graft.geo.GraftExtensions` injector — the
-  * standing registration path for clusters; tests/pipelines can also call
-  * [[GeoClip.register]] directly on an existing session.
+  * standing registration path: every entry of [[graft.sql.NativeCatalog]]
+  * plus [[SpatialFilterRule]]. [[graft.GraftSession]] builds with it; a
+  * session that existed before it could run gets the same surface from
+  * [[graft.GraftSession.create]].
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("st_rect_clip_area"),
-      new ExpressionInfo(classOf[RectClipArea].getName, "st_rect_clip_area"),
-      (exprs: Seq[Expression]) => RectClipArea(exprs)))
-    ext.injectFunction((
-      FunctionIdentifier("st_contains_point"),
-      new ExpressionInfo(classOf[ContainsPoint].getName, "st_contains_point"),
-      (exprs: Seq[Expression]) => ContainsPoint(exprs)))
-    ext.injectFunction((
-      FunctionIdentifier("st_simplify"),
-      new ExpressionInfo(classOf[StSimplify].getName, "st_simplify"),
-      (exprs: Seq[Expression]) => StSimplify(exprs)))
-    ext.injectOptimizerRule(_ => SpatialFilterRule)
-    // the curation library's SQL surface (table-valued entry points)
-    graft.sql.SqlTableFunctions.inject(ext)
-  }
+  override def apply(ext: SparkSessionExtensions): Unit =
+    graft.sql.NativeCatalog.inject(ext)
 }

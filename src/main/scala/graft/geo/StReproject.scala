@@ -1,12 +1,13 @@
 package graft.geo
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.{FunctionIdentifier, InternalRow}
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types.DataType
-import org.apache.spark.sql.functions.{call_function, lit}
+import org.apache.spark.sql.functions.lit
 
 /** `st_reproject(geom, src_epsg)` — column-level geometry reprojection to
   * WGS84 as a native Catalyst Expression: walks the nested polygon encoding
@@ -67,14 +68,6 @@ case class StReproject(children: Seq[Expression])
 
 object StReproject {
 
-  private val name = "st_reproject"
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier(name),
-      new ExpressionInfo(classOf[StReproject].getName, name),
-      (exprs: Seq[Expression]) => StReproject(exprs))
-
   def apply(geom: Column, srcEpsg: Int): Column =
-    call_function(name, geom, lit(srcEpsg))
+    ColumnBridge.native(StReproject(_), geom, lit(srcEpsg))
 }

@@ -1,12 +1,13 @@
 package graft.geo
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.{FunctionIdentifier, InternalRow}
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types.DataType
-import org.apache.spark.sql.functions.{call_function, lit}
+import org.apache.spark.sql.functions.lit
 
 /** `st_simplify(geom, tolerance)` — Douglas–Peucker decimation of every
   * ring of the polygon encoding (`array<array<array<double>>>`), the
@@ -147,15 +148,6 @@ case class StSimplify(children: Seq[Expression])
 
 object StSimplify {
 
-  private val name = "st_simplify"
-
-  /** Runtime registration (per session). Idempotent. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier(name),
-      new ExpressionInfo(classOf[StSimplify].getName, name),
-      (exprs: Seq[Expression]) => StSimplify(exprs))
-
   def apply(geom: Column, tolerance: Double): Column =
-    call_function(name, geom, lit(tolerance))
+    ColumnBridge.native(StSimplify(_), geom, lit(tolerance))
 }

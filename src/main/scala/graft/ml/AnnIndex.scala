@@ -50,7 +50,6 @@ object AnnIndex {
   def build(spark: SparkSession, vecs: DataFrame, path: String,
       k: Int = 16, iters: Int = 2, m: Int = 4, pqK: Int = 4): Codebooks = {
     import spark.implicits._
-    VecOps.register(spark)
     val coarse = KMeans.fitCodebook(spark, vecs, k = k, iters = iters)
     val cbs = Pq.fit(spark, vecs, m = m, k = pqK, iters = iters)
     val clean = vecs.filter(col("embedding").isNotNull)
@@ -80,7 +79,6 @@ object AnnIndex {
     */
   def append(spark: SparkSession, vecs: DataFrame, path: String,
       maxFilesPerCell: Int = 0): Unit = {
-    VecOps.register(spark)
     // unconditional (cheap no-op without swap debris): a crash inside a
     // previous compaction's rename-rename swap must be healed BEFORE new
     // rows land, regardless of whether THIS caller enables compaction
@@ -461,7 +459,6 @@ object AnnIndex {
       cell: Long, iters: Int = 2): SplitReport = {
     import org.apache.hadoop.fs.Path
     import spark.implicits._
-    VecOps.register(spark)
     recoverCells(spark, path)
     val cb = loadCodebooks(spark, path)
     require(cb.coarse.exists(_._1 == cell),
@@ -578,7 +575,6 @@ object AnnIndex {
     */
   def query(spark: SparkSession, vecs: DataFrame, path: String,
       qid: Long, nprobe: Int, topK: Int): DataFrame = {
-    VecOps.register(spark)
     val cb = loadCodebooks(spark, path)
     import spark.implicits._
     // rank the coarse centroids against the query vector; keep nprobe
@@ -668,7 +664,6 @@ object AnnIndex {
       "batchQuery: restrict with bucketedTable would re-shuffle the " +
         "bucketed index side and forfeit its zero-exchange guarantee — " +
         "use the partitioned-parquet layout for restricted searches")
-    VecOps.register(spark)
     val cb = loadCodebooks(spark, path)
     val indexRows = bucketedTable.map(spark.table)
       .getOrElse(spark.read.parquet(indexDir(path)))

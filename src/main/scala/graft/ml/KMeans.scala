@@ -25,7 +25,6 @@ object KMeans {
   /** Cosine-metric codebook: (c_id, centroid, norm), sorted by c_id. */
   def fitCodebook(spark: SparkSession, vecs: DataFrame, k: Int, iters: Int,
       dims: Int = 64): Seq[(Long, Seq[Double], Double)] = {
-    VecOps.register(spark)
     def norm(c: Seq[Double]): Double =
       math.sqrt(c.foldLeft(0.0)((acc, v) => acc + v * v))
 

@@ -1,12 +1,12 @@
 package graft.ml
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, IntegerType, LongType}
 
 /** Johnson-Lindenstrauss sign-projection sketch for embedding columns:
@@ -39,24 +39,14 @@ object RandomProjection {
     }
   }
 
-  private val fnName = "graft_jl_sketch"
-
-  /** Runtime registration (idempotent), the VecOps discipline. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier(fnName),
-      new ExpressionInfo(classOf[JlSketch].getName, fnName),
-      (children: Seq[Expression]) => JlSketch(children))
-
   /** Adds column `jl`: array<long> of length `outDims`. */
   def sketch(vecs: DataFrame, colName: String, dims: Int,
       outDims: Int): DataFrame = {
     require(dims >= 1 && outDims >= 1 && outDims <= dims,
       s"bad dims: $dims -> $outDims")
-    register(vecs.sparkSession)
     val flat = signMatrix(dims, outDims).flatten.toSeq
-    vecs.withColumn("jl",
-      call_function(fnName, col(colName), typedLit(flat), lit(outDims)))
+    vecs.withColumn("jl", ColumnBridge.native(JlSketch(_),
+      col(colName), typedLit(flat), lit(outDims)))
   }
 }
 

@@ -1,14 +1,13 @@
 package graft.ml
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 
 import graft.text.TextSketchCodegen
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types.{DataType, DoubleType, FloatType}
 
 /** `vec_dot(a, b)` — dot product of two float/double vectors as a native
@@ -264,25 +263,9 @@ case class PqArgminCell(children: Seq[Expression]) extends Expression {
 
 object VecOps {
 
-  private val name = "vec_dot"
-  private val argmaxName = "vec_argmax_cell"
+  def dot(a: Column, b: Column): Column = ColumnBridge.native(VecDot(_), a, b)
 
-  /** Runtime registration (per session). Idempotent. */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier(name),
-      new ExpressionInfo(classOf[VecDot].getName, name),
-      (exprs: Seq[Expression]) => VecDot(exprs))
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier(argmaxName),
-      new ExpressionInfo(classOf[VecArgmaxCell].getName, argmaxName),
-      (exprs: Seq[Expression]) => VecArgmaxCell(exprs))
-  }
-
-  def dot(a: Column, b: Column): Column = call_function(name, a, b)
-
-  def norm(a: Column): Column =
-    org.apache.spark.sql.functions.sqrt(call_function(name, a, a))
+  def norm(a: Column): Column = org.apache.spark.sql.functions.sqrt(dot(a, a))
 
   /** Row-local IVF cell assignment against a driver-collected codebook
     * (small by construction — real deployments use 4-64k cells, all
@@ -290,7 +273,7 @@ object VecOps {
     */
   def argmaxCell(vec: Column, vNrm: Column,
       codebook: Seq[(Long, Seq[Double], Double)]): Column =
-    call_function(argmaxName, vec, vNrm,
+    ColumnBridge.native(VecArgmaxCell(_), vec, vNrm,
       org.apache.spark.sql.functions.typedLit(codebook))
 
   /** Sign-bit LSH bucket over the first `bits` dimensions — a chain of

@@ -294,7 +294,6 @@ object CurationQueries {
     // nothing: same two-level aggregate, same results, bit for bit.
     Q("q193_sql_surface",
       (s, dir) => {
-        graft.sql.SqlTableFunctions.register(s)
         t(s, dir, "documents").createOrReplaceTempView("graft_q193_documents")
         s.sql("SELECT * FROM graft_chunk_dedup('graft_q193_documents')")
       },
@@ -724,7 +723,6 @@ object CurationQueries {
     // joined into the one table a consumer actually reads.
     Q("q175_dataset_card",
       (s, dir) => {
-        graft.text.TextSketch.register(s)
         val d = t(s, dir, "documents")
         val toks = split(trim(col("text")), "\\s+")
         val base = d.select(col("doc_id"), col("source"), col("lang"),
@@ -801,7 +799,6 @@ object CurationQueries {
     // exactly what doc-level dropping would have burned.
     Q("q178_chunk_decon",
       (s, dir) => {
-        graft.text.TextSketch.register(s)
         val d = t(s, dir, "documents")
         val toks = split(trim(col("text")), "\\s+")
         val bench = d.filter(col("doc_id") % 50 === 0)
@@ -1898,7 +1895,6 @@ object CurationQueries {
     // route is held to the identical hash gate.
     Q("q218_sql_scd2",
       (s, dir) => {
-        graft.sql.SqlTableFunctions.register(s)
         t(s, dir, "orders").createOrReplaceTempView("graft_q218_orders")
         s.sql("""
           SELECT * FROM graft_scd2('graft_q218_orders', 'o_custkey',
@@ -2016,7 +2012,6 @@ object CurationQueries {
     // Scala entry point — same plan, same hash, zero duplication.
     Q("q236_sql_pps_sample",
       (s, dir) => {
-        graft.sql.SqlTableFunctions.register(s)
         t(s, dir, "documents")
           .select(col("lang"), col("doc_id"), col("n_chars").as("w"))
           .createOrReplaceTempView("graft_q236_counted")
@@ -2052,7 +2047,6 @@ object CurationQueries {
     // without a line of Scala.
     Q("q251_sql_text_search",
       (s, dir) => {
-        graft.sql.SqlTableFunctions.register(s)
         // shared session index — the SQL route searches the same
         // artifact the Scala route does; this row measures pure search
         val path = ensureTextIndex(s, dir)

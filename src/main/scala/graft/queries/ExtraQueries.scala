@@ -925,7 +925,6 @@ object ExtraQueries {
     // regexes, so md5(canon) matches byte-for-byte.
     Q("q204_nfc_canonicalize",
       (s, dir) => {
-        graft.text.UnicodeNorm.register(s)
         val d = t(s, dir, "documents").select(col("lang"), col("text"))
         val variants = d.select(col("lang"),
             concat(col("text"), lit(" caf\u00e9")).as("v"))

@@ -40,7 +40,6 @@ object GeoQueries {
         // prep(bbox) fast path): the range predicates are cheap codegen'd
         // comparisons and AND short-circuits, so the native ray-cast
         // expression only evaluates for envelope survivors
-        graft.geo.ContainsPoint.register(s)
         val zonesEnv = zones.withColumn("env", GeoFunctions.stEnvelope(col("geom")))
         pts.join(broadcast(zonesEnv),
           col("x") >= col("env.minx") && col("x") <= col("env.maxx") &&
@@ -74,7 +73,6 @@ object GeoQueries {
     // against the closed-form interval-overlap product.
     Q("q46_rect_clip_area",
       (s, dir) => {
-        GeoClip.register(s)
         val n = t(s, dir, "nation")
         val cx = (col("n_nationkey") % 5).cast("double") * 2.0
         val cy = expr("n_nationkey div 5").cast("double") * 2.0
@@ -200,7 +198,6 @@ object GeoQueries {
     // (decimal-rounded to absorb summation-order last-bits).
     Q("q115_simplify",
       (s, dir) => {
-        graft.geo.StSimplify.register(s)
         val n = t(s, dir, "nation")
         val geom = array(simplifyTestRing())
         val simp = graft.geo.StSimplify(geom, 0.001)
@@ -217,7 +214,6 @@ object GeoQueries {
       Some(simplifyOracleSql)),
 
     Q("q82_reproject", (s, dir) => {
-        graft.geo.StReproject.register(s)
         val n = t(s, dir, "nation")
         val e0 = (col("n_nationkey") % 5).cast("double") * 40000.0 + 650000.0
         val n0 = expr("n_nationkey div 5").cast("double") * 40000.0 + 9680000.0

@@ -106,7 +106,6 @@ object PipelineQueries {
     // shuffles — only matching grams reach the aggregation exchange.
     Q("q103_decontaminate",
       (s, dir) => {
-        graft.text.TextSketch.register(s)
         val d = t(s, dir, "documents")
         val toks = split(trim(col("text")), "\\s+")
         val bench = d.filter(col("doc_id") % 50 === 0)
@@ -219,7 +218,6 @@ object PipelineQueries {
     // matching grams reach any exchange.
     Q("q173_decon_effect",
       (s, dir) => {
-        graft.text.TextSketch.register(s)
         val d = t(s, dir, "documents")
         val toks = split(trim(col("text")), "\\s+")
         val benchGrams = d.filter(col("doc_id") % 50 === 0)
@@ -287,7 +285,6 @@ object PipelineQueries {
     // text is scanned exactly once. Both shuffles carry narrow keyed longs.
     Q("q104_repetition_filter",
       (s, dir) => {
-        graft.text.TextSketch.register(s)
         val d = t(s, dir, "documents")
         val grams = d.select(col("doc_id"), col("lang"),
           explode(graft.text.TextSketch.wordShingles(col("text"), 2)).as("g"))
@@ -663,7 +660,6 @@ object PipelineQueries {
     // before the fraction — nothing corpus-sized shuffles twice.
     Q("q213_graded_decontaminate",
       (s, dir) => {
-        graft.text.TextSketch.register(s)
         val d = t(s, dir, "documents")
         val toks = split(trim(col("text")), "\\s+")
         val benchGrams = d.filter(col("doc_id") % 50 === 0)

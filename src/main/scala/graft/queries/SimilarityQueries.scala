@@ -245,7 +245,6 @@ object SimilarityQueries {
     // not just its final membership.
     Q("q228_mmr_diversify",
       (s, dir) => {
-        graft.ml.VecOps.register(s)
         val e = t(s, dir, "embeddings")
         val qv = e.filter(col("vec_id") === 0).select(col("embedding").as("qv"))
         val cand = e.crossJoin(broadcast(qv))
@@ -311,7 +310,6 @@ object SimilarityQueries {
     // ---- brute-force cosine top-k (the exactness baseline) ----------------
     Q("q40_cosine_topk",
       (s, dir) => {
-        graft.ml.VecOps.register(s)
         val e = t(s, dir, "embeddings")
         val qv = e.filter(col("vec_id") === 0)
           .select(col("embedding").as("qv"))
@@ -333,7 +331,6 @@ object SimilarityQueries {
     // ---- LSH-bucketed ANN: probe only the query's sign bucket -------------
     Q("q41_lsh_ann",
       (s, dir) => {
-        graft.ml.VecOps.register(s)
         val e = t(s, dir, "embeddings")
           .withColumn("bucket", bucket("embedding"))
         val qv = e.filter(col("vec_id") === 0)
@@ -365,7 +362,6 @@ object SimilarityQueries {
     // double (one division, deterministic).
     Q("q233_ndcg",
       (s, dir) => {
-        graft.ml.VecOps.register(s)
         import org.apache.spark.sql.expressions.Window
         val discount = typedLit(Seq(4294967296L, 2709822658L, 2147483648L,
           1849741732L, 1661520155L, 1529898219L, 1431655765L, 1354911329L,
@@ -445,7 +441,6 @@ object SimilarityQueries {
     // brute-vs-LSH frames as q233, one join.
     Q("q248_mrr_hits",
       (s, dir) => {
-        graft.ml.VecOps.register(s)
         import org.apache.spark.sql.expressions.Window
         val e = t(s, dir, "embeddings")
           .withColumn("bucket", bucket("embedding"))
@@ -507,7 +502,6 @@ object SimilarityQueries {
     // with cosine >= 0.999 are reported (the planted copies give sim = 1).
     Q("q42_embedding_neardup",
       (s, dir) => {
-        graft.ml.VecOps.register(s)
         val e = t(s, dir, "embeddings").select("vec_id", "embedding")
         val planted = e.filter(col("vec_id") % 50 === 0)
           .select((col("vec_id") + 1000000L).as("vec_id"), col("embedding"))
@@ -558,7 +552,6 @@ object SimilarityQueries {
     // set ~16x; real deployments train the codebook and use 4-64k cells.
     Q("q77_ivf_ann",
       (s, dir) => {
-        graft.ml.VecOps.register(s)
         val e = t(s, dir, "embeddings")
         val codebook = e.filter(col("vec_id") < 16)
           .select(col("vec_id"), col("embedding").cast("array<double>"),
@@ -614,7 +607,6 @@ object SimilarityQueries {
     // corpus size. The candidate join then broadcasts 2 narrow probe rows.
     Q("q112_ivf_multiprobe",
       (s, dir) => {
-        graft.ml.VecOps.register(s)
         val e = t(s, dir, "embeddings")
         val codebook = coarseCodebook(e)
         val assigned = assignCells(
@@ -747,7 +739,6 @@ object SimilarityQueries {
     // hash-exact end to end.
     Q("q132_ivf_pq",
       (s, dir) => {
-        graft.ml.VecOps.register(s)
         val e = t(s, dir, "embeddings")
         val clean = e.filter(col("embedding").isNotNull)
         // coarse quantizer: 16 broadcast centroids, row-local cosine argmax
@@ -785,7 +776,6 @@ object SimilarityQueries {
     // work is exactly q118's and q40's already-audited shapes.
     Q("q133_rrf_fusion",
       (s, dir) => {
-        graft.ml.VecOps.register(s)
         import org.apache.spark.sql.expressions.Window
         val docs = t(s, dir, "documents")
         val e = t(s, dir, "embeddings")
@@ -861,7 +851,6 @@ object SimilarityQueries {
     // final comparison joins two 10-row frames.
     Q("q134_ann_recall",
       (s, dir) => {
-        graft.ml.VecOps.register(s)
         val e = t(s, dir, "embeddings")
         val codebook = coarseCodebook(e)
         val assigned = assignCells(
@@ -932,7 +921,6 @@ object SimilarityQueries {
     // both ranks, so the row IS the measurement of what re-ranking moved.
     Q("q144_adc_rerank",
       (s, dir) => {
-        graft.ml.VecOps.register(s)
         import s.implicits._
         import org.apache.spark.sql.expressions.Window
         val e = t(s, dir, "embeddings")
@@ -984,7 +972,6 @@ object SimilarityQueries {
     // report is the per-cell keep/drop ledger a curation run publishes.
     Q("q121_semdedup",
       (s, dir) => {
-        graft.ml.VecOps.register(s)
         val e = t(s, dir, "embeddings")
         val codebook = e.filter(col("vec_id") < 16)
           .select(col("vec_id"), col("embedding").cast("array<double>"),
@@ -1034,7 +1021,6 @@ object SimilarityQueries {
     // end-to-end against an oracle that replays BOTH Lloyd loops.
     Q("q148_ivf_pq_trained",
       (s, dir) => {
-        graft.ml.VecOps.register(s)
         val e = t(s, dir, "embeddings")
         val clean = e.filter(col("embedding").isNotNull)
         // index build: TRAINED coarse cells + PQ codes per vector
@@ -1070,7 +1056,6 @@ object SimilarityQueries {
     // point lookups only) and prunes partitions by cell.
     Q("q154_ann_index_query",
       (s, dir) => {
-        graft.ml.VecOps.register(s)
         val e = t(s, dir, "embeddings")
         val path = ensureIndex(s, dir)
         graft.ml.AnnIndex.query(s, e, path, qid = 42, nprobe = 2, topK = 10)
@@ -1096,7 +1081,6 @@ object SimilarityQueries {
     // attribution as q154 (COVERAGE).
     Q("q155_ann_batch_query",
       (s, dir) => {
-        graft.ml.VecOps.register(s)
         val e = t(s, dir, "embeddings")
         val path = ensureIndex(s, dir)
         graft.ml.AnnIndex
@@ -1122,7 +1106,6 @@ object SimilarityQueries {
     // attribution).
     Q("q158_ann_index_dedup",
       (s, dir) => {
-        graft.ml.VecOps.register(s)
         val e = t(s, dir, "embeddings")
         val path = ensureIndex(s, dir)
         val nn = graft.ml.AnnIndex.batchQuery(s, e, path, nprobe = 2, topK = 10)
@@ -1155,7 +1138,6 @@ object SimilarityQueries {
     Q("q165_hard_negatives",
       (s, dir) => {
         import org.apache.spark.sql.expressions.Window
-        graft.ml.VecOps.register(s)
         val e = t(s, dir, "embeddings")
         val path = ensureIndex(s, dir)
         val nn = graft.ml.AnnIndex
@@ -1188,7 +1170,6 @@ object SimilarityQueries {
     // them. Same one-join batch plan as q155.
     Q("q169_filtered_ann",
       (s, dir) => {
-        graft.ml.VecOps.register(s)
         val e = t(s, dir, "embeddings")
         val path = ensureIndex(s, dir)
         val allowed = e.filter(col("label") === 3).select(col("vec_id"))
@@ -1214,7 +1195,6 @@ object SimilarityQueries {
     // size, no float corpus read on the reference side.
     Q("q170_index_drift",
       (s, dir) => {
-        graft.ml.VecOps.register(s)
         val e = t(s, dir, "embeddings")
         val path = ensureIndex(s, dir)
         val cb = graft.ml.AnnIndex.loadCodebooks(s, path)
@@ -1281,7 +1261,6 @@ object SimilarityQueries {
     // the operational shape where a trained index serves many batches.
     Q("q179_ann_ingest_verdicts",
       (s, dir) => {
-        graft.ml.VecOps.register(s)
         val e = t(s, dir, "embeddings")
         val path = ensureIndex(s, dir)
         val cb = graft.ml.AnnIndex.loadCodebooks(s, path)
@@ -1321,7 +1300,6 @@ object SimilarityQueries {
     // the oracle IS q155's oracle — one replay checks both layouts.
     Q("q181_ann_bucketed_batch",
       (s, dir) => {
-        graft.ml.VecOps.register(s)
         val e = t(s, dir, "embeddings")
         val path = ensureIndex(s, dir)
         val table = "graft_ann_bucketed"
@@ -1354,7 +1332,6 @@ object SimilarityQueries {
     // stale-codebook state would hash-mismatch every distance.
     Q("q182_index_rebuild_swap",
       (s, dir) => {
-        graft.ml.VecOps.register(s)
         val e = t(s, dir, "embeddings")
         val path = annIndexPath(s, dir) + "_rebuild"
         graft.ml.AnnIndex.build(s, e.filter(col("vec_id") % 4 === 0), path)
@@ -1374,7 +1351,6 @@ object SimilarityQueries {
     // innocent row lost) fails the count of its cell.
     Q("q208_ann_index_forget",
       (s, dir) => {
-        graft.ml.VecOps.register(s)
         val e = t(s, dir, "embeddings")
         val path = annIndexPath(s, dir) + "_forget"
         graft.ml.AnnIndex.build(s, e, path)
@@ -1556,7 +1532,6 @@ object SimilarityQueries {
     // re-measured under the codebook that will serve).
     Q("q149_trained_recall",
       (s, dir) => {
-        graft.ml.VecOps.register(s)
         val e = t(s, dir, "embeddings")
         val codebook = graft.ml.KMeans.fitCodebook(s, e, k = 16, iters = 2)
         val assigned = assignCells(
@@ -1600,7 +1575,6 @@ object SimilarityQueries {
     // reduction itself joins three <=30-row frames.
     Q("q150_rerank_recall",
       (s, dir) => {
-        graft.ml.VecOps.register(s)
         import s.implicits._
         import org.apache.spark.sql.expressions.Window
         val e = t(s, dir, "embeddings")
@@ -1667,7 +1641,6 @@ object SimilarityQueries {
     // index in q251) are now reachable without a line of Scala.
     Q("q250_sql_ann_query",
       (s, dir) => {
-        graft.sql.SqlTableFunctions.register(s)
         val path = ensureIndex(s, dir)
         t(s, dir, "embeddings").filter(col("vec_id") % 100 === 42)
           .createOrReplaceTempView("graft_q250_queries")

@@ -156,7 +156,6 @@ object TextQueries {
     * reference the materialized attribute.
     */
   private def minhashBandRows(s: SparkSession, dir: String): DataFrame = {
-    graft.text.TextSketch.register(s)
     val sigs = corpus(s, dir)
       .filter(size(split(trim(col("text")), "\\s+")) >= 3)
       .select(col("doc_id"),
@@ -260,7 +259,6 @@ object TextQueries {
     * distinct 60-bit shingle-hash set, block = last token, n = |dsh|).
     */
   private[graft] def jaccardBlockedDocs(s: SparkSession, raw: DataFrame): DataFrame = {
-    graft.text.TextSketch.register(s)
     raw
       .withColumn("toks", tokens(col("text")))
       .withColumn("dsh", graft.text.TextSketch.shingleHashSet(col("text"), 3))
@@ -458,7 +456,6 @@ object TextQueries {
     // piece length, not vocab size.
     Q("q136_subword_tokenize",
       (s, dir) => {
-        graft.text.SubwordTokenizer.register(s)
         val seg = graft.text.SubwordTokenizer.tokenize(col("text"), SubwordVocab)
         t(s, dir, "documents")
           .select(col("doc_id"), seg.as("seg"))
@@ -578,7 +575,6 @@ object TextQueries {
     // measure what the geometry actually catches.
     Q("q152_lsh_recall",
       (s, dir) => {
-        graft.text.TextSketch.register(s)
         val ids = t(s, dir, "documents").select("doc_id")
         val planted = ids.filter(col("doc_id") % 25 === 0)
           .select(col("doc_id").as("doc_a"),
@@ -951,7 +947,6 @@ object TextQueries {
         // project collapse (re-hashing every token per bit), and the
         // explode+groupBy alternative shuffles one row per token; the
         // native expression avoids both.
-        graft.text.TextSketch.register(s)
         // text gated by a cheap scan-level null filter, and fp wrapped
         // non-nullable (coalesce): otherwise the band join's inferred
         // isnotnull(band_val) constraint pushes below the projection and
@@ -1100,7 +1095,6 @@ object TextQueries {
     Q("q171_text_search",
       (s, dir) => {
         import org.apache.spark.sql.expressions.Window
-        graft.text.TextSketch.register(s)
         val bandRows = minhashBandRows(s, dir)
         val qIds = bandRows.select(col("doc_id")).distinct()
           .filter(col("doc_id") % 50 === 0 && col("doc_id") < 1000000L)
@@ -1223,7 +1217,6 @@ object TextQueries {
     // AND re-encodes, so a single drifted merge flips every hash.
     Q("q185_bpe_encode",
       (s, dir) => {
-        graft.text.BpeEncoder.register(s)
         val d = t(s, dir, "documents")
         val model = graft.text.BpeTrainer.fit(s, d, merges = 8)
         val doc = graft.text.BpeEncoder.encode(col("text"),
@@ -1275,7 +1268,6 @@ object TextQueries {
     // re-trains AND re-encodes — compares hash-exactly.
     Q("q198_tokenizer_fertility",
       (s, dir) => {
-        graft.text.BpeEncoder.register(s)
         val d = t(s, dir, "documents")
         val model = graft.text.BpeTrainer.fit(s, d, merges = 8)
         val toks = tokens(col("text"))
@@ -1336,7 +1328,6 @@ object TextQueries {
     // re-trains sequentially and re-encodes with the literal fold.
     Q("q271_byte_fertility",
       (s, dir) => {
-        graft.text.BpeEncoder.register(s)
         val model = cachedByteModel(s, dir) // fertility row: shared model
         byteFertilityReport(t(s, dir, "documents"),
           model.merges.map { case (a, b, _) => (a, b) })
@@ -1354,7 +1345,6 @@ object TextQueries {
     // flips every document hash.
     Q("q274_bpe_artifact",
       (s, dir) => {
-        graft.text.BpeEncoder.register(s)
         val d = t(s, dir, "documents")
         val path = graft.io.Scratch.dir("graft_bpe_artifact")
         graft.text.BpeTrainer.save(s,
@@ -1384,7 +1374,6 @@ object TextQueries {
     // only this.
     Q("q277_byte_bpe_artifact",
       (s, dir) => {
-        graft.text.BpeEncoder.register(s)
         val path = graft.io.Scratch.dir("graft_byte_bpe_artifact")
         graft.text.BpeTrainer.save(s, cachedByteModel(s, dir), path)
         val loaded = graft.text.BpeTrainer.load(s, path)
@@ -2518,7 +2507,6 @@ object TextQueries {
   // corpus size; text never leaves its scan stage (the 60-bit hash does).
   private lazy val q235: Q = Q("q235_source_overlap",
     (s, dir) => {
-      graft.text.TextSketch.register(s)
       val sh = t(s, dir, "documents")
         .select(col("source"),
           explode(graft.text.TextSketch.shingleHashSet(col("text"), 3)).as("h"))
@@ -2763,7 +2751,6 @@ object TextQueries {
   // would still be null during the object's initializer.
   private lazy val q226: Q = Q("q226_ssjoin_jaccard",
     (s, dir) => {
-      graft.text.TextSketch.register(s)
       // 60-bit md5 shingle hashes, NOT shingle strings: the set elements
       // shuffle through the freq aggregate and the candidate join, and a
       // long moves ~4× less than a 4-word string (q37's discipline; the

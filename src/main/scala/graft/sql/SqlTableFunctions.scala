@@ -1,6 +1,6 @@
 package graft.sql
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
@@ -29,10 +29,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * broadcast, two-pass cumsum) and every oracle result, bit for bit —
   * q193 proves it by driving the q116 report through `spark.sql` alone.
   *
-  * Registered two ways, mirroring [[graft.geo.GeoClip]]: injected at
-  * session build by [[graft.geo.GraftExtensions]]
-  * (`spark.sql.extensions=graft.geo.GraftExtensions`), or at runtime on
-  * an existing session via [[register]] (idempotent).
+  * Listed in [[NativeCatalog]], which injects them at session build
+  * (`spark.sql.extensions=graft.geo.GraftExtensions`) or installs them on
+  * a session that already existed ([[graft.GraftSession.create]]).
   */
 object SqlTableFunctions {
 
@@ -202,9 +201,7 @@ object SqlTableFunctions {
     */
   private def annQueryPlan(exprs: Seq[Expression]): LogicalPlan = {
     val fn = "graft_ann_query"
-    val spark = SparkSession.active
-    graft.ml.VecOps.register(spark)
-    graft.ml.AnnIndex.batchQuery(spark,
+    graft.ml.AnnIndex.batchQuery(SparkSession.active,
       table(strArg(exprs, 0, fn, "queries table")),
       strArg(exprs, 1, fn, "index path"),
       nprobe = intArgOr(exprs, 2, fn, "probe cells", 2),
@@ -227,7 +224,9 @@ object SqlTableFunctions {
     ).queryExecution.logical
   }
 
-  private def entries: Seq[(String, Seq[Expression] => LogicalPlan)] = Seq(
+  /** The table-valued entry points by SQL name, for [[NativeCatalog]]. */
+  private[sql] val entries
+      : Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan)] = Seq(
     "graft_chunk_dedup" -> chunkDedupPlan _,
     "graft_bloom_decontaminate" -> bloomDeconPlan _,
     "graft_pack_segments" -> packSegmentsPlan _,
@@ -238,20 +237,9 @@ object SqlTableFunctions {
     "graft_jaccard_join" -> jaccardJoinPlan _,
     "graft_pps_sample" -> ppsSamplePlan _,
     "graft_ann_query" -> annQueryPlan _,
-    "graft_text_search" -> textSearchPlan _)
-
-  /** Session-build injection — called from [[graft.geo.GraftExtensions]]. */
-  def inject(ext: SparkSessionExtensions): Unit =
-    entries.foreach { case (name, builder) =>
-      ext.injectTableFunction((FunctionIdentifier(name),
-        new ExpressionInfo(SqlTableFunctions.getClass.getName, name), builder))
-    }
-
-  /** Runtime registration on an existing session (idempotent). */
-  def register(spark: SparkSession): Unit =
-    entries.foreach { case (name, builder) =>
-      spark.sessionState.tableFunctionRegistry.registerFunction(
-        FunctionIdentifier(name),
-        new ExpressionInfo(SqlTableFunctions.getClass.getName, name), builder)
-    }
+    "graft_text_search" -> textSearchPlan _
+  ).map { case (name, build) =>
+    (FunctionIdentifier(name),
+      new ExpressionInfo(SqlTableFunctions.getClass.getName, name), build)
+  }
 }

@@ -1,11 +1,12 @@
 package graft.text
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.{FunctionIdentifier, InternalRow}
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.{call_function, typedLit}
+import org.apache.spark.sql.functions.typedLit
+import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -207,18 +208,9 @@ case class BpeEncode(children: Seq[Expression])
 
 object BpeEncoder {
 
-  private val name = "graft_bpe_encode"
-
-  /** Runtime registration (per session). Idempotent. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier(name),
-      new ExpressionInfo(classOf[BpeEncode].getName, name),
-      (exprs: Seq[Expression]) => BpeEncode(exprs))
-
   /** Whole-document piece stream `(p1)(p2)...` — per whitespace word, the
     * trained merges applied in training order, words concatenated. */
   def encode(text: Column, merges: Seq[(String, String)]): Column =
-    call_function(name, text,
+    ColumnBridge.native(BpeEncode(_), text,
       typedLit(merges.map(_._1)), typedLit(merges.map(_._2)))
 }

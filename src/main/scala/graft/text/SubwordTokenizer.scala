@@ -1,11 +1,12 @@
 package graft.text
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.{FunctionIdentifier, InternalRow}
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.{call_function, typedLit}
+import org.apache.spark.sql.functions.typedLit
+import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types.{DataType, IntegerType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -84,15 +85,6 @@ case class SubwordTokenize(children: Seq[Expression])
 
 object SubwordTokenizer {
 
-  private val name = "subword_tokenize"
-
-  /** Runtime registration (per session). Idempotent. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier(name),
-      new ExpressionInfo(classOf[SubwordTokenize].getName, name),
-      (exprs: Seq[Expression]) => SubwordTokenize(exprs))
-
   def tokenize(text: Column, vocab: Seq[String]): Column =
-    call_function(name, text, typedLit(vocab))
+    ColumnBridge.native(SubwordTokenize(_), text, typedLit(vocab))
 }

@@ -1,11 +1,11 @@
 package graft.text
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.{FunctionIdentifier, InternalRow}
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.{call_function, lit, typedLit}
+import org.apache.spark.sql.functions.{lit, typedLit}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -763,53 +763,23 @@ case class SpanKeepTokens(children: Seq[Expression]) extends Expression {
 
 object TextSketch {
 
-  private val minhashName = "minhash_sig"
-  private val simhashName = "simhash60"
-  private val shinglesName = "word_shingles"
-  private val hashSetName = "shingle_hash_set"
-  private val intersectName = "sorted_intersect_count"
-
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier(minhashName),
-      new ExpressionInfo(classOf[MinHashSig].getName, minhashName),
-      (exprs: Seq[Expression]) => MinHashSig(exprs))
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier(simhashName),
-      new ExpressionInfo(classOf[SimHash60].getName, simhashName),
-      (exprs: Seq[Expression]) => SimHash60(exprs))
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier(shinglesName),
-      new ExpressionInfo(classOf[WordShingles].getName, shinglesName),
-      (exprs: Seq[Expression]) => WordShingles(exprs))
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier(hashSetName),
-      new ExpressionInfo(classOf[ShingleHashSet].getName, hashSetName),
-      (exprs: Seq[Expression]) => ShingleHashSet(exprs))
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier(intersectName),
-      new ExpressionInfo(classOf[SortedIntersectCount].getName, intersectName),
-      (exprs: Seq[Expression]) => SortedIntersectCount(exprs))
-  }
+  import org.apache.spark.sql.graft.ColumnBridge
 
   def minhashSig(text: Column, k: Int, seeds: Seq[Long]): Column =
-    call_function(minhashName, text, lit(k), typedLit(seeds))
+    ColumnBridge.native(MinHashSig(_), text, lit(k), typedLit(seeds))
 
-  def simhash60(text: Column): Column = call_function(simhashName, text)
+  def simhash60(text: Column): Column = ColumnBridge.native(SimHash60(_), text)
 
   def wordShingles(text: Column, k: Int): Column =
-    call_function(shinglesName, text, lit(k))
+    ColumnBridge.native(WordShingles(_), text, lit(k))
 
   def shingleHashSet(text: Column, k: Int): Column =
-    call_function(hashSetName, text, lit(k))
+    ColumnBridge.native(ShingleHashSet(_), text, lit(k))
 
   def sortedIntersectCount(a: Column, b: Column): Column =
-    call_function(intersectName, a, b)
+    ColumnBridge.native(SortedIntersectCount(_), a, b)
 
-  // ---- registry-free builders (ColumnBridge — usable from pure Column
-  // helpers with no SparkSession at hand, the WebText.htmlText pattern)
-
-  import org.apache.spark.sql.graft.ColumnBridge
+  // ---- natives with no SQL name (Column API only)
 
   /** First `nHex` (≤ 15) md5 hex chars of `s` as a long — the native,
     * bit-identical form of `conv(substring(md5(s), 1, nHex), 16, 10)`.

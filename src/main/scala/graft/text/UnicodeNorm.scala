@@ -1,10 +1,10 @@
 package graft.text
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
-import org.apache.spark.sql.functions.{call_function, regexp_replace, trim}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.functions.{regexp_replace, trim}
+import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -51,18 +51,8 @@ object UnicodeNorm {
       java.text.Normalizer.normalize(str, java.text.Normalizer.Form.NFC))
   }
 
-  private val name = "nfc_normalize"
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier(name),
-      new ExpressionInfo(classOf[NfcNormalize].getName, name),
-      (exprs: Seq[Expression]) => {
-        require(exprs.length == 1, s"$name expects 1 argument")
-        NfcNormalize(exprs.head)
-      })
-
-  def nfcNormalize(text: Column): Column = call_function(name, text)
+  def nfcNormalize(text: Column): Column =
+    ColumnBridge.column(NfcNormalize(ColumnBridge.expression(text)))
 
   /** The full canonicalization ladder corpus ingest applies before any
     * hashing or tokenization: NFC composition, then C0/C1 control and

@@ -4,12 +4,12 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
 
 /** Registry-free Expression→Column wrap (`ExpressionUtils.column` is
-  * private[sql]). The session-function registry route (`call_function`,
-  * the GeoClip/BpeEncode discipline) needs an explicit `register(spark)`
-  * at every entry point; library-level scalar chains like
-  * [[graft.text.WebText.htmlText]] are built WITHOUT a session at hand,
-  * so their native expressions wrap directly. Same justified
-  * package-escape shape as [[org.apache.spark.graft.ListenerDrain]].
+  * private[sql]). Every Column-API wrapper over a graft native expression
+  * builds it through here, so library code needs no session at hand and
+  * no function registered by name; the SQL names live in one catalog,
+  * [[graft.sql.NativeCatalog]], for `spark.sql` callers only. Same
+  * justified package-escape shape as
+  * [[org.apache.spark.graft.ListenerDrain]].
   */
 object ColumnBridge {
   def column(e: Expression): Column =
@@ -17,4 +17,10 @@ object ColumnBridge {
 
   def expression(c: Column): Expression =
     org.apache.spark.sql.classic.ExpressionUtils.expression(c)
+
+  /** `build` applied to the argument columns' expressions — the Column
+    * form of a catalog builder (`ColumnBridge.native(VecDot(_), a, b)`).
+    */
+  def native(build: Seq[Expression] => Expression, args: Column*): Column =
+    column(build(args.map(expression)))
 }

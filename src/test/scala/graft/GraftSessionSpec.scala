@@ -34,4 +34,9 @@ class GraftSessionSpec extends AnyFunSuite {
       prior.foreach(p => spark.conf.set("spark.sql.shuffle.partitions", p))
     }
   }
+
+  test("the shared test session runs the engine profile") {
+    val s = SparkSpec.session
+    GraftSession.engineConf.foreach { case (k, v) => assert(s.conf.get(k) == v, k) }
+  }
 }

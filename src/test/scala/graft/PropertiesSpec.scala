@@ -146,7 +146,6 @@ class PropertiesSpec extends SparkSpec {
   }
 
   test("property: subword segmentation is lossless, greedy, and vocab-confined") {
-    graft.text.SubwordTokenizer.register(spark)
     val alpha = Gen.oneOf('a', 'b', 'c')
     val wordGen = Gen.choose(1, 10).flatMap(n => Gen.listOfN(n, alpha).map(_.mkString))
     val caseGen = for {

@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession for specs. */
+/** Shared local SparkSession for specs, on the engine profile users get. */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   // stable val (import spark.implicits._ needs one); the object-level
   // accessor below still rebuilds if the shared context was stopped
@@ -21,13 +21,8 @@ object SparkSpec {
   private var cached: SparkSession = _
   def session: SparkSession = synchronized {
     if (cached == null || cached.sparkContext.isStopped) {
-      cached = SparkSession.builder()
-        .master("local[4]")
-        .appName("graft-test")
-        .config("spark.sql.shuffle.partitions", 4)
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.session.timeZone", "UTC")
-        .getOrCreate()
+      // the production profile (engine confs + extensions), at test width
+      cached = GraftSession.builder("local[4]", shufflePartitions = 4).getOrCreate()
       cached.sparkContext.setLogLevel("WARN")
     }
     cached

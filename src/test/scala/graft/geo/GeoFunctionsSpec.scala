@@ -61,7 +61,6 @@ class GeoFunctionsSpec extends SparkSpec {
   }
 
   test("rect intersection area (custom Catalyst expression)") {
-    GeoClip.register(spark)
     def clipArea(g: Seq[Seq[Seq[Double]]], r: (Double, Double, Double, Double)): Double =
       geomDf(g).select(stRectIntersectionArea($"geom",
         lit(r._1), lit(r._2), lit(r._3), lit(r._4))).as[Double].head
@@ -76,7 +75,6 @@ class GeoFunctionsSpec extends SparkSpec {
   }
 
   test("zonal-stats shape: points-in-polygon tag + aggregate") {
-    GeoClip.register(spark)
     val polys = Seq(
       ("west", Seq(Seq(Seq(0.0, 0.0), Seq(2.0, 0.0), Seq(2.0, 4.0), Seq(0.0, 4.0), Seq(0.0, 0.0)))),
       ("east", Seq(Seq(Seq(2.0, 0.0), Seq(4.0, 0.0), Seq(4.0, 4.0), Seq(2.0, 4.0), Seq(2.0, 0.0))))

@@ -11,7 +11,6 @@ class SpatialFilterRuleSpec extends SparkSpec {
     Seq(2.0, 2.0), Seq(8.0, 2.0), Seq(8.0, 6.0), Seq(2.0, 6.0), Seq(2.0, 2.0)))
 
   test("constant-polygon containment filter gains parquet-pushed envelope predicates") {
-    ContainsPoint.register(spark)
     val dir = Files.createTempDirectory("spatial_rule").toString + "/pts"
     (0 until 100).map(i => (i.toDouble % 10, (i / 10).toDouble, i))
       .toDF("x", "y", "id").write.parquet(dir)
@@ -37,12 +36,17 @@ class SpatialFilterRuleSpec extends SparkSpec {
   }
 
   test("rule is idempotent across repeated optimization") {
-    ContainsPoint.register(spark)
-    ContainsPoint.register(spark) // double-install must not duplicate the rule
+    graft.sql.NativeCatalog.install(spark)
+    graft.sql.NativeCatalog.install(spark) // double-install must not duplicate the rule
     val pts = Seq((3.0, 3.0, 1), (9.0, 9.0, 2)).toDF("x", "y", "id")
     val r = pts.filter(ContainsPoint(typedlit(poly), col("x"), col("y")))
       .select("id").as[Int].collect().toSeq
     assert(r == Seq(1))
-    assert(spark.experimental.extraOptimizations.count(_ == SpatialFilterRule) == 1)
+    // one occurrence per batch that runs it, and only the two batches the
+    // extension injects into — not "User Provided Optimizers" as well
+    val runs = spark.sessionState.optimizer.batches
+      .flatMap(b => b.rules.filter(_ == SpatialFilterRule).map(_ => b.name))
+    assert(runs == Seq("Operator Optimization before Inferring Filters",
+      "Operator Optimization after Inferring Filters"), runs)
   }
 }

@@ -13,11 +13,6 @@ class StReprojectSpec extends SparkSpec {
 
   private val wgs = Seq((28.9, -1.9), (29.5, -2.3), (30.2, -1.2))
 
-  override def beforeAll(): Unit = {
-    super.beforeAll()
-    StReproject.register(spark)
-  }
-
   private def utmSquares = {
     import spark.implicits._
     wgs.zipWithIndex.map { case ((lon, lat), i) =>

@@ -11,11 +11,6 @@ import org.apache.spark.sql.functions._
   */
 class StSimplifySpec extends SparkSpec {
 
-  override def beforeAll(): Unit = {
-    super.beforeAll()
-    StSimplify.register(spark)
-  }
-
   private def toGeom(rings: Seq[Seq[(Double, Double)]]): Seq[Seq[Seq[Double]]] =
     rings.map(_.map { case (x, y) => Seq(x, y) })
 

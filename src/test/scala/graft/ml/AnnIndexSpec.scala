@@ -269,7 +269,6 @@ class AnnIndexSpec extends SparkSpec
     // recall re-measured on the rebuilt index (the q149-style check):
     // ANN top-10 against brute-force exact cosine top-10
     def recall10(idxPath: String): Int = {
-      VecOps.register(spark)
       val ann = AnnIndex.query(spark, e, idxPath, qid = 42, nprobe = 2, topK = 10)
         .select("vec_id").collect().map(_.getLong(0)).toSet
       val q = e.filter(col("vec_id") === 42)
@@ -322,7 +321,6 @@ class AnnIndexSpec extends SparkSpec
     val preRows = spark.read.parquet(s"$p/index")
       .select("vec_id").collect().map(_.getLong(0)).sorted.toSeq
     def recall10(idxPath: String, nprobe: Int): Int = {
-      VecOps.register(spark)
       val ann = AnnIndex.query(spark, e, idxPath, qid = 42, nprobe = nprobe, topK = 10)
         .select("vec_id").collect().map(_.getLong(0)).toSet
       val q = e.filter(col("vec_id") === 42)

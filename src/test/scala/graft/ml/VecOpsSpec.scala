@@ -5,11 +5,6 @@ import org.apache.spark.sql.functions._
 
 class VecOpsSpec extends SparkSpec {
 
-  override def beforeAll(): Unit = {
-    super.beforeAll()
-    VecOps.register(spark)
-  }
-
   private val codebook = Seq(
     (3L, Seq(1.0, 0.0), 1.0),
     (7L, Seq(0.0, 1.0), 1.0))

@@ -1,20 +1,162 @@
 package graft.sql
 
-import graft.SparkSpec
+import graft.{GraftSession, SparkSpec}
 import graft.curation.Curation
+import graft.geo.SpatialFilterRule
+import org.apache.logging.log4j.LogManager
+import org.apache.logging.log4j.core.{LogEvent, Logger}
+import org.apache.logging.log4j.core.appender.AbstractAppender
+import org.apache.logging.log4j.core.config.Property
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 import org.apache.spark.sql.functions._
 
 /** The SQL surface contract: every injected table-valued function builds
   * the IDENTICAL plan as its Scala entry point (one code path), argument
   * defaults and overrides work from SQL, and misuse fails loudly at
   * analysis time. q193's oracle row proves DuckDB parity of the
-  * SQL-driven report; these pin the equivalence and the error surface.
+  * SQL-driven report; these pin the equivalence and the error surface,
+  * and that [[NativeCatalog]] reaches every session exactly once.
   */
 class SqlSurfaceSpec extends SparkSpec {
   import spark.implicits._
 
-  SqlTableFunctions.register(spark)
-  SqlTableFunctions.register(spark) // idempotent
+  private val scalarIds = NativeCatalog.scalars.map(_._1)
+  private val tableIds = SqlTableFunctions.entries.map(_._1)
+
+  /** How often each registry lists each catalog name. */
+  private def nameCounts(s: SparkSession): Seq[Int] = {
+    val fs = s.sessionState.functionRegistry.listFunction()
+    val ts = s.sessionState.tableFunctionRegistry.listFunction()
+    scalarIds.map(id => fs.count(_ == id)) ++ tableIds.map(id => ts.count(_ == id))
+  }
+
+  /** The registered builders, compared by identity: a re-registration
+    * swaps them even when the name set stays the same.
+    */
+  private def builders(s: SparkSession): Seq[AnyRef] =
+    scalarIds.flatMap(s.sessionState.functionRegistry.lookupFunctionBuilder) ++
+      tableIds.flatMap(s.sessionState.tableFunctionRegistry.lookupFunctionBuilder)
+
+  /** The optimizer batches running [[SpatialFilterRule]], one entry per run. */
+  private def ruleBatches(s: SparkSession): Seq[String] =
+    s.sessionState.optimizer.batches
+      .flatMap(b => b.rules.filter(_ == SpatialFilterRule).map(_ => b.name))
+
+  private def assertInstalledOnce(s: SparkSession, rule: Seq[String]): Unit = {
+    assert(nameCounts(s).forall(_ == 1), (scalarIds ++ tableIds).zip(nameCounts(s)))
+    assert(ruleBatches(s) == rule)
+    val before = builders(s)
+    NativeCatalog.install(s) // a repeat install changes nothing
+    assert(builders(s).zip(before).forall { case (a, b) => a eq b })
+    assert(nameCounts(s).forall(_ == 1) && ruleBatches(s) == rule)
+  }
+
+  /** A session on the shared context and state that no extension ever
+    * touched — what spark-shell and notebooks hand a script, since
+    * `getOrCreate` on a running session ignores `withExtensions`. Spark
+    * keeps that constructor Scala-private, so it is reached reflectively.
+    */
+  private def bareSession(): SparkSession =
+    classOf[org.apache.spark.sql.classic.SparkSession].getConstructors
+      .find(_.getParameterCount == 6).get
+      .newInstance(spark.sparkContext, Some(spark.sharedState), None,
+        new SparkSessionExtensions, Map.empty, Map.empty)
+      .asInstanceOf[SparkSession]
+
+  private val square =
+    "array(array(array(0D,0D), array(4D,0D), array(4D,4D), array(0D,4D), array(0D,0D)))"
+
+  test("every catalog name resolves through spark.sql on the shared session") {
+    assert(scalarIds.distinct.length == 15 && tableIds.distinct.length == 11)
+    (NativeCatalog.scalars ++ SqlTableFunctions.entries).foreach { case (id, info, _) =>
+      val desc = spark.sql(s"DESCRIBE FUNCTION ${id.funcName}").collect().map(_.getString(0))
+      assert(desc.contains(s"Class: ${info.getClassName}"), desc.mkString("\n"))
+    }
+    val r = spark.sql(s"""
+      SELECT
+        st_rect_clip_area($square, 1D, 1D, 3D, 3D) AS clip,
+        st_contains_point($square, 2D, 2D) AS inside,
+        st_simplify($square, 0D) = $square AS simplified,
+        st_reproject($square, 4326) = $square AS reprojected,
+        vec_dot(array(1D, 2D, 3D), array(4D, 5D, 6D)) AS dot,
+        vec_argmax_cell(array(1D, 0D), 1D, array(
+          named_struct('id', 7L, 'emb', array(1D, 0D), 'nrm', 1D),
+          named_struct('id', 8L, 'emb', array(0D, 1D), 'nrm', 1D))) AS cell,
+        graft_jl_sketch(array(1D, 2D), array(1, -1, 1, 1), 2) AS jl,
+        size(minhash_sig('a b c d', 2, array(1L, 2L, 3L))) AS mh,
+        simhash60('a b c') IS NOT NULL AS sh,
+        word_shingles('a b c', 2) AS shingles,
+        size(shingle_hash_set('a b c', 2)) AS hs,
+        sorted_intersect_count(array(1L, 2L, 3L), array(2L, 3L, 4L)) AS common,
+        nfc_normalize('${"cafe\u0301"}') AS nfc,
+        subword_tokenize('abc', array('ab', 'c')).n_pieces AS pieces,
+        graft_bpe_encode('ab', array('a'), array('b')) AS bpe
+    """).head()
+    assert(r.getAs[Double]("clip") == 4.0 && r.getAs[Boolean]("inside"))
+    assert(r.getAs[Boolean]("simplified") && r.getAs[Boolean]("reprojected"))
+    assert(r.getAs[Double]("dot") == 32.0 && r.getAs[Long]("cell") == 7L)
+    assert(r.getAs[collection.Seq[Long]]("jl") == Seq(3L << 20, 1L << 20))
+    assert(r.getAs[Int]("mh") == 3 && r.getAs[Boolean]("sh"))
+    assert(r.getAs[collection.Seq[String]]("shingles") == Seq("a b", "b c"))
+    assert(r.getAs[Int]("hs") == 2 && r.getAs[Int]("common") == 2)
+    assert(r.getAs[String]("nfc") == "caf\u00e9")
+    assert(r.getAs[Int]("pieces") == 2 && r.getAs[String]("bpe") == "(ab)")
+  }
+
+  test("install restores dropped names once and never duplicates the rule") {
+    // the shared session was built with the extension: its two operator-
+    // optimization batches already run the rule, so install must leave it
+    val extensionBatches = ruleBatches(spark)
+    assert(extensionBatches.nonEmpty && !extensionBatches.contains("User Provided Optimizers"))
+    val fr = spark.sessionState.functionRegistry
+    val tr = spark.sessionState.tableFunctionRegistry
+    try {
+      scalarIds.foreach(fr.dropFunction)
+      tableIds.foreach(tr.dropFunction)
+      assert(nameCounts(spark).forall(_ == 0))
+    } finally NativeCatalog.install(spark)
+    assertInstalledOnce(spark, extensionBatches)
+
+    // a session the extension never reached (spark-shell, notebooks): no
+    // names, no rule — install adds each name once and the rule once
+    val bare = bareSession()
+    assert(nameCounts(bare).forall(_ == 0) && ruleBatches(bare).isEmpty)
+    NativeCatalog.install(bare)
+    assertInstalledOnce(bare, Seq("User Provided Optimizers"))
+    assert(bare.sql("SELECT vec_dot(array(1D), array(2D))").head().getDouble(0) == 2.0)
+  }
+
+  test("create logs no 'replaced a previously registered function' warning") {
+    val replaced = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val capture = new AbstractAppender("graft-replaced", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = {
+        val m = e.getMessage.getFormattedMessage
+        if (m.contains("replaced a previously registered function")) replaced.add(m)
+      }
+    }
+    capture.start()
+    val root = LogManager.getRootLogger.asInstanceOf[Logger]
+    root.addAppender(capture)
+    try {
+      spark.sparkContext.setLogLevel("WARN")
+      // control: the appender does see a genuine re-registration (the
+      // registry stays silent when the same (info, builder) pair returns)
+      val (id, info, build) = NativeCatalog.scalars.head
+      spark.sessionState.functionRegistry.registerFunction(id,
+        new ExpressionInfo(info.getClassName, id.funcName), build)
+      assert(replaced.size == 1)
+      replaced.clear()
+      GraftSession.create(
+        shufflePartitions = spark.conf.get("spark.sql.shuffle.partitions").toInt)
+      assert(replaced.isEmpty, replaced)
+    } finally {
+      root.removeAppender(capture)
+      capture.stop()
+    }
+  }
+
 
   private def words(prefix: String, n: Int): String =
     (0 until n).map(i => s"$prefix$i").mkString(" ")

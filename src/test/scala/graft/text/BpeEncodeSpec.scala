@@ -29,7 +29,6 @@ class BpeEncodeSpec extends SparkSpec {
   }
 
   private def assertParity(docs: Seq[String], merges: Seq[(String, String)]): Unit = {
-    BpeEncoder.register(spark)
     val d = docs.toDF("text")
     val diff = d.select(
         col("text"),
@@ -44,7 +43,6 @@ class BpeEncodeSpec extends SparkSpec {
     val docs = sf("documents")
     val model = BpeTrainer.fit(spark, docs, merges = 8)
     val merges = model.merges.map { case (a, b, _) => (a, b) }
-    BpeEncoder.register(spark)
     val diff = docs.select(
         foldEncode(col("text"), merges).as("fold"),
         BpeEncoder.encode(col("text"), merges).as("native"))
@@ -72,7 +70,6 @@ class BpeEncodeSpec extends SparkSpec {
     // expression's increasing-rank rule exists for.
     val merges = Seq(("a", "bc"), ("b", "c"))
     assertParity(Seq("abbc", "abc", "abcabc", "babc"), merges)
-    BpeEncoder.register(spark)
     val out = Seq("abbc").toDF("text")
       .select(BpeEncoder.encode(col("text"), merges).as("e"))
       .head().getString(0)
@@ -90,7 +87,6 @@ class BpeEncodeSpec extends SparkSpec {
   test("left-to-right non-overlap within a pass") {
     val merges = Seq(("a", "a"), ("aa", "aa"))
     assertParity(Seq("aaaa", "aaa", "aaaaa", "aaaaaa a aa"), merges)
-    BpeEncoder.register(spark)
     val out = Seq("aaa").toDF("text")
       .select(BpeEncoder.encode(col("text"), merges).as("e"))
       .head().getString(0)
@@ -109,7 +105,6 @@ class BpeEncodeSpec extends SparkSpec {
   }
 
   test("raw-SQL misuse fails at analysis, not with a runtime CCE") {
-    BpeEncoder.register(spark)
     Seq("ab").toDF("text").createOrReplaceTempView("bpe_chk")
     def analysisError(sql: String): String =
       intercept[org.apache.spark.sql.AnalysisException] {
@@ -138,7 +133,6 @@ class BpeEncodeSpec extends SparkSpec {
   }
 
   test("null text yields empty string, as concat_ws does") {
-    BpeEncoder.register(spark)
     val out = Seq[Option[String]](None).toDF("text")
       .select(BpeEncoder.encode(col("text"), Seq(("a", "b"))).as("e"),
         foldEncode(col("text"), Seq(("a", "b"))).as("f"))
@@ -148,7 +142,6 @@ class BpeEncodeSpec extends SparkSpec {
   }
 
   test("expression depth is merge-count independent (the 32k-vocab claim)") {
-    BpeEncoder.register(spark)
     def treeSize(c: Column): Int =
       Seq("t").toDF("text").select(c).queryExecution
         .analyzed.expressions.map(_.collect { case e => e }.size).sum

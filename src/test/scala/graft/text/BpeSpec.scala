@@ -130,7 +130,6 @@ class BpeSpec extends SparkSpec {
   }
 
   test("trained vocab drives q136's tokenizer and compresses the corpus") {
-    SubwordTokenizer.register(spark)
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     val m = BpeTrainer.fit(spark, docs, merges = 8)
     assert(m.merges.size === 8)
@@ -235,7 +234,6 @@ class BpeSpec extends SparkSpec {
   }
 
   test("native BpeEncode applies byte merges per pretoken (no-whitespace invariant)") {
-    BpeEncoder.register(spark)
     val d = Seq("aaaa aaaa bb").toDF("text")
     val m = BpeTrainer.fitBytes(spark, d, merges = 2)
     val shifted = Seq("aaaa").toDF("t")

@@ -198,8 +198,6 @@ class NativeExprParitySpec extends SparkSpec {
     val prev = spark.conf.get("spark.sql.codegen.fallback")
     spark.conf.set("spark.sql.codegen.fallback", "false")
     try {
-      TextSketch.register(spark)
-      graft.ml.VecOps.register(spark)
       import org.apache.spark.sql.graft.ColumnBridge
       def sq(vec: org.apache.spark.sql.Column, c: Seq[Double]) =
         ColumnBridge.column(graft.ml.PqSqDist(Seq(

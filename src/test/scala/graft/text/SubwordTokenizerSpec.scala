@@ -9,7 +9,6 @@ class SubwordTokenizerSpec extends SparkSpec {
   private val vocab = Seq("a", "wind", "win", "ow", "dow", "up", "tab", "le")
 
   private def segment(text: String): (Int, Int, String) = {
-    SubwordTokenizer.register(spark)
     val r = Seq(text).toDF("text")
       .select(SubwordTokenizer.tokenize(col("text"), vocab).as("s"))
       .select("s.n_pieces", "s.n_unk", "s.joined").head()
@@ -34,7 +33,6 @@ class SubwordTokenizerSpec extends SparkSpec {
   }
 
   test("null text stays null; empty text segments to zero pieces") {
-    SubwordTokenizer.register(spark)
     val r = Seq[Option[String]](None).toDF("text")
       .select(SubwordTokenizer.tokenize(col("text"), vocab).as("s")).head()
     assert(r.isNullAt(0))

@@ -25,11 +25,6 @@ class TextSketchSpec extends SparkSpec {
     ).zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
   }
 
-  override def beforeAll(): Unit = {
-    super.beforeAll()
-    TextSketch.register(spark)
-  }
-
   test("word_shingles == shingles(tokens(text), k)") {
     val both = docs.select(
       TextSketch.wordShingles(col("text"), 3).as("native"),

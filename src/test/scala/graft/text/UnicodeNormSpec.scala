@@ -7,12 +7,10 @@ class UnicodeNormSpec extends SparkSpec {
   import spark.implicits._
 
   private def canon(s: String): String = {
-    UnicodeNorm.register(spark)
     Seq(s).toDF("t").select(UnicodeNorm.canonicalizeText(col("t"))).head().getString(0)
   }
 
   test("NFC composes decomposed sequences to the precomposed form") {
-    UnicodeNorm.register(spark)
     val got = Seq("cafe\u0301", "caf\u00e9", "A\u030a").toDF("t")
       .select(UnicodeNorm.nfcNormalize(col("t")).as("n")).collect().map(_.getString(0))
     assert(got(0) == "caf\u00e9")
@@ -21,7 +19,6 @@ class UnicodeNormSpec extends SparkSpec {
   }
 
   test("nfc is idempotent and null-safe") {
-    UnicodeNorm.register(spark)
     val df = Seq(Option("e\u0301x"), None).toDF("t")
       .select(UnicodeNorm.nfcNormalize(UnicodeNorm.nfcNormalize(col("t"))).as("n"))
     val rows = df.collect()
@@ -56,7 +53,6 @@ class UnicodeNormSpec extends SparkSpec {
     // itself must not be a CodegenFallback
     import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
     assert(!classOf[CodegenFallback].isAssignableFrom(classOf[NfcNormalize]))
-    UnicodeNorm.register(spark)
     val df = sf("documents").select(UnicodeNorm.nfcNormalize(col("text")))
     val plan = df.queryExecution.executedPlan.toString
     // "*(1) Project [nfcnormalize(...)" — the asterisk IS the

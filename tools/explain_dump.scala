@@ -10,6 +10,11 @@ val out = sys.env.getOrElse("GRAFT_EXPLAIN_OUT", "plans/r17")
 val tag = sys.env.getOrElse("GRAFT_EXPLAIN_TAG", "before")
 val names = sys.env.getOrElse("GRAFT_EXPLAIN_QUERIES", "").split(",").map(_.trim).filter(_.nonEmpty)
 java.nio.file.Files.createDirectories(java.nio.file.Paths.get(out))
+// spark-shell's session predates the graft extensions: install the
+// engine profile (native functions, SpatialFilterRule, engine confs)
+// on it, keeping the shell's shuffle width
+graft.GraftSession.create(
+  shufflePartitions = spark.conf.get("spark.sql.shuffle.partitions").toInt)
 spark.sparkContext.setLogLevel("ERROR")
 for (n <- names) {
   val fn = graft.SparkEntry.queries(n)

@@ -11,6 +11,11 @@ val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 val out = sys.env.getOrElse("GRAFT_EXPLAIN_OUT", "plans/r17")
 val tag = sys.env.getOrElse("GRAFT_EXPLAIN_TAG", "after")
 java.nio.file.Files.createDirectories(java.nio.file.Paths.get(out))
+// spark-shell's session predates the graft extensions: install the
+// engine profile (native functions, SpatialFilterRule, engine confs)
+// on it, keeping the shell's shuffle width
+graft.GraftSession.create(
+  shufflePartitions = spark.conf.get("spark.sql.shuffle.partitions").toInt)
 spark.sparkContext.setLogLevel("ERROR")
 val plans = new ConcurrentLinkedQueue[(String, String)]()
 val listener = new org.apache.spark.sql.util.QueryExecutionListener {

@@ -4,6 +4,11 @@
 //   --jars <jar> -I tools/probe_q209.scala 2>/dev/null | grep PROBE
 import org.apache.spark.sql.functions._
 val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+// spark-shell's session predates the graft extensions: install the
+// engine profile (native functions, SpatialFilterRule, engine confs)
+// on it, keeping the shell's shuffle width
+graft.GraftSession.create(
+  shufflePartitions = spark.conf.get("spark.sql.shuffle.partitions").toInt)
 spark.sparkContext.setLogLevel("ERROR")
 def timed(name: String)(f: => Unit): Unit = {
   spark.sparkContext.setJobDescription(name)
