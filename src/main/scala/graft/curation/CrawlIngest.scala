@@ -64,60 +64,23 @@ object CrawlIngest {
           .otherwise("accepted").as("verdict"))
   }
 
-  /** Store-backed STREAMING crawl ingest — the [[Curation
-    * .nearDupIngestStream]] discipline on the page-key store: per
-    * micro-batch compute key rows row-local, verdict against the
-    * bucketed store, append ONLY accepted pages' keys back (same bucket
-    * spec), hand (page_id, verdict) to `sink`. Retry/restart safety is
-    * identical: the batch's own page ids are excluded from the store
-    * side (a crashed attempt's partial append cannot self-match), and
-    * already-stored ids are excluded from the re-append. Null canonical
-    * URLs (non-URL fetch targets) are dropped before the store with a
-    * `rejected_bad_url` verdict — a null key must never enter a join.
+  /** Store-backed STREAMING crawl ingest — the page-key member of the
+    * [[graft.ops.StoreBackedIngest.stream]] family: per micro-batch
+    * compute key rows row-local, take [[crawlVerdicts]] against the
+    * canon_url-bucketed store, and append only accepted pages' keys.
+    * Null canonical URLs (non-URL fetch targets) never enter the store
+    * or a join: they get a `rejected_bad_url` verdict. No threshold
+    * compaction runs (crash recovery of the store still does).
     */
   def crawlIngestStream(pages: DataFrame, storeTable: String,
       buckets: Int = 32, checkpoint: Option[String] = None)(
-      sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    val writer = pages.writeStream.outputMode("append")
-    checkpoint.foreach(writer.option("checkpointLocation", _))
-    writer
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val s = batch.sparkSession
-        val keys0 = pageKeys(batch)
-        val bad = keys0.filter(col("canon_url").isNull)
-          .select(col("page_id"), lit("rejected_bad_url").as("verdict"))
-        val keys = keys0.filter(col("canon_url").isNotNull).persist()
-        val batchIds = keys.select(col("page_id")).distinct()
-        try {
-          val store =
-            (if (s.catalog.tableExists(storeTable))
-              s.table(storeTable).select("page_id", "canon_url", "text_md5")
-            else s.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-              keys.schema))
-              .join(broadcast(batchIds), Seq("page_id"), "left_anti")
-          // eager checkpoint BEFORE the append pins the pre-append store
-          // read (the nearDupIngestStream lesson: a persisted-only frame
-          // would recompute post-append and self-match every acceptance)
-          val verdicts = crawlVerdicts(keys, store).localCheckpoint(true)
-          val accepted = verdicts.filter(col("verdict") === "accepted")
-            .select("page_id", "canon_url", "text_md5")
-          if (s.catalog.tableExists(storeTable)) {
-            val alreadyStored = s.table(storeTable).select(col("page_id"))
-              .join(broadcast(batchIds), Seq("page_id"), "left_semi").distinct()
-            graft.io.Writers.appendBucketed(
-              accepted.join(broadcast(alreadyStored), Seq("page_id"), "left_anti"),
-              storeTable, Seq("canon_url"), buckets)
-          } else
-            graft.io.Writers.writeBucketed(accepted, storeTable,
-              Seq("canon_url"), buckets)
-          s.catalog.refreshTable(storeTable)
-          org.apache.spark.sql.SparkSession.getDefaultSession
-            .filter(_ ne s).foreach(_.catalog.refreshTable(storeTable))
-          sink(verdicts.select(col("page_id"), col("verdict"))
-            .unionByName(bad))
-          ()
-        } finally { keys.unpersist(); () }
-      }
-      .start()
-  }
+      sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery =
+    graft.ops.StoreBackedIngest.stream(pages, storeTable, "page_id",
+      "canon_url", buckets, checkpoint, compactFileThreshold = 0)(
+      batch => pageKeys(batch).filter(col("canon_url").isNotNull),
+      (batch, keys, store) => crawlVerdicts(keys, store)
+        .select(col("page_id"), col("verdict"))
+        .unionByName(pageKeys(batch).filter(col("canon_url").isNull)
+          .select(col("page_id"), lit("rejected_bad_url").as("verdict"))),
+      sink)
 }

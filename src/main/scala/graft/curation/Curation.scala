@@ -2062,141 +2062,30 @@ object Curation {
           sigJaccardEst(col("sig_a"), col("sig_b")) >= estThreshold, "left_semi")
       .groupBy(col("doc")).agg(max(lit(1L)).as("vs_batch"))
 
-    // the matched-id sets are batch-bounded (≤ one row per batch doc —
-    // the magnitude the ingest loop already broadcasts for its store
-    // exclusions), so they broadcast into the final verdict joins instead
-    // of paying two batch-side sort-merge exchanges (guide §3.1)
-    batchIds
-      .join(broadcast(vsHist), col(idCol) === vsHist("doc"), "left_outer")
-      .drop(vsHist("doc"))
-      .join(broadcast(vsBatch), col(idCol) === vsBatch("doc"), "left_outer")
-      .drop(vsBatch("doc"))
-      .select(col(idCol),
-        when(col("vs_hist") === 1L, "dropped_vs_history")
-          .when(col("vs_batch") === 1L, "dropped_in_batch")
-          .otherwise("accepted").as("verdict"))
+    graft.ops.StoreBackedIngest.labels(batchIds, idCol, vsHist, vsBatch)
   }
 
-  /** Store-backed STREAMING near-dup ingest: the operational join of the
-    * two halves this file already had — [[fingerprintDedupStream]]'s
-    * continuous shape and [[incrementalNearDup]] + the signature store's
-    * O(batch) check. Each micro-batch:
-    *   1. computes its band rows ONCE (row-local, persisted for the batch);
-    *   2. verdicts against the bucketed store table (no store-side
-    *      exchange — the bucketed scan co-locates the join);
-    *   3. appends ONLY accepted docs' band rows back to the store (same
-    *      bucket spec), so batch N+1 near-dups against everything batch N
-    *      admitted;
-    *   4. hands (id, verdict) rows to `sink` — the caller's write stage.
-    *
-    * The store table is created on first use with `buckets` buckets.
-    * State lives in the TABLE, not executor memory, and store size is
-    * bounded by accepted docs (4 narrow band rows each), not stream
-    * length. Retry/restart safety: foreachBatch is at-least-once, and the
-    * store append lands BEFORE the sink — so a re-executed batch is made
-    * self-consistent by construction: the batch's own doc ids are
-    * excluded from the store side of the verdict join (its prior partial
-    * append can't flip its verdicts to self-matches), and already-stored
-    * ids are excluded from the re-append (no duplicate band rows). Both
-    * exclusions broadcast the batch's id set — no store-side exchange.
-    * Pass `checkpoint` in production so a restart resumes the source
-    * instead of reprocessing history; the sink still receives replayed
-    * verdicts on a crash-retry and should be idempotent per id.
-    *
-    * Table maintenance is wired in, not left to an external cron: every
-    * append writes at least one small file per touched bucket, so the
-    * store's file count grows linearly with batch count and the
-    * per-batch verdict join eventually pays more in file opens than in
-    * work. When `compactFileThreshold` > 0 and the post-append file
-    * count exceeds it, the batch ends by rewriting the store to ~one
-    * file per bucket under the SAME bucket spec
-    * ([[graft.io.Compact.compactBucketedTable]] — the no-shuffle
-    * verdict join survives compaction, spec-asserted). Size the
-    * threshold a few multiples of `buckets` so the rewrite (one store
-    * shuffle) amortizes over many batches; 0 disables it, reproducing
-    * the maintain-externally contract.
+  /** Store-backed STREAMING near-dup ingest: the operational join of
+    * [[fingerprintDedupStream]]'s continuous shape and
+    * [[incrementalNearDup]]'s O(batch) check against the signature store.
+    * Each micro-batch computes its band rows ONCE (row-local), verdicts
+    * them against the band_key-bucketed store and earlier-id batch docs
+    * ([[verdictsFromBands]], the q122 policy), and appends only accepted
+    * docs' band rows (4 narrow rows each). The loop — crash recovery,
+    * retry-safe id exclusions, pinned verdicts, threshold compaction —
+    * is [[graft.ops.StoreBackedIngest.stream]].
     */
   def nearDupIngestStream(docs: DataFrame, storeTable: String,
       buckets: Int = 32, idCol: String = "doc_id", textCol: String = "text",
       shingleWidth: Int = 3, estThreshold: Double = 0.5,
       checkpoint: Option[String] = None, compactFileThreshold: Int = 0)(
-      sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    val writer = docs.writeStream.outputMode("append")
-    checkpoint.foreach(writer.option("checkpointLocation", _))
-    writer
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val s = batch.sparkSession
-        // a crash inside a previous batch's compaction swap can leave the
-        // store under its __compact_old name; recover BEFORE the
-        // tableExists probes below, or this batch would silently restart
-        // the store from empty. Unconditional (cheap no-op without swap
-        // state): a restart with compaction DISABLED after such a crash
-        // must still heal the store
-        graft.io.Compact.recoverBucketedTable(s, storeTable)
-        val bands = bandRows(
-          minhashSignatures(batch, idCol, textCol, shingleWidth)).persist()
-        val batchIds = batch.select(col(idCol).as("doc_id")).distinct()
-        try {
-          val storeBands =
-            (if (s.catalog.tableExists(storeTable))
-              s.table(storeTable).select(col("doc_id"), col("sig"), col("band_key"))
-            else s.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-              bands.schema))
-              // a crashed earlier attempt of THIS batch may have appended
-              // some of its rows already — they must not self-match
-              .join(broadcast(batchIds), Seq("doc_id"), "left_anti")
-          // localCheckpoint (eager) BEFORE the append, not persist():
-          // writing to the store table invalidates any cached plan that
-          // references it, so a merely-persisted verdict frame would
-          // silently RECOMPUTE against the post-append store — and every
-          // just-accepted doc would then self-match as dropped_vs_history.
-          // The checkpoint truncates lineage, pinning the pre-append read.
-          val verdicts = verdictsFromBands(batch.select(col(idCol)), bands,
-            storeBands, idCol, estThreshold).localCheckpoint(true)
-          val acceptedBands = bands.join(
-            verdicts.filter(col("verdict") === "accepted")
-              .select(col(idCol).as("doc_id")),
-            Seq("doc_id"))
-          if (s.catalog.tableExists(storeTable)) {
-            // retry dedup: ids a crashed attempt already appended stay
-            // appended once. The probe streams the store's doc_id column
-            // against the broadcast batch ids (no store-side exchange).
-            val alreadyStored = s.table(storeTable).select(col("doc_id"))
-              .join(broadcast(batchIds), Seq("doc_id"), "left_semi").distinct()
-            graft.io.Writers.appendBucketed(
-              acceptedBands.join(broadcast(alreadyStored), Seq("doc_id"), "left_anti"),
-              storeTable, Seq("band_key"), buckets)
-          } else
-            graft.io.Writers.writeBucketed(acceptedBands, storeTable,
-              Seq("band_key"), buckets)
-          // foreachBatch runs in a CLONED session whose catalog caches are
-          // its own — refresh the outer (default) session too, or an
-          // interactive reader keeps serving the pre-append file listing
-          // (each batch's own clone is fresh, so the loop itself is safe)
-          s.catalog.refreshTable(storeTable)
-          org.apache.spark.sql.SparkSession.getDefaultSession
-            .filter(_ ne s).foreach(_.catalog.refreshTable(storeTable))
-          // auto-compaction: bound the small-file growth the per-batch
-          // appends cause. After the append (so a compaction crash never
-          // loses this batch's admitted bands — recovery at the top of
-          // the next batch restores the swap) and before the sink (the
-          // verdicts are localCheckpoint-pinned, so the rewrite cannot
-          // change what the sink sees).
-          if (compactFileThreshold > 0 &&
-              graft.io.Compact.dataFileCount(
-                s, graft.io.Compact.tableLocation(s, storeTable)) > compactFileThreshold) {
-            graft.io.Compact.compactBucketedTable(
-              s, storeTable, Seq("band_key"), buckets)
-            s.catalog.refreshTable(storeTable)
-            org.apache.spark.sql.SparkSession.getDefaultSession
-              .filter(_ ne s).foreach(_.catalog.refreshTable(storeTable))
-          }
-          sink(verdicts)
-          ()
-        } finally bands.unpersist()
-      }
-      .start()
-  }
+      sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery =
+    graft.ops.StoreBackedIngest.stream(docs, storeTable, "doc_id", "band_key",
+      buckets, checkpoint, compactFileThreshold)(
+      batch => bandRows(minhashSignatures(batch, idCol, textCol, shingleWidth)),
+      (batch, bands, storeBands) => verdictsFromBands(batch.select(col(idCol)),
+        bands, storeBands, idCol, estThreshold),
+      sink)
 
   /** SemDeDup ledger: embeddings are assigned to coarse-quantizer cells
     * (row-local argmax over the broadcast `codebook`), and inside each

@@ -72,17 +72,8 @@ object AnnIngest {
     val vsBatch = AnnIndex.searchRows(s, clean, encoded, cb, nprobe, topK)
       .filter(col("vec_id") < col("q_id") && col("adc_dist") <= eps)
       .groupBy(col("q_id").as("vec_id")).agg(max(lit(1L)).as("vs_batch"))
-    // the matched-id sets are batch-bounded (≤ one row per batch vector —
-    // the magnitude the loop already broadcasts for its store exclusions),
-    // so they broadcast into the final verdict joins instead of paying two
-    // batch-side sort-merge exchanges (guide §3.1)
-    batchIds
-      .join(broadcast(vsIndex), Seq("vec_id"), "left_outer")
-      .join(broadcast(vsBatch), Seq("vec_id"), "left_outer")
-      .select(col("vec_id"),
-        when(col("vs_index") === 1L, "dropped_vs_index")
-          .when(col("vs_batch") === 1L, "dropped_in_batch")
-          .otherwise("accepted").as("verdict"))
+    graft.ops.StoreBackedIngest.labels(batchIds, "vec_id", vsIndex, vsBatch,
+      "dropped_vs_index")
   }
 
   def annDedupIngestStream(vecs: DataFrame, path: String, eps: Double,

@@ -257,104 +257,46 @@ object Multimodal {
     })
   }
 
-  /** Store-backed STREAMING visual near-dup ingest — the image sibling of
-    * [[graft.curation.Curation.nearDupIngestStream]], with the identical
-    * operational discipline and the SAME perceptual algebra as the
-    * oracle-checked batch query (q140, [[VisualDedup]]). Each micro-batch
-    * of assets (`asset_id`, `format`, `payload` — any `javax.imageio`
-    * format):
-    *   1. decodes payload md5 + g×g box sums in ONE per-partition pass
-    *      ([[decodeThumbWithMd5]]) and derives the 24-bit dHash band rows
-    *      (narrow: the payload never outlives the decode stage);
-    *   2. verdicts against the bucketed store table — band_key equality
-    *      (dims + band baked into one key, the text-store discipline)
-    *      then the 16-box verify — and against earlier-id batch members;
-    *   3. appends ONLY accepted assets' band rows back to the store
-    *      (same bucket spec), so batch N+1 dedups against everything
-    *      batch N admitted;
-    *   4. hands (asset_id, verdict) rows to `sink`.
-    *
-    * Retry/restart safety is [[graft.curation.Curation.nearDupIngestStream]]'s,
-    * verbatim: the batch's own ids are excluded from the store side of
-    * the verdict join and from the re-append, verdicts are
-    * localCheckpoint-pinned before the append, and when
-    * `compactFileThreshold` > 0 the store auto-compacts through
-    * [[graft.io.Compact.compactBucketedTable]] (recovery runs at loop
-    * start so a mid-swap crash can't restart the store from empty).
+  /** Store-backed STREAMING visual near-dup ingest — the image member of
+    * the [[graft.ops.StoreBackedIngest.stream]] family, with the SAME
+    * perceptual algebra as the oracle-checked batch query (q140,
+    * [[VisualDedup]]). Each micro-batch of assets (`asset_id`, `format`,
+    * `payload` — any `javax.imageio` format) decodes payload md5 + g×g
+    * box sums in ONE per-partition pass ([[decodeThumbWithMd5]]) into
+    * 24-bit dHash band rows (narrow: the payload never outlives the
+    * decode stage), takes [[VisualDedup.verdicts]] against the
+    * band_key-bucketed store and earlier-id batch members — the
+    * definition the batch replay (q156) runs, so stream verdicts cannot
+    * drift from it — and appends only accepted assets' band rows.
     */
   def visualNearDupIngestStream(assets: DataFrame, storeTable: String,
       buckets: Int = 32, grid: Int = 4, checkpoint: Option[String] = None,
       compactFileThreshold: Int = 0)(
-      sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    val writer = assets.writeStream.outputMode("append")
-    checkpoint.foreach(writer.option("checkpointLocation", _))
-    writer
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val s = batch.sparkSession
-        import s.implicits._
-        // unconditional (a cheap no-op without swap debris): a stream
-        // that crashed mid-compaction-swap and was RESTARTED WITH
-        // COMPACTION DISABLED would otherwise find tableExists false and
-        // silently recreate the store from empty — the exact hazard
-        // recoverBucketedTable exists for
-        graft.io.Compact.recoverBucketedTable(s, storeTable)
+      sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery =
+    graft.ops.StoreBackedIngest.stream(assets, storeTable, "asset_id",
+      "band_key", buckets, checkpoint, compactFileThreshold)(
+      { batch =>
+        import batch.sparkSession.implicits._
         val feats = decodeThumbWithMd5(
             batch.select("asset_id", "format", "payload").as[Asset], grid).toDF()
           .select(col("asset_id"), col("width"), col("height"),
             col("payload_md5").as("pm"), col("box_sums"))
-        val bands = VisualDedup.explodeBands(
+        VisualDedup.explodeBands(
             feats.withColumn("dhash", VisualDedup.dhash("", grid)), grid)
           .withColumn("band_key", VisualDedup.bandKey(""))
           .select("asset_id", "band_key", "width", "height", "box_sums", "pm")
-          .persist()
-        // materializes the band pin (the decode would have paid this on
-        // its first consumer anyway) and sizes the verdict aggregates'
-        // exchanges to the micro-batch, not the session default
-        val w = Some(graft.util.Widths.adaptive(s, bands.count()))
-        val batchIds = batch.select(col("asset_id")).distinct()
-        try {
-          val storeBands =
-            (if (s.catalog.tableExists(storeTable)) s.table(storeTable)
-            else s.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-              bands.schema))
-              .join(broadcast(batchIds), Seq("asset_id"), "left_anti")
-          // shared batch algebra ([[VisualDedup.verdicts]] — LEFT SEMI
-          // existence joins, no per-band re-verify, no post-verify
-          // distinct): the SAME definition the oracle-checked batch
-          // replay (q156) runs, so stream verdicts cannot drift from it
-          val verdicts = VisualDedup
-            .verdicts(batchIds, bands, storeBands, grid, w)
-            .localCheckpoint(true)
-          val accepted = bands.join(
-            verdicts.filter(col("verdict") === "accepted").select(col("asset_id")),
-            Seq("asset_id"))
-          if (s.catalog.tableExists(storeTable)) {
-            val alreadyStored = s.table(storeTable).select(col("asset_id"))
-              .join(broadcast(batchIds), Seq("asset_id"), "left_semi").distinct()
-            graft.io.Writers.appendBucketed(
-              accepted.join(broadcast(alreadyStored), Seq("asset_id"), "left_anti"),
-              storeTable, Seq("band_key"), buckets)
-          } else
-            graft.io.Writers.writeBucketed(accepted, storeTable,
-              Seq("band_key"), buckets)
-          s.catalog.refreshTable(storeTable)
-          org.apache.spark.sql.SparkSession.getDefaultSession
-            .filter(_ ne s).foreach(_.catalog.refreshTable(storeTable))
-          if (compactFileThreshold > 0 &&
-              graft.io.Compact.dataFileCount(
-                s, graft.io.Compact.tableLocation(s, storeTable)) > compactFileThreshold) {
-            graft.io.Compact.compactBucketedTable(
-              s, storeTable, Seq("band_key"), buckets)
-            s.catalog.refreshTable(storeTable)
-            org.apache.spark.sql.SparkSession.getDefaultSession
-              .filter(_ ne s).foreach(_.catalog.refreshTable(storeTable))
-          }
-          sink(verdicts)
-          ()
-        } finally bands.unpersist()
-      }
-      .start()
-  }
+      },
+      (batch, bands, storeBands) => VisualDedup.verdicts(
+        batch.select(col("asset_id")).distinct(), bands, storeBands, grid,
+        batchWidth(bands)),
+      sink)
+
+  /** Materializes the band pin (the decode would have paid this on its
+    * first consumer anyway) and sizes the verdict aggregates' exchanges
+    * to the micro-batch, not the session default.
+    */
+  private def batchWidth(bands: DataFrame): Option[Int] =
+    Some(graft.util.Widths.adaptive(bands.sparkSession, bands.count()))
 
   /** Deterministic REAL-webp asset table: the [[bmpAssetsFromDocuments]]
     * recipe with distinct parameter multipliers, encoded as literal-only
@@ -839,38 +781,28 @@ object Multimodal {
       .withColumn("vs_hist", lit(1L))
     val vsBatch = idSet(matchedIds(frames, col("b_asset_id") < col("a_asset_id")))
       .withColumn("vs_batch", lit(1L))
-    batchIds
-      .join(broadcast(vsHist), Seq("asset_id"), "left_outer")
-      .join(broadcast(vsBatch), Seq("asset_id"), "left_outer")
-      .select(col("asset_id"),
-        when(col("vs_hist") === 1L, "dropped_vs_history")
-          .when(col("vs_batch") === 1L, "dropped_in_batch")
-          .otherwise("accepted").as("verdict"))
+    graft.ops.StoreBackedIngest.labels(batchIds, "asset_id", vsHist, vsBatch)
   }
 
-  /** Store-backed streaming VIDEO near-dup ingest — the fourth modality
-    * of the ingest-loop family (text q122, visual q156, embedding q179):
-    * per micro-batch, decode arriving AVI clips to sampled-frame band
-    * rows ([[videoFrameFeatures]] — row-local, payloads never shuffle),
-    * take CLIP verdicts against the accepted history and the batch
-    * itself ([[videoClipVerdicts]] — the replay-shared definition), and
-    * append only accepted clips' band rows to the band_key-bucketed
-    * store. Crash recovery, retry-safe re-append protection, catalog
-    * refresh and threshold compaction all follow the visual loop.
+  /** Store-backed streaming VIDEO near-dup ingest — the clip member of
+    * the [[graft.ops.StoreBackedIngest.stream]] family (text q122, visual
+    * q156, embedding q179): per micro-batch, decode arriving AVI clips to
+    * sampled-frame band rows ([[videoFrameFeatures]] — row-local,
+    * payloads never shuffle), take CLIP verdicts against the accepted
+    * history and the batch itself ([[videoClipVerdicts]] — the
+    * replay-shared definition), and append only accepted clips' band
+    * rows to the band_key-bucketed store.
     */
   def videoNearDupIngestStream(assets: DataFrame, storeTable: String,
       buckets: Int = 32, grid: Int = 4, stride: Int = 2,
       checkpoint: Option[String] = None,
       compactFileThreshold: Int = 0)(
-      sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    val writer = assets.writeStream.outputMode("append")
-    checkpoint.foreach(writer.option("checkpointLocation", _))
-    writer
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val s = batch.sparkSession
-        import s.implicits._
-        graft.io.Compact.recoverBucketedTable(s, storeTable)
-        val bands = VisualDedup.explodeBands(
+      sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery =
+    graft.ops.StoreBackedIngest.stream(assets, storeTable, "asset_id",
+      "band_key", buckets, checkpoint, compactFileThreshold)(
+      { batch =>
+        import batch.sparkSession.implicits._
+        VisualDedup.explodeBands(
             videoFrameFeatures(
               batch.select("asset_id", "format", "payload").as[Asset],
               grid, stride).toDF()
@@ -878,51 +810,11 @@ object Multimodal {
           .withColumn("band_key", videoBandKey(""))
           .select("asset_id", "frame_idx", "n_frames", "band_key",
             "width", "height", "box_sums")
-          .persist()
-        // materializes the band pin (the decode would have paid this on
-        // its first consumer anyway) and sizes the verdict aggregates'
-        // exchanges to the micro-batch, not the session default
-        val w = Some(graft.util.Widths.adaptive(s, bands.count()))
-        val batchIds = batch.select(col("asset_id")).distinct()
-        try {
-          val storeBands =
-            (if (s.catalog.tableExists(storeTable)) s.table(storeTable)
-            else s.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-              bands.schema))
-              .join(broadcast(batchIds), Seq("asset_id"), "left_anti")
-          val verdicts = videoClipVerdicts(batchIds, bands, storeBands,
-              grid, stride, w)
-            .localCheckpoint(true)
-          val accepted = bands.join(
-            verdicts.filter(col("verdict") === "accepted").select(col("asset_id")),
-            Seq("asset_id"))
-          if (s.catalog.tableExists(storeTable)) {
-            val alreadyStored = s.table(storeTable).select(col("asset_id"))
-              .join(broadcast(batchIds), Seq("asset_id"), "left_semi").distinct()
-            graft.io.Writers.appendBucketed(
-              accepted.join(broadcast(alreadyStored), Seq("asset_id"), "left_anti"),
-              storeTable, Seq("band_key"), buckets)
-          } else
-            graft.io.Writers.writeBucketed(accepted, storeTable,
-              Seq("band_key"), buckets)
-          s.catalog.refreshTable(storeTable)
-          org.apache.spark.sql.SparkSession.getDefaultSession
-            .filter(_ ne s).foreach(_.catalog.refreshTable(storeTable))
-          if (compactFileThreshold > 0 &&
-              graft.io.Compact.dataFileCount(
-                s, graft.io.Compact.tableLocation(s, storeTable)) > compactFileThreshold) {
-            graft.io.Compact.compactBucketedTable(
-              s, storeTable, Seq("band_key"), buckets)
-            s.catalog.refreshTable(storeTable)
-            org.apache.spark.sql.SparkSession.getDefaultSession
-              .filter(_ ne s).foreach(_.catalog.refreshTable(storeTable))
-          }
-          sink(verdicts)
-          ()
-        } finally bands.unpersist()
-      }
-      .start()
-  }
+      },
+      (batch, bands, storeBands) => videoClipVerdicts(
+        batch.select(col("asset_id")).distinct(), bands, storeBands, grid,
+        stride, batchWidth(bands)),
+      sink)
 
   /** Derive a deterministic asset table from the documents corpus: text
     * bytes stand in for media payloads, format cycles by id over the

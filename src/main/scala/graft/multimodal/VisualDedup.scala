@@ -175,15 +175,6 @@ object VisualDedup {
           col("b_asset_id") < col("a_asset_id") && verify("a_", "b_", g), "left_semi"))
       .groupBy(col("a_asset_id").as("asset_id"))
       .agg(max(lit(1L)).as("vs_batch"))
-    // the matched-id sets are batch-bounded (≤ one row per batch asset —
-    // the magnitude the ingest loops already broadcast for their store
-    // exclusions), so they broadcast into the final verdict joins
-    batchIds
-      .join(broadcast(vsHist), Seq("asset_id"), "left_outer")
-      .join(broadcast(vsBatch), Seq("asset_id"), "left_outer")
-      .select(col("asset_id"),
-        when(col("vs_hist") === 1L, "dropped_vs_history")
-          .when(col("vs_batch") === 1L, "dropped_in_batch")
-          .otherwise("accepted").as("verdict"))
+    graft.ops.StoreBackedIngest.labels(batchIds, "asset_id", vsHist, vsBatch)
   }
 }

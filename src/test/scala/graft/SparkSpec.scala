@@ -12,6 +12,21 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   def sf(name: String, dir: String = "/root/testdata/sf0.001") =
     spark.read.parquet(s"$dir/$name.parquet")
+
+  /** Drop `table` from both the catalog and the warehouse directory — a
+    * crashed earlier run can leave the location behind with no catalog
+    * entry, which fails the next CREATE with LOCATION_ALREADY_EXISTS.
+    */
+  def freshTable(table: String): String = {
+    spark.sql(s"DROP TABLE IF EXISTS $table")
+    val loc = new java.io.File(
+      spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"), table)
+    if (loc.exists()) {
+      import scala.reflect.io.Directory
+      new Directory(loc).deleteRecursively()
+    }
+    table
+  }
 }
 
 object SparkSpec {

@@ -14,17 +14,6 @@ import org.apache.spark.sql.functions._
 class CrawlIngestSpec extends SparkSpec {
   import spark.implicits._
 
-  private def freshTable(table: String): String = {
-    spark.sql(s"DROP TABLE IF EXISTS $table")
-    val loc = new java.io.File(
-      spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"), table)
-    if (loc.exists()) {
-      import scala.reflect.io.Directory
-      new Directory(loc).deleteRecursively()
-    }
-    table
-  }
-
   private def page(id: Long, urlId: Long, contentId: Long): (Long, String, String) =
     (id, s"HTTPS://Site.example:443/p/$urlId?utm_x=1&a=2",
       s"<html><body><p>content $contentId</p></body></html>")
@@ -87,6 +76,35 @@ class CrawlIngestSpec extends SparkSpec {
       assert(spark.table(table).select("page_id").collect()
         .map(_.getLong(0)).toSet === Set(1L, 2L, 12L)) // no double-append
     } finally q2.stop()
+  }
+
+  test("crash recovery: a store left under its compaction-swap name keeps its history") {
+    val table = freshTable("crawl_store_recover_test")
+    freshTable(s"${table}__compact_old")
+    val srcDir = Files.createTempDirectory("crawl_recover").toString + "/src"
+    val b1 = Seq(page(1L, 100L, 500L), page(2L, 101L, 501L))
+      .toDF("page_id", "url", "html")
+    b1.coalesce(1).write.parquet(srcDir)
+    val log = scala.collection.mutable.Map[Long, String]()
+    val q = CrawlIngest.crawlIngestStream(
+      spark.readStream.schema(b1.schema).parquet(srcDir), table, buckets = 4) {
+      v => log ++= v.collect().map(r => r.getLong(0) -> r.getString(1))
+    }
+    try {
+      q.processAllAvailable()
+      assert(log.toMap === Map(1L -> "accepted", 2L -> "accepted"))
+      // a compaction crash between its two renames: the live store only
+      // exists under its __compact_old name
+      spark.sql(s"ALTER TABLE $table RENAME TO ${table}__compact_old")
+      // 10 re-crawls admitted url 100
+      Seq(page(10L, 100L, 900L)).toDF("page_id", "url", "html")
+        .coalesce(1).write.mode("append").parquet(srcDir)
+      q.processAllAvailable()
+      assert(log(10L) === "url_dup_vs_history")
+      assert(spark.table(table).select("page_id").collect()
+        .map(_.getLong(0)).toSet === Set(1L, 2L))
+      assert(!spark.catalog.tableExists(s"${table}__compact_old"))
+    } finally q.stop()
   }
 
   test("url precedence beats mirror: same url AND same content is a url dup") {

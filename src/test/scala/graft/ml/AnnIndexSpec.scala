@@ -147,14 +147,7 @@ class AnnIndexSpec extends SparkSpec
   test("bucketed index: co-partitioned batchQuery has ZERO index-side exchange") {
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     val e = spark.read.parquet(s"$dir/embeddings.parquet")
-    val table = "ann_bucketed_test"
-    spark.sql(s"DROP TABLE IF EXISTS $table")
-    val loc = new java.io.File(
-      spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"), table)
-    if (loc.exists()) {
-      import scala.reflect.io.Directory
-      new Directory(loc).deleteRecursively()
-    }
+    val table = freshTable("ann_bucketed_test")
     AnnIndex.writeBucketedIndex(spark, path, table, buckets = 4)
     val queries = e.filter(col("vec_id") % 10 === 2)
     // force the shuffle join: a broadcast would also skip the index-side

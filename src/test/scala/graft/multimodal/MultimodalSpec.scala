@@ -2,6 +2,8 @@ package graft.multimodal
 
 import graft.SparkSpec
 import graft.multimodal.Multimodal._
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.streaming.StreamingQuery
 
 class MultimodalSpec extends SparkSpec {
 
@@ -133,36 +135,90 @@ class MultimodalSpec extends SparkSpec {
       u * (30 + 40), u * 50)) // row 1: boxes {v=30,40 | v=50}
   }
 
+  // 4-frame clips, stride 2 -> frames 0 and 2 sampled. `bright` shifts
+  // every frame's red by one level (byte-different, perceptually near);
+  // `lastFrameOff` perturbs ONLY frame 2's green — one drifted SAMPLED
+  // frame must kill the clip match (the conjunction rule)
+  private def clip(base: Long, bright: Int, lastFrameOff: Int): Array[Byte] = {
+    val (w, h) = (12, 10)
+    val frames = (0 until 4).map { f =>
+      val r = ((base * 3 + 13 * f) % 180).toInt + bright
+      val g = (((base * 11 + 7 * f) % 200).toInt +
+        (if (f == 2) lastFrameOff else 0)) % 256
+      val b = ((base * 17 + 5 * f) % 256).toInt
+      AviCodec.encodeDibFrame(w, h)((x, y) => ((r + x + y) << 16) | (g << 8) | b)
+    }
+    AviCodec.encode(w, h, frames)
+  }
+
+  // gradient renders via the same recipe as the q140 fixture: (base)
+  // parameterizes dims + colors; bright=1 shifts red one level (a
+  // byte-DIFFERENT payload with the same visual structure)
+  private def render(base: Long, bright: Int): Array[Byte] = {
+    val w = (8 + (base * 5) % 16).toInt
+    val h = (8 + (base * 7) % 16).toInt
+    val r = (base % 199).toInt + bright
+    val g = ((base * 11) % 256).toInt
+    val b = ((base * 17) % 256).toInt
+    ImageIoCodec.encode(w, h, "png")((x, y) => ((r + x + y) << 16) | (g << 8) | b)
+  }
+
+  /** Runs a modality's ingest loop over 4 batches twice — its store
+    * auto-compacting past 4 files, and a no-compaction control — and
+    * checks both give the same verdicts and the same store content,
+    * with compaction keeping the file count below the control's. Batch 1
+    * is (101, fresh(1)) and (201, copied); each batch b > 1 carries a
+    * new asset 100 + b and a byte copy of asset 201.
+    */
+  private def assertCompactionMatchesControl(name: String, format: String,
+      fresh: Int => Array[Byte], copied: Array[Byte])(
+      ingest: (DataFrame, String, Int) => (DataFrame => Unit) => StreamingQuery)
+      : Unit = {
+    import spark.implicits._
+    import graft.io.Compact
+    val buckets = 4
+    val table = freshTable(s"${name}_compact_test")
+    val ctlTable = freshTable(s"${name}_compact_ctl")
+    val srcDir = java.nio.file.Files.createTempDirectory(name).toString + "/src"
+    def batch(b: Int) = Seq(
+      (100L + b, format, fresh(b)),
+      (200L + b, format, copied)).toDF("asset_id", "format", "payload")
+    // the parquet streaming source requires the dir to exist at start
+    batch(1).coalesce(1).write.parquet(srcDir)
+    val schema = batch(1).schema
+    val verdicts = scala.collection.mutable.Map[Long, String]()
+    val ctlVerdicts = scala.collection.mutable.Map[Long, String]()
+    val q = ingest(spark.readStream.schema(schema).parquet(srcDir), table, buckets) {
+      v => verdicts ++= v.collect().map(r => r.getLong(0) -> r.getString(1))
+    }
+    val ctl = ingest(spark.readStream.schema(schema).parquet(srcDir), ctlTable, 0) {
+      v => ctlVerdicts ++= v.collect().map(r => r.getLong(0) -> r.getString(1))
+    }
+    try {
+      for (b <- 1 to 4) {
+        if (b > 1) batch(b).coalesce(1).write.mode("append").parquet(srcDir)
+        q.processAllAvailable()
+        ctl.processAllAvailable()
+      }
+      assert(verdicts.toMap === ctlVerdicts.toMap)
+      assert(verdicts.toMap === Map(101L -> "accepted", 201L -> "accepted") ++
+        (2 to 4).flatMap(b =>
+          Seq(100L + b -> "accepted", 200L + b -> "dropped_vs_history")))
+      def rows(t: String) = spark.table(t).orderBy("asset_id", "band_key")
+        .collect().map(_.toString).toSeq
+      assert(rows(table) === rows(ctlTable))
+      val compacted = Compact.dataFileCount(spark, Compact.tableLocation(spark, table))
+      val unbounded = Compact.dataFileCount(spark, Compact.tableLocation(spark, ctlTable))
+      assert(compacted < unbounded,
+        s"auto-compaction left $compacted files, the control $unbounded")
+    } finally { q.stop(); ctl.stop() }
+  }
+
   test("streaming VIDEO near-dup ingest: clip verdicts, frame conjunction") {
     import spark.implicits._
     import java.nio.file.Files
-    val table = {
-      spark.sql("DROP TABLE IF EXISTS video_store_stream_test")
-      val loc = new java.io.File(
-        spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"),
-        "video_store_stream_test")
-      if (loc.exists()) {
-        import scala.reflect.io.Directory
-        new Directory(loc).deleteRecursively()
-      }
-      "video_store_stream_test"
-    }
+    val table = freshTable("video_store_stream_test")
     val srcDir = Files.createTempDirectory("video_stream").toString + "/src"
-    // 4-frame clips, stride 2 -> frames 0 and 2 sampled. `bright` shifts
-    // every frame's red by one level (byte-different, perceptually near);
-    // `lastFrameOff` perturbs ONLY frame 2's green — one drifted SAMPLED
-    // frame must kill the clip match (the conjunction rule)
-    def clip(base: Long, bright: Int, lastFrameOff: Int): Array[Byte] = {
-      val (w, h) = (12, 10)
-      val frames = (0 until 4).map { f =>
-        val r = ((base * 3 + 13 * f) % 180).toInt + bright
-        val g = (((base * 11 + 7 * f) % 200).toInt +
-          (if (f == 2) lastFrameOff else 0)) % 256
-        val b = ((base * 17 + 5 * f) % 256).toInt
-        AviCodec.encodeDibFrame(w, h)((x, y) => ((r + x + y) << 16) | (g << 8) | b)
-      }
-      AviCodec.encode(w, h, frames)
-    }
     val verdictLog = scala.collection.mutable.Map[Long, String]()
     val b1 = Seq(
       (1L, "avi", clip(5, 0, 0)),
@@ -196,34 +252,41 @@ class MultimodalSpec extends SparkSpec {
       assert(spark.table(table).select("asset_id").distinct().collect()
         .map(_.getLong(0)).toSet === Set(1L, 2L, 12L))
     } finally q.stop()
+
+    // replay: a restart WITHOUT a checkpoint reprocesses every source file
+    // as ONE batch against the populated store — no stored clip may
+    // self-match as dropped_vs_history, and nothing re-appends
+    val storeCount = spark.table(table).count()
+    val replayLog = scala.collection.mutable.Map[Long, String]()
+    val q2 = Multimodal.videoNearDupIngestStream(
+      spark.readStream.schema(b1.schema).parquet(srcDir), table, buckets = 4) {
+      v => replayLog ++= v.collect().map(r => r.getLong(0) -> r.getString(1))
+    }
+    try {
+      q2.processAllAvailable()
+      assert(replayLog.toMap === Map(
+        1L -> "accepted", 2L -> "accepted",
+        10L -> "dropped_in_batch", // partner is clip 1, now in the SAME batch
+        11L -> "dropped_in_batch", // partner is clip 2, same batch
+        12L -> "accepted",
+        13L -> "dropped_in_batch"))
+      assert(spark.table(table).count() === storeCount) // no double-append
+    } finally q2.stop()
+  }
+
+  test("streaming VIDEO ingest auto-compaction: verdicts and store match the control") {
+    assertCompactionMatchesControl("video_store", "avi",
+      b => clip(20L + 7 * b, 0, 0), clip(5, 0, 0)) {
+      (src, t, threshold) => Multimodal.videoNearDupIngestStream(src, t,
+        buckets = 4, compactFileThreshold = threshold)
+    }
   }
 
   test("streaming visual near-dup ingest: verdicts vs store, store grows per batch") {
     import spark.implicits._
     import java.nio.file.Files
-    val table = {
-      spark.sql("DROP TABLE IF EXISTS visual_store_stream_test")
-      val loc = new java.io.File(
-        spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"),
-        "visual_store_stream_test")
-      if (loc.exists()) {
-        import scala.reflect.io.Directory
-        new Directory(loc).deleteRecursively()
-      }
-      "visual_store_stream_test"
-    }
+    val table = freshTable("visual_store_stream_test")
     val srcDir = Files.createTempDirectory("visual_stream").toString + "/src"
-    // gradient renders via the same recipe as the q140 fixture: (base)
-    // parameterizes dims + colors; bright=1 shifts red one level (a
-    // byte-DIFFERENT payload with the same visual structure)
-    def render(base: Long, bright: Int): Array[Byte] = {
-      val w = (8 + (base * 5) % 16).toInt
-      val h = (8 + (base * 7) % 16).toInt
-      val r = (base % 199).toInt + bright
-      val g = ((base * 11) % 256).toInt
-      val b = ((base * 17) % 256).toInt
-      ImageIoCodec.encode(w, h, "png")((x, y) => ((r + x + y) << 16) | (g << 8) | b)
-    }
     val b1 = Seq(
       (1L, "png", render(1, 0)),
       (2L, "png", render(2, 0))).toDF("asset_id", "format", "payload")
@@ -259,6 +322,34 @@ class MultimodalSpec extends SparkSpec {
       assert(spark.table(table).select("asset_id").distinct().collect()
         .map(_.getLong(0)).toSet === Set(1L, 2L, 12L))
     } finally q.stop()
+
+    // replay: a restart WITHOUT a checkpoint reprocesses every source file
+    // as ONE batch against the populated store — no stored asset may
+    // self-match as dropped_vs_history, and nothing re-appends
+    val replayLog = scala.collection.mutable.ArrayBuffer[(Long, String)]()
+    val q2 = Multimodal.visualNearDupIngestStream(
+      spark.readStream.schema(b1.schema).parquet(srcDir), table, buckets = 4) {
+      v => replayLog ++= v.collect().map(r => r.getLong(0) -> r.getString(1))
+    }
+    try {
+      q2.processAllAvailable()
+      assert(replayLog.toMap === Map(
+        1L -> "accepted", 2L -> "accepted",
+        10L -> "dropped_in_batch", // partner is asset 1, now in the SAME batch
+        11L -> "dropped_in_batch", // partner is asset 2, same batch
+        12L -> "accepted",
+        13L -> "dropped_in_batch"))
+      assert(spark.table(table).count() === 12L) // no duplicate band rows
+    } finally q2.stop()
+  }
+
+  test("streaming visual ingest auto-compaction: verdicts and store match the control") {
+    // distinct bases give distinct dims, so no fresh asset collides
+    assertCompactionMatchesControl("visual_store", "png",
+      b => render(10L + b, 0), render(3, 0)) {
+      (src, t, threshold) => Multimodal.visualNearDupIngestStream(src, t,
+        buckets = 4, compactFileThreshold = threshold)
+    }
   }
 
   test("verdict algebra plan: LEFT SEMI existence joins, no inner pair join") {
@@ -294,17 +385,7 @@ class MultimodalSpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     import java.nio.file.Files
     val dir = "/root/testdata/sf0.001"
-    val table = {
-      spark.sql("DROP TABLE IF EXISTS visual_store_q156_test")
-      val loc = new java.io.File(
-        spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"),
-        "visual_store_q156_test")
-      if (loc.exists()) {
-        import scala.reflect.io.Directory
-        new Directory(loc).deleteRecursively()
-      }
-      "visual_store_q156_test"
-    }
+    val table = freshTable("visual_store_q156_test")
     val srcDir = Files.createTempDirectory("visual_q156_stream").toString + "/src"
     val corpus = imageAssetsWithNearDups(spark, dir).toDF()
     corpus.filter(col("asset_id") % 2 === 0)

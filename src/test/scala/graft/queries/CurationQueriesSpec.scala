@@ -25,21 +25,6 @@ class CurationQueriesSpec extends SparkSpec {
   private def words(prefix: String, n: Int): String =
     (0 until n).map(i => s"$prefix$i").mkString(" ")
 
-  /** Drop `table` from both the catalog and the warehouse directory — a
-    * crashed earlier run can leave the location behind with no catalog
-    * entry, which fails the next CREATE with LOCATION_ALREADY_EXISTS.
-    */
-  private def freshTable(table: String): String = {
-    spark.sql(s"DROP TABLE IF EXISTS $table")
-    val loc = new java.io.File(
-      spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"), table)
-    if (loc.exists()) {
-      import scala.reflect.io.Directory
-      new Directory(loc).deleteRecursively()
-    }
-    table
-  }
-
   test("q116: chunking is non-overlapping 20-token windows, tail dropped") {
     val a20 = words("a", 20) // chunk shared by docs 1 and 2
     val b20 = words("b", 20)
@@ -361,6 +346,52 @@ class CurationQueriesSpec extends SparkSpec {
         .exists(r => r.getString(0).contains("Bucket")),
         "compacted store lost its bucket spec")
     } finally { q.stop(); ctl.stop() }
+  }
+
+  test("streaming ingest recovers every compaction crash state the swap can leave") {
+    import graft.curation.Curation
+    // compactBucketedTable's swap: write staging → rename live to _old →
+    // rename staging to live → drop _old. A crash can leave any of these
+    val crashStates: Seq[(String, String => Unit)] = Seq(
+      "live renamed to _old, no live table" ->
+        (t => spark.sql(s"ALTER TABLE $t RENAME TO ${t}__compact_old")),
+      "both _old and live present" ->
+        (t => spark.sql(s"CREATE TABLE ${t}__compact_old USING parquet AS SELECT * FROM $t")),
+      "leftover staging table" ->
+        (t => spark.sql(s"CREATE TABLE ${t}__compact_staging USING parquet AS SELECT * FROM $t")))
+    for (((state, plant), i) <- crashStates.zipWithIndex) withClue(s"[$state] ") {
+      val table = freshTable(s"sig_store_crash_test_$i")
+      Seq("__compact_old", "__compact_staging").foreach(sfx => freshTable(table + sfx))
+      val srcDir = Files.createTempDirectory("neardup_crash").toString + "/src"
+      val b1 = Seq((1L, words("x", 30)), (2L, words("y", 30))).toDF("doc_id", "text")
+      b1.coalesce(1).write.parquet(srcDir)
+      val verdicts = scala.collection.mutable.Map[Long, String]()
+      val q = Curation.nearDupIngestStream(
+        spark.readStream.schema(b1.schema).parquet(srcDir), table, buckets = 4) {
+        v => verdicts ++= v.collect().map(r => r.getLong(0) -> r.getString(1))
+      }
+      try {
+        q.processAllAvailable()
+        assert(verdicts.toMap === Map(1L -> "accepted", 2L -> "accepted"))
+        plant(table)
+        // 10 near-dups stored doc 1 (history must survive the crash);
+        // 2 is re-sent as-is (its own stored rows must not self-match);
+        // 11 is new
+        Seq((10L, words("x", 30)), (2L, words("y", 30)), (11L, words("q", 30)))
+          .toDF("doc_id", "text")
+          .coalesce(1).write.mode("append").parquet(srcDir)
+        q.processAllAvailable()
+        assert(verdicts.toMap === Map(
+          1L -> "accepted", 2L -> "accepted",
+          10L -> "dropped_vs_history", 11L -> "accepted"))
+        // history kept, 11 admitted, 2 not re-appended: 3 docs x 4 bands
+        assert(spark.table(table).count() === 12L)
+        assert(spark.table(table).select("doc_id").distinct().collect()
+          .map(_.getLong(0)).toSet === Set(1L, 2L, 11L))
+        assert(!spark.catalog.tableExists(s"${table}__compact_old"))
+        assert(!spark.catalog.tableExists(s"${table}__compact_staging"))
+      } finally q.stop()
+    }
   }
 
   test("q127: store-backed ledger reconciles and kills planted copies") {
