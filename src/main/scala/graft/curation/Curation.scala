@@ -1787,17 +1787,7 @@ object Curation {
     val bakRoot = new Path(segRoot, ".forget_bak")
     // heal a crashed forget: a stratum stranded under backup (live
     // missing) is restored whole; leftover staging is discarded
-    if (fs.exists(bakRoot)) {
-      fs.listStatus(bakRoot).foreach { st =>
-        val live = new Path(segRoot, st.getPath.getName)
-        if (!fs.exists(live)) {
-          if (!fs.rename(st.getPath, live))
-            throw new java.io.IOException(
-              s"forget recovery failed: ${st.getPath} -> $live")
-        } else fs.delete(st.getPath, true)
-      }
-      fs.delete(bakRoot, true)
-    }
+    graft.io.Swap.restoreAll(fs, bakRoot, segRoot)
     if (fs.exists(stgRoot)) fs.delete(stgRoot, true)
     val idFrame = ids.select(col(idCol)).distinct()
     // ONE global pass finds the hit strata AND their removed-row counts
@@ -1831,7 +1821,7 @@ object Curation {
     // driver-blocking job per stratum to re-derive a number the oracle'd
     // tests already pin.
     // rewrite the hit strata CONCURRENTLY: each stratum's anti-join
-    // write + rename-rename swap touches only its own directory, so the
+    // write + Swap.promote touches only its own directory, so the
     // jobs are independent — submitting them from parallel driver
     // threads lets the scheduler overlap them instead of paying one
     // driver-blocking round trip per stratum (guide §1.2; the crash
@@ -1857,14 +1847,7 @@ object Curation {
       val stg = new Path(stgRoot, name)
       kept.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
         .parquet(stg.toString)
-      val bak = new Path(bakRoot, name)
-      if (!fs.rename(st.getPath, bak))
-        throw new java.io.IOException(s"backup rename failed: ${st.getPath} -> $bak")
-      if (!fs.rename(stg, st.getPath)) {
-        fs.rename(bak, st.getPath) // restore — the old stratum is intact
-        throw new java.io.IOException(s"swap failed: $stg -> ${st.getPath}")
-      }
-      fs.delete(bak, true)
+      graft.io.Swap.promote(fs, stg, st.getPath, new Path(bakRoot, name))
       hitCounts(name)
     } }
     val removed =

@@ -9,8 +9,8 @@ import org.apache.spark.sql.functions._
   * eventually dwarfs the scan itself.
   *
   * Strategy: size the output file count from the actual on-disk bytes
-  * (not row counts — row width varies wildly), then rewrite through
-  * [[Writers.upsertPath]]-style staging so readers never observe a
+  * (not row counts — row width varies wildly), then stage the rewrite
+  * and land it through [[Swap]] so readers never observe a
   * half-compacted directory. When a sort column is given the rewrite
   * lays files out by its range, keeping min/max stats selective (and
   * composing with [[graft.ops.ZOrder.writeZOrdered]] for 2-D layouts).
@@ -139,27 +139,29 @@ object Compact {
   }
 
   /** Rewrite `path` into ~`targetFileBytes` files (default 128 MiB, the
-    * usual HDFS-block-aligned choice). Returns (filesBefore, filesAfter).
-    * The rewrite stages then lands via [[Writers.swapInto]] — one shared
-    * crash-safety protocol: [[Writers.recoverAndClean]] first restores
-    * any backup a crashed previous run (of compaction OR upsert) left
-    * behind, so the dataset is never lost and never half-written.
+    * usual HDFS-block-aligned choice). Returns (filesBefore, filesAfter);
+    * no-ops (zero rewrites) when the file count is already at or under
+    * the target. Without `sortBy` the rewrite is a narrow `coalesce` (no
+    * shuffle — a compaction that shuffles 100 TB to save file handles is
+    * worse than the disease). The rewrite is staged beside `path` and
+    * lands through [[Swap.promote]], after [[Swap.restore]] healed any
+    * swap a crashed previous run (of compaction OR a [[Writers]] sink)
+    * left, so the dataset is never lost and never half-written.
     */
   def compactPath(spark: SparkSession, path: String,
       targetFileBytes: Long = 128L * 1024 * 1024,
       sortBy: Option[String] = None): (Int, Int) = {
-    val hPath = new org.apache.hadoop.fs.Path(path)
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    Writers.recoverAndClean(fs, hPath)
+    val (fs, live, staged, bak) = Writers.restoreSwap(spark, path)
     val before = dataFileCount(spark, path)
     val nOut = math.max(1, math.ceil(dataBytes(spark, path).toDouble / targetFileBytes).toInt)
+    if (before <= nOut) return (before, before)
     val df = spark.read.parquet(path)
     val laidOut = sortBy match {
       case Some(c) => df.repartitionByRange(nOut, col(c)).sortWithinPartitions(c)
-      case None => df.repartition(nOut)
+      case None => df.coalesce(nOut)
     }
-    laidOut.write.mode(SaveMode.Overwrite).parquet(path + Writers.StagingSuffix)
-    Writers.swapInto(fs, hPath)
+    laidOut.write.mode(SaveMode.Overwrite).parquet(staged.toString)
+    Swap.promote(fs, staged, live, bak)
     (before, dataFileCount(spark, path))
   }
 }

@@ -1,5 +1,6 @@
 package graft.io
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -7,7 +8,7 @@ import org.apache.spark.sql.functions._
   * ON-CONFLICT upsert services (SURVEY.md §2.1 S9/S10, §2.5 J6/J7) with
   * atomic columnar writes:
   *
-  *  - replace-mode DROP+INSERT → `overwrite` (write-then-swap; improved
+  *  - replace-mode DROP+INSERT → `overwrite` (stage, then [[Swap]]; improved
   *    failure semantics over the reference, which loses data if the insert
   *    loop dies after the DROP — documented divergence)
   *  - `ON CONFLICT (key) DO UPDATE` + inserted/updated tallies → left-anti
@@ -20,50 +21,17 @@ object Writers {
 
   final case class UpsertStats(inserted: Long, updated: Long, total: Long)
 
-  /** S9 replace mode — via the same staging-write + rename-rename swap as
-    * [[upsertPath]], so a crash mid-write never loses the previous
-    * dataset (a bare SaveMode.Overwrite deletes the old directory before
-    * the new job commits — exactly the reference's DROP-then-die hole
-    * this sink exists to close).
+  /** S9 replace mode: write `df` to the `._graft_staging` sibling, then
+    * [[Swap.promote]] it over `path` — a crash mid-write never loses the
+    * previous dataset, and a failed first write never leaves a live path
+    * (a bare SaveMode.Overwrite deletes the old directory before the new
+    * job commits — exactly the reference's DROP-then-die hole this sink
+    * exists to close).
     */
   def overwrite(df: DataFrame, path: String): Unit = {
-    val hPath = new org.apache.hadoop.fs.Path(path)
-    val fs = hPath.getFileSystem(
-      df.sparkSession.sparkContext.hadoopConfiguration)
-    recoverAndClean(fs, hPath)
-    if (!fs.exists(hPath)) df.write.mode(SaveMode.Overwrite).parquet(path)
-    else {
-      df.write.mode(SaveMode.Overwrite).parquet(path + StagingSuffix)
-      swapInto(fs, hPath)
-    }
-  }
-
-  /** Small-file compaction accounting. */
-  final case class CompactStats(filesBefore: Int, filesAfter: Int, bytes: Long)
-
-  /** Compact a parquet dataset's small files toward `targetBytes` output
-    * parts — the operational fix for the 100-TB small-file problem (every
-    * streaming/incremental sink accretes part files; each costs a task,
-    * an open, and a footer read on every later scan). One pass: size the
-    * file count from on-disk bytes, `coalesce` (narrow — no shuffle; a
-    * compaction that shuffles 100 TB to save file handles is worse than
-    * the disease), and rewrite through the same crash-safe staging swap
-    * as [[overwrite]]. No-ops (zero rewrites) when the layout is already
-    * at or under the target count.
-    */
-  def compact(spark: org.apache.spark.sql.SparkSession, path: String,
-      targetBytes: Long = 128L << 20): CompactStats = {
-    val hPath = new org.apache.hadoop.fs.Path(path)
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val parts = fs.listStatus(hPath)
-      .filter(s => s.isFile && s.getPath.getName.startsWith("part-"))
-    val bytes = parts.map(_.getLen).sum
-    val target = math.max(1, ((bytes + targetBytes - 1) / targetBytes).toInt)
-    if (parts.length <= target) CompactStats(parts.length, parts.length, bytes)
-    else {
-      overwrite(spark.read.parquet(path).coalesce(target), path)
-      CompactStats(parts.length, target, bytes)
-    }
+    val (fs, live, staged, bak) = restoreSwap(df.sparkSession, path)
+    df.write.mode(SaveMode.Overwrite).parquet(staged.toString)
+    Swap.promote(fs, staged, live, bak)
   }
 
   /** S10/J6 upsert: incoming rows win on key collision; returns the merged
@@ -106,80 +74,39 @@ object Writers {
     (merged, UpsertStats(inserted, updated, inserted + updated))
   }
 
-  private[io] val StagingSuffix = "._graft_staging"
-  private[io] val BakSuffix = "._graft_bak"
-
-  /** Crash recovery + stale-debris cleanup for the rename-rename swap
-    * protocol. MUST run before any existence check on `live`: a crash
-    * between the two renames leaves the data ONLY under the `.bak`
-    * sibling, and treating that state as "path doesn't exist" would
-    * silently drop every pre-crash row. Restores the backup when the
-    * live path is missing; deletes stale staging, and deletes the backup
-    * only when a live copy exists.
+  /** `path` with the staging and backup siblings every sink swap uses,
+    * after [[Swap.restore]] healed any swap a crashed run left — it MUST
+    * run before any existence check on `path`, or a crash between the two
+    * renames would read as "no dataset" and silently drop every pre-crash
+    * row. Stale staging needs no sweep: each write overwrites it.
     */
-  private[io] def recoverAndClean(fs: org.apache.hadoop.fs.FileSystem,
-      live: org.apache.hadoop.fs.Path): Unit = {
-    val tmp = new org.apache.hadoop.fs.Path(live.toString + StagingSuffix)
-    val bak = new org.apache.hadoop.fs.Path(live.toString + BakSuffix)
-    if (fs.exists(tmp)) fs.delete(tmp, true) // staging is never the only copy
-    if (fs.exists(bak)) {
-      if (fs.exists(live)) fs.delete(bak, true) // stale: live copy exists
-      else if (!fs.rename(bak, live)) // crashed mid-swap: bak IS the data
-        throw new java.io.IOException(s"backup restore failed: $bak -> $live")
-    }
+  private[io] def restoreSwap(spark: SparkSession, path: String)
+      : (FileSystem, Path, Path, Path) = {
+    val live = new Path(path)
+    val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val bak = new Path(path + "._graft_bak")
+    Swap.restore(fs, live, bak)
+    (fs, live, new Path(path + "._graft_staging"), bak)
   }
 
-  /** Rename-rename swap: live → `.bak`, staging → live, delete `.bak`
-    * last. At every point a FULL copy exists under `live` or its `.bak`
-    * sibling, and [[recoverAndClean]] restores the latter on the next
-    * run, so a crash never loses the dataset. On HDFS/local each rename
-    * is an atomic metadata operation; on object stores (S3A) rename is a
-    * non-atomic O(data) copy, so the guarantee there is recoverability,
-    * not atomicity — a transactional table format is the right tool when
-    * that matters.
-    */
-  private[io] def swapInto(fs: org.apache.hadoop.fs.FileSystem,
-      live: org.apache.hadoop.fs.Path): Unit = {
-    val tmp = new org.apache.hadoop.fs.Path(live.toString + StagingSuffix)
-    val bak = new org.apache.hadoop.fs.Path(live.toString + BakSuffix)
-    if (!fs.rename(live, bak))
-      throw new java.io.IOException(s"backup rename failed: $live -> $bak")
-    if (!fs.rename(tmp, live)) {
-      fs.rename(bak, live) // restore — the old data is still intact
-      throw new java.io.IOException(s"swap failed: $tmp -> $live")
-    }
-    fs.delete(bak, true)
-  }
-
-  /** Two-phase overwrite: materialize `df` to a staging sibling NOW,
-    * return a commit thunk that swaps it live LATER. For multi-table
+  /** Two-phase overwrite: materialize `df` to the staging sibling NOW,
+    * return a commit thunk that promotes it LATER. For multi-table
     * writes where derived tables must not become visible unless a primary
     * write commits first (e.g. analytics recomputed over a raw store the
     * upsert is about to replace): stage the derived tables, run the
     * primary write, then commit. A crash before commit leaves the OLD
     * derived tables — consistent with whatever raw state survived — and
-    * [[recoverAndClean]] removes the staging debris on the next run.
+    * the next write to the path overwrites the staging debris.
     */
   def overwriteStaged(df: DataFrame, path: String): () => Unit = {
-    val hPath = new org.apache.hadoop.fs.Path(path)
-    val fs = hPath.getFileSystem(
-      df.sparkSession.sparkContext.hadoopConfiguration)
-    recoverAndClean(fs, hPath)
-    df.write.mode(SaveMode.Overwrite).parquet(path + StagingSuffix)
-    () =>
-      if (fs.exists(hPath)) swapInto(fs, hPath)
-      else {
-        val tmp = new org.apache.hadoop.fs.Path(path + StagingSuffix)
-        if (!fs.rename(tmp, hPath))
-          throw new java.io.IOException(s"staged commit rename failed: $tmp -> $hPath")
-      }
+    val (fs, live, staged, bak) = restoreSwap(df.sparkSession, path)
+    df.write.mode(SaveMode.Overwrite).parquet(staged.toString)
+    () => Swap.promote(fs, staged, live, bak)
   }
 
   /** Upsert into a parquet path (read-merge-swap). For Delta-style storage
-    * this becomes MERGE INTO; on plain parquet the write goes to a
-    * staging sibling and lands via [[swapInto]] (see its crash-safety
-    * contract); [[recoverAndClean]] first restores any backup a crashed
-    * previous run left behind.
+    * this becomes MERGE INTO; on plain parquet the merged rows go to the
+    * staging sibling and land through [[Swap.promote]].
     *
     * Writing straight over the source path — even behind persist() — is
     * unsafe: any evicted cache block would recompute from the
@@ -187,36 +114,32 @@ object Writers {
     */
   def upsertPath(spark: SparkSession, incoming: DataFrame, path: String,
       key: Seq[String]): UpsertStats = {
-    val hPath = new org.apache.hadoop.fs.Path(path)
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recoverAndClean(fs, hPath)
-    if (!fs.exists(hPath)) {
-      // the first batch obeys the same key-unique contract as every later
-      // one: write to staging, check rows-vs-distinct from the WRITTEN
-      // files (not a second pass over the incoming lineage, which could
-      // be expensive or non-deterministic), and only then rename into
-      // place — a duplicate-key batch never becomes the live table
-      incoming.write.mode(SaveMode.Overwrite).parquet(path + StagingSuffix)
-      val tmp = new org.apache.hadoop.fs.Path(path + StagingSuffix)
-      val st = spark.read.parquet(tmp.toString)
-        .agg(count(lit(1)), countDistinct(struct(key.map(col): _*))).head()
-      if (st.getLong(0) != st.getLong(1)) {
-        fs.delete(tmp, true)
-        throw new IllegalArgumentException(
-          s"upsert batch contains duplicate keys (${st.getLong(0)} rows over " +
-            s"${st.getLong(1)} distinct keys); a set-oriented upsert has no row " +
-            "order to break the tie — deduplicate the batch first")
+    val (fs, live, staged, bak) = restoreSwap(spark, path)
+    val stats =
+      if (!fs.exists(live)) {
+        // the first batch obeys the same key-unique contract as every
+        // later one: stage it, check rows-vs-distinct from the WRITTEN
+        // files (not a second pass over the incoming lineage, which could
+        // be expensive or non-deterministic), and only then promote — a
+        // duplicate-key batch never becomes the live table
+        incoming.write.mode(SaveMode.Overwrite).parquet(staged.toString)
+        val st = spark.read.parquet(staged.toString)
+          .agg(count(lit(1)), countDistinct(struct(key.map(col): _*))).head()
+        if (st.getLong(0) != st.getLong(1)) {
+          fs.delete(staged, true)
+          throw new IllegalArgumentException(
+            s"upsert batch contains duplicate keys (${st.getLong(0)} rows over " +
+              s"${st.getLong(1)} distinct keys); a set-oriented upsert has no row " +
+              "order to break the tie — deduplicate the batch first")
+        }
+        UpsertStats(st.getLong(0), 0L, st.getLong(0))
+      } else {
+        val (merged, stats) = upsertByKey(spark.read.parquet(path), incoming, key)
+        merged.write.mode(SaveMode.Overwrite).parquet(staged.toString)
+        stats
       }
-      if (!fs.rename(tmp, hPath))
-        throw new java.io.IOException(s"initial write rename failed: $tmp -> $hPath")
-      UpsertStats(st.getLong(0), 0L, st.getLong(0))
-    } else {
-      val existing = spark.read.parquet(path)
-      val (merged, stats) = upsertByKey(existing, incoming, key)
-      merged.write.mode(SaveMode.Overwrite).parquet(path + StagingSuffix)
-      swapInto(fs, hPath)
-      stats
-    }
+    Swap.promote(fs, staged, live, bak)
+    stats
   }
 
   /** SCD2 upsert: keep full history with validity ranges instead of

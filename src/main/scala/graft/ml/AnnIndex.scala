@@ -1,5 +1,6 @@
 package graft.ml
 
+import graft.io.Swap
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -105,9 +106,9 @@ object AnnIndex {
     * only. Staging and backup live under DOT-prefixed siblings inside the
     * index root, which Spark's file listing ignores, so a concurrent
     * reader never sees a half-compacted cell and partition discovery is
-    * never polluted; the rename-rename swap (live → backup, staging →
-    * live, delete backup) keeps a full copy of the cell on disk at every
-    * instant, with [[recoverCells]] healing any crash window.
+    * never polluted; [[graft.io.Swap.promote]] keeps a full copy of the
+    * cell on disk at every instant, with [[recoverCells]] healing any
+    * crash window.
     * Returns (cellsCompacted, filesBefore, filesAfter).
     */
   def compactCells(spark: SparkSession, path: String,
@@ -136,14 +137,7 @@ object AnnIndex {
           spark.read.parquet(st.getPath.toString).coalesce(nOut)
             .write.mode(SaveMode.Overwrite).parquet(stg.toString)
           fs.mkdirs(bakRoot)
-          val bak = new Path(bakRoot, name)
-          if (!fs.rename(st.getPath, bak))
-            throw new java.io.IOException(s"backup rename failed: ${st.getPath} -> $bak")
-          if (!fs.rename(stg, st.getPath)) {
-            fs.rename(bak, st.getPath) // restore — the old cell is intact
-            throw new java.io.IOException(s"swap failed: $stg -> ${st.getPath}")
-          }
-          fs.delete(bak, true)
+          Swap.promote(fs, stg, st.getPath, new Path(bakRoot, name))
           compacted += 1
           after += parquetCount(st.getPath)
         } else after += files
@@ -170,12 +164,12 @@ object AnnIndex {
     *     with `partitionBy("cell")` into the staging sibling — every
     *     surviving row of every touched cell in a single write job.
     *  3. One RENAME PASS (filesystem RPCs, zero jobs): per affected cell,
-    *     live -> backup, staging -> live, drop backup — the
-    *     [[compactCells]] rename-rename discipline, so a full copy of
-    *     each touched cell exists on disk at every instant and
+    *     [[graft.io.Swap.promote]] of its staging child, so a full copy
+    *     of each touched cell exists on disk at every instant and
     *     [[recoverCells]] (run first here, like every maintenance op)
     *     heals any crash window. A cell whose every row is forgotten has
-    *     no staging child and ends ABSENT — an absent partition reads as
+    *     no staging child: it is renamed to its backup and the backup
+    *     deleted, so it ends ABSENT — an absent partition reads as
     *     empty everywhere (queries filter on cell values; the next
     *     append recreates the directory on arrival).
     *
@@ -212,15 +206,12 @@ object AnnIndex {
       val stg = new Path(stagingRoot, name)
       fs.mkdirs(bakRoot)
       val bak = new Path(bakRoot, name)
-      if (!fs.rename(cellPath, bak))
-        throw new java.io.IOException(s"backup rename failed: $cellPath -> $bak")
-      if (fs.exists(stg)) {
-        if (!fs.rename(stg, cellPath)) {
-          fs.rename(bak, cellPath) // restore — the old cell is intact
-          throw new java.io.IOException(s"swap failed: $stg -> $cellPath")
-        }
-      } // else: every row of this cell was forgotten — it ends absent
-      fs.delete(bak, true)
+      if (fs.exists(stg)) Swap.promote(fs, stg, cellPath, bak)
+      else { // every row of this cell was forgotten — it ends absent
+        if (!fs.rename(cellPath, bak))
+          throw new java.io.IOException(s"backup rename failed: $cellPath -> $bak")
+        fs.delete(bak, true)
+      }
     }
     fs.delete(stagingRoot, true)
     if (fs.exists(bakRoot) && fs.listStatus(bakRoot).isEmpty) fs.delete(bakRoot, true)
@@ -244,8 +235,8 @@ object AnnIndex {
 
   /** The retrain ACTION the q170 drift trigger asks for: retrain
     * codebooks + rebuild the whole index from `vecs` BESIDE the live one,
-    * then swap the index ROOT through the [[compactCells]] rename-rename
-    * discipline — live → backup, staging → live, delete backup. The
+    * then swap the index ROOT through [[graft.io.Swap.promote]] — live →
+    * backup, staging → live, delete backup. The
     * root-level swap is what keeps codebooks and inverted lists
     * CONSISTENT: they move as one directory, so no reader can ever pair
     * new codebooks with old cells (the per-subdir swap a naive rebuild
@@ -288,25 +279,17 @@ object AnnIndex {
       throw new java.io.IOException(
         s"staged rebuild at $stg has no $BuildMarker — incomplete build; " +
           "refusing to swap it over the live index")
-    val bak = rootBak(path)
-    if (fs.exists(live)) {
-      if (!fs.rename(live, bak))
-        throw new java.io.IOException(s"backup rename failed: $live -> $bak")
-    }
-    if (!fs.rename(stg, live)) {
-      if (fs.exists(bak)) fs.rename(bak, live) // restore — old index intact
-      throw new java.io.IOException(s"swap failed: $stg -> $live")
-    }
-    fs.delete(bak, true)
+    Swap.promote(fs, stg, live, rootBak(path))
     cb
   }
 
-  /** Crash recovery for [[compactCells]] and [[rebuildAndSwap]]: first
-    * heal a root swap (a crash between [[rebuildAndSwap]]'s two renames
-    * leaves the index ONLY under the backup sibling — restore it; a
-    * crash after the swap leaves a stale backup — delete it), then the
-    * per-cell form (a crash between [[compactCells]]'s renames leaves a
-    * cell's rows ONLY under `.compact_bak/<cell>` — restore it). Runs at
+  /** Crash recovery for [[compactCells]] and [[rebuildAndSwap]], through
+    * [[graft.io.Swap.restore]]: first heal a root swap (a crash between
+    * [[rebuildAndSwap]]'s two renames leaves the index ONLY under the
+    * backup sibling — restore it; a crash after the swap leaves a stale
+    * backup — delete it), then the per-cell form (a crash between
+    * [[compactCells]]'s renames leaves a cell's rows ONLY under
+    * `.compact_bak/<cell>` — restore it). Runs at
     * the top of [[compactCells]], [[append]] AND [[rebuildAndSwap]] (a
     * cheap existence probe when no swap debris exists).
     *
@@ -324,13 +307,7 @@ object AnnIndex {
     import org.apache.hadoop.fs.Path
     val live = new Path(path)
     val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val rootBk = rootBak(path)
-    if (fs.exists(rootBk)) {
-      if (!fs.exists(live)) {
-        if (!fs.rename(rootBk, live))
-          throw new java.io.IOException(s"root restore failed: $rootBk -> $live")
-      } else fs.delete(rootBk, true)
-    }
+    Swap.restore(fs, live, rootBak(path))
     val idx = new Path(indexDir(path))
     if (!fs.exists(idx)) return
     // an interrupted SPLIT rolls BACK: while the journal exists, the
@@ -374,25 +351,11 @@ object AnnIndex {
     }
     // journal-absent sidecar debris: a crash after the journal delete but
     // before debris cleanup leaves a stale sidecar backup/staging
-    if (fs.exists(coarseBakDir(path))) {
-      if (fs.exists(new Path(coarseDir(path)))) fs.delete(coarseBakDir(path), true)
-      else if (!fs.rename(coarseBakDir(path), new Path(coarseDir(path))))
-        throw new java.io.IOException("stale sidecar backup restore failed")
-    }
+    Swap.restore(fs, new Path(coarseDir(path)), coarseBakDir(path))
     if (fs.exists(coarseStagingDir(path))) fs.delete(coarseStagingDir(path), true)
     val stagingRoot = new Path(idx, StagingDir)
     if (fs.exists(stagingRoot)) fs.delete(stagingRoot, true)
-    val bakRoot = new Path(idx, BakDir)
-    if (fs.exists(bakRoot)) {
-      fs.listStatus(bakRoot).foreach { st =>
-        val live = new Path(idx, st.getPath.getName)
-        if (!fs.exists(live)) {
-          if (!fs.rename(st.getPath, live))
-            throw new java.io.IOException(s"backup restore failed: ${st.getPath} -> $live")
-        } else fs.delete(st.getPath, true)
-      }
-      fs.delete(bakRoot, true)
-    }
+    Swap.restoreAll(fs, new Path(idx, BakDir), idx)
   }
 
   /** The persisted (vec_id, codes, cell) rows — the documented index

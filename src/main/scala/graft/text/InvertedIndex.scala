@@ -194,21 +194,16 @@ object InvertedIndex {
     val stats = Seq((st.getLong(0) - removedDocs.getLong(0),
       st.getLong(1) - removedDocs.getLong(1))).toDF("n", "total_tokens")
     // rewrite BESIDE the root (a dot-prefixed sibling — staging inside
-    // the root would travel with it through the first rename), then the
-    // rename-rename swap: readers never see a half state, [[recover]]
-    // heals the between-renames window. The new root has no deletes/
-    // directory — compaction clears the tombstones by construction.
+    // the root would travel with it through the first rename), then
+    // [[Swap.promote]]: readers never see a half state, [[recover]] heals
+    // the between-renames window. Only compact clears the staging, right
+    // before restaging. The new root has no deletes/ directory —
+    // compaction clears the tombstones by construction.
     val root = new org.apache.hadoop.fs.Path(path)
     val staged = stagingPath(root)
+    fs.delete(staged, true)
     writeLayout(spark, staged.toString, joinDf(kept, df), stats)
-    val bak = bakPath(root)
-    if (!fs.rename(root, bak))
-      throw new java.io.IOException(s"compact backup rename failed: $root")
-    if (!fs.rename(staged, root)) {
-      fs.rename(bak, root)
-      throw new java.io.IOException(s"compact swap failed: $staged")
-    }
-    fs.delete(bak, true)
+    graft.io.Swap.promote(fs, staged, root, bakPath(root))
   }
 
   private def stagingPath(root: org.apache.hadoop.fs.Path) =
@@ -216,22 +211,17 @@ object InvertedIndex {
   private def bakPath(root: org.apache.hadoop.fs.Path) =
     new org.apache.hadoop.fs.Path(root.getParent, s".${root.getName}.compact_bak")
 
-  /** Heal a crashed [[compact]]: root missing with backup present is the
-    * between-renames window — restore the backup whole; stale staging is
-    * discarded. Run from every entry point (the AnnIndex discipline).
+  /** Heal a crashed [[compact]] through [[graft.io.Swap.restore]]: root
+    * missing with backup present is the between-renames window — the
+    * backup is restored whole; a stale backup is dropped. Run from every
+    * entry point (the AnnIndex discipline). Staging is left alone: a
+    * query or delete landing between the staged postings and stats jobs
+    * of an in-flight [[compact]] must not delete what it wrote.
     */
   def recover(spark: SparkSession, path: String): Unit = {
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val bak = bakPath(root)
-    if (fs.exists(bak)) {
-      if (!fs.exists(root)) {
-        if (!fs.rename(bak, root))
-          throw new java.io.IOException(s"compact recovery failed: $bak -> $root")
-      } else fs.delete(bak, true)
-    }
-    val stg = stagingPath(root)
-    if (fs.exists(stg)) fs.delete(stg, true)
+    graft.io.Swap.restore(fs, root, bakPath(root))
   }
 
   /** Exact PHRASE search over the positional postings: a doc matches

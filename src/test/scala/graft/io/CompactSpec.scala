@@ -49,4 +49,24 @@ class CompactSpec extends SparkSpec {
       case _ =>
     }
   }
+
+  test("compactPath merges small files, preserves data, no-ops at target") {
+    val dir = java.nio.file.Files.createTempDirectory("compact").toString + "/t"
+    spark.range(0, 10000).selectExpr("id", "id * 2 AS v")
+      .repartition(20).write.parquet(dir)
+    def partFiles = new java.io.File(dir).listFiles()
+      .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
+      .map(_.getName).toSet
+    assert(partFiles.size == 20)
+    assert(Compact.compactPath(spark, dir, targetFileBytes = 1L << 30) == ((20, 1)))
+    val compacted = partFiles
+    assert(compacted.size == 1)
+    val back = spark.read.parquet(dir)
+    assert(back.count() == 10000)
+    assert(back.agg(sum("v")).head().getLong(0)
+      == 9999L * 10000L) // sum 2*id over 0..9999
+    // second call: already at target -> zero rewrites, same file
+    assert(Compact.compactPath(spark, dir, targetFileBytes = 1L << 30) == ((1, 1)))
+    assert(partFiles == compacted)
+  }
 }

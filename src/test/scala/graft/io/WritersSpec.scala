@@ -166,22 +166,18 @@ class WritersSpec extends SparkSpec {
     }
   }
 
-  test("compact merges small files, preserves data, no-ops at target") {
-    val dir = java.nio.file.Files.createTempDirectory("compact").toString + "/t"
-    spark.range(0, 10000).selectExpr("id", "id * 2 AS v")
-      .repartition(20).write.parquet(dir)
-    def partFiles = new java.io.File(dir).listFiles()
-      .count(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-    assert(partFiles == 20)
-    val s1 = Writers.compact(spark, dir, targetBytes = 1L << 30)
-    assert(s1.filesBefore == 20 && s1.filesAfter == 1)
-    assert(partFiles == 1)
-    val back = spark.read.parquet(dir)
-    assert(back.count() == 10000)
-    assert(back.agg(org.apache.spark.sql.functions.sum("v")).head().getLong(0)
-      == 9999L * 10000L) // sum 2*id over 0..9999
-    // second call: already at target -> zero rewrites
-    val s2 = Writers.compact(spark, dir, targetBytes = 1L << 30)
-    assert(s2.filesBefore == 1 && s2.filesAfter == 1)
+  test("a failed first write leaves no live path (overwrite and upsertPath)") {
+    import org.apache.spark.sql.functions._
+    // fails at execution, on one row, after the write job has started
+    val failing = spark.range(0, 10).select(
+      when(col("id") === 5, raise_error(lit("boom"))).otherwise(col("id")).as("id"))
+    for ((name, write) <- Seq[(String, String => Unit)](
+        "overwrite" -> (dir => Writers.overwrite(failing, dir)),
+        "upsertPath" -> (dir => { Writers.upsertPath(spark, failing, dir, Seq("id")); () }))) {
+      val dir = Files.createTempDirectory("failedfirst").toString + "/t"
+      intercept[Exception](write(dir))
+      assert(!new java.io.File(dir).exists(),
+        s"$name: a failed first write left a live path behind")
+    }
   }
 }

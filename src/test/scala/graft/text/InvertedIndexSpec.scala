@@ -141,4 +141,26 @@ class InvertedIndexSpec extends SparkSpec
     val after = rows(InvertedIndex.query(spark, s"$base/idx", Seq("spark")))
     assert(after == before)
   }
+
+  test("a read never deletes an in-flight compaction's staging") {
+    import spark.implicits._
+    val d = sf("documents", dir)
+    val base = Files.createTempDirectory("inv_idx_staging").toString
+    InvertedIndex.build(spark, d, s"$base/idx")
+    // what a compact between its staged postings and stats jobs has written
+    val sentinel = new java.io.File(s"$base/.idx.compact_staging/sentinel")
+    assert(sentinel.getParentFile.mkdirs() && sentinel.createNewFile())
+    val victims = InvertedIndex.query(spark, s"$base/idx", Seq("spark"))
+      .limit(3).select("doc_id").collect().map(_.getLong(0)).toSeq
+    assert(sentinel.exists(), "a query deleted an in-flight compaction's staging")
+    InvertedIndex.delete(spark, s"$base/idx", victims.toDF("doc_id"))
+    InvertedIndex.compact(spark, s"$base/idx")
+    InvertedIndex.build(spark,
+      d.filter(!col("doc_id").isin(victims: _*)), s"$base/clean")
+    for (terms <- Seq(Seq("spark", "window", "hash"), Seq("table")))
+      assert(rows(InvertedIndex.query(spark, s"$base/idx", terms)) ==
+        rows(InvertedIndex.query(spark, s"$base/clean", terms)),
+        s"compacted index diverged from the clean build on $terms")
+    assert(!new java.io.File(s"$base/.idx.compact_staging").exists())
+  }
 }
