@@ -6,7 +6,8 @@ import org.apache.spark.sql.functions._
 /** Benchmark main — runs the headline queries on SPARK_GRAFT_SF_DIR and
   * STREAMS one JSON line per completed row, a cumulative board line after
   * every row, and the final ONE-line board
-  * {"metric":"total",…,"queries":{name:sec,…},"partial":false} (VERDICT
+  * {"metric":"total",…,"queries":{name:sec,…},"metrics":{name:value,…},
+  * "partial":false} (VERDICT
   * r16 #1: the r16 driver run timed out and yielded `parsed: null`
   * because the old main printed nothing until the very end — any prefix
   * of this run now contains a complete, parsable cumulative board, and
@@ -17,7 +18,9 @@ import org.apache.spark.sql.functions._
   * Each query is forced through full execution with
   * `queryExecution.toRdd.count()` — unlike `df.count()`, this materializes
   * every output row (a bare count() lets Catalyst prune the query to a
-  * row-count scan, which would fake the numbers).
+  * row-count scan, which would fake the numbers). After each registry
+  * sample, one {"metric":"profile",…} line ([[QueryProfile]]) attributes
+  * its time to jobs, stages and plan operators.
   */
 object Bench {
 
@@ -60,12 +63,26 @@ object Bench {
       }
     } catch { case scala.util.control.NonFatal(_) => None }
 
+  /** Rows whose value is not seconds: bytes (`_mb`), driver round counts
+    * (`_rounds`) and the skew micro's salt factor. The board keeps them in
+    * its `"metrics"` map, apart from the seconds in `"queries"`.
+    */
+  private def isMetric(name: String): Boolean =
+    name.endsWith("_mb") || name.endsWith("_rounds") || name == "skew_salt_factor"
+
+  /** `"queries":{…},"metrics":{…}` for `kv`: seconds, then the rest. */
+  private def byUnit(kv: Iterable[(String, Double)]): String = {
+    def obj(xs: Iterable[(String, Double)]) =
+      xs.map { case (k, v) => "\"" + k + f"\":$v%.3f" }.mkString("{", ",", "}")
+    val (metrics, secs) = kv.partition { case (k, _) => isMetric(k) }
+    s""""queries":${obj(secs)},"metrics":${obj(metrics)}"""
+  }
+
   private def boardLine(partial: Boolean): String = {
-    val qs = rows.map { case (k, v) => "\"" + k + f"\":$v%.3f" }.mkString("{", ",", "}")
     val errs = failedRows.map("\"" + _ + "\"").mkString("[", ",", "]")
     val total = rows.collect { case (k, v) if registryNames(k) => v }.sum
     val wall = (System.nanoTime() - wallT0) / 1e9
-    f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"errors":$errs,"sf":"$sfDirTag","partial":$partial,$provenance,"startup_sec":$startupSec%.1f,"wall_sec":$wall%.1f}"""
+    f"""{"metric":"total","value":$total%.3f,"unit":"sec",${byUnit(rows)},"errors":$errs,"sf":"$sfDirTag","partial":$partial,$provenance,"startup_sec":$startupSec%.1f,"wall_sec":$wall%.1f}"""
   }
 
   /** Atomic board rewrite: a kill between write and move leaves the last
@@ -91,7 +108,8 @@ object Bench {
     if (isRegistry) registryNames += name
     failedRows -= name
     val t = (System.nanoTime() - wallT0) / 1e9
-    println(f"""{"metric":"row","name":"$name","sec":$sec%.3f,"min":$v%.3f,"t":$t%.1f}""")
+    val key = if (isMetric(name)) "value" else "sec"
+    println(f"""{"metric":"row","name":"$name","$key":$sec%.3f,"min":$v%.3f,"t":$t%.1f}""")
     val board = boardLine(partial = true)
     println(board)
     System.out.flush()
@@ -132,7 +150,8 @@ object Bench {
     // main-entry → Spark warm: everything before the first timed row
     startupSec = (System.nanoTime() - wallT0) / 1e9
 
-    // dev mode: SPARK_GRAFT_MICROS_ONLY=skew|bucket|zorder (comma-separable)
+    // dev mode: SPARK_GRAFT_MICROS_ONLY=skew|bucket|zorder|bpe|codec|sketch
+    // (comma-separable)
     // runs just the named layout micros — iterating on one demo shouldn't
     // cost a 20-minute full-registry pass
     sys.env.get("SPARK_GRAFT_MICROS_ONLY").foreach { which =>
@@ -143,15 +162,9 @@ object Bench {
         (if (sel("zorder")) benchZOrder(spark) else Nil) ++
         (if (sel("bpe")) benchBpeRounds(spark, sfDir) else Nil) ++
         (if (sel("codec")) benchCodec(spark, sfDir) else Nil) ++
-        (if (sel("sketch")) benchDistinctSketch(spark, sfDir) else Nil) ++
-        (if (sel("ccnet")) benchCcnetStages(spark, sfDir) else Nil) ++
-        (if (sel("qc")) benchQcStages(spark, sfDir) else Nil) ++
-        (if (sel("invmerge")) benchInvIndexMergeStages(spark, sfDir) else Nil) ++
-        (if (sel("video")) benchVideoStages(spark, sfDir) else Nil) ++
-        (if (sel("lifecycle")) benchLifecycleStages(spark, sfDir) else Nil)
-      val mq = micros.map { case (k, v) => "\"" + k + f"\":$v%.3f" }.mkString("{", ",", "}")
+        (if (sel("sketch")) benchDistinctSketch(spark, sfDir) else Nil)
       spark.stop()
-      println(s"""{"metric":"micros","queries":$mq}""")
+      println(s"""{"metric":"micros",${byUnit(micros)}}""")
       return
     }
 
@@ -222,15 +235,24 @@ object Bench {
         afterAnn.filterNot(textFamily.contains)
       } else afterAnn
     }
+    // Each sample runs under a job tag; after its time is recorded (outside
+    // the timed region) one {"metric":"profile",…} line says where the time
+    // went: its jobs, stages, tasks, shuffle and spill, and the operators of
+    // its executed plan (QueryProfile).
     for (_ <- 1 to 2; name <- timed; fn <- SparkEntry.queries.get(name)) {
       // queries that persist() an intermediate (q35, q113) would
       // otherwise serve run 2 from CacheManager — a cached-read time,
       // not a query time — and pin blocks across the whole registry
       spark.catalog.clearCache()
       val t0 = System.nanoTime()
-      try {
-        fn(spark, sfDir).queryExecution.toRdd.count()
+      val ran = try {
+        val (df, tag) = QueryProfile.tagged(spark, name) {
+          val df = fn(spark, sfDir)
+          df.queryExecution.toRdd.count()
+          df
+        }
         record(name, (System.nanoTime() - t0) / 1e9, isRegistry = true)
+        Some((df, tag))
       } catch {
         // NonFatal: an OOM here poisons every subsequent timing — die.
         // A failure only lists under "errors" while NO pass succeeded
@@ -239,6 +261,15 @@ object Bench {
         case scala.util.control.NonFatal(e) =>
           System.err.println(s"[bench] $name failed: $e")
           if (!rows.contains(name)) failedRows += name
+          None
+      }
+      // a profile that cannot be read is reported, never a failed row
+      ran.foreach { case (df, tag) =>
+        try println(QueryProfile.read(spark, tag, Some(df)).json(name))
+        catch {
+          case scala.util.control.NonFatal(e) =>
+            System.err.println(s"[bench] $name profile unreadable: $e")
+        }
       }
     }
     // ---- skew-resilience demo: one hot key holding ~50% of the fact side.
@@ -278,30 +309,6 @@ object Bench {
     // its time reads as "the approx face"; this row times the sketch-only
     // path a production report actually runs)
     benchDistinctSketch(spark, sfDir).foreach { case (k, v) => record(k, v, isRegistry = false) }
-
-    // ---- CCNet chain, stage-attributed: q191 is the registry's most
-    // expensive composed row; these rows (the q214/text_index_build
-    // pattern) name the stage when it regresses, the composed row stays
-    benchCcnetStages(spark, sfDir).foreach { case (k, v) => record(k, v, isRegistry = false) }
-
-    // ---- q267 quality-classifier inference, stage-attributed (same
-    // rationale: the most expensive previously-un-attributed row)
-    benchQcStages(spark, sfDir).foreach { case (k, v) => record(k, v, isRegistry = false) }
-
-    // ---- q215 inverted-index MERGE, stage-attributed (VERDICT r16 #3:
-    // the board's heaviest genuine idle-to-idle mover, 6.98→13.39 s)
-    benchInvIndexMergeStages(spark, sfDir).foreach { case (k, v) => record(k, v, isRegistry = false) }
-
-    // ---- video ingest-verdict pipeline, stage-attributed (VERDICT r17 #1:
-    // the board's heaviest surviving family — these rows say whether the
-    // cost is container synthesis, the decode walk, banding, or the
-    // verdict joins)
-    benchVideoStages(spark, sfDir).foreach { case (k, v) => record(k, v, isRegistry = false) }
-
-    // ---- index/corpus lifecycle rows, stage-attributed (VERDICT r17 #6:
-    // q216/q182/q209 residual ~3 s each — these rows split the forget /
-    // rebuild lifecycles into build / delete / compact / swap / read)
-    benchLifecycleStages(spark, sfDir).foreach { case (k, v) => record(k, v, isRegistry = false) }
 
     val line = boardLine(partial = false)
     // stop FIRST: once the context is down no background thread can emit
@@ -541,18 +548,6 @@ object Bench {
     }
   }
 
-  /** Max task duration across a run — the STRAGGLER metric. Wall time on
-    * a 32-core box understates skew (31 idle cores don't slow the clock
-    * much and host noise swamps the signal); the serialized reducer shows
-    * up directly as the longest task, and that task IS the job's critical
-    * path on a real cluster where every core has queued work.
-    */
-  private final class MaxTaskListener extends org.apache.spark.scheduler.SparkListener {
-    @volatile var maxMs: Long = 0L
-    override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-      synchronized { if (t.taskInfo != null && t.taskInfo.duration > maxMs) maxMs = t.taskInfo.duration }
-  }
-
   private def benchSkew(spark: SparkSession, sfDir: String): Seq[(String, Double)] = {
     // 60M generated rows, one key holding 50% (30M): sized so the hot
     // reducer's sort dominates every per-row overhead the mitigation adds
@@ -586,24 +581,25 @@ object Bench {
         if (salted) graft.ops.SkewJoin.saltedInnerJoin(skewed, dim, Seq("k"), saltFactor)
         else skewed.join(dim, Seq("k"))
       val agged = joined.agg(sum(col("v") * col("w")))
-      val listener = new MaxTaskListener
-      spark.sparkContext.addSparkListener(listener)
       // aged-heap hygiene: in a full-registry run this micro executes in a
       // long-lived JVM — don't bill earlier demos' garbage to this variant
       System.gc()
       val t0 = System.nanoTime()
-      agged.queryExecution.toRdd.count()
+      val (_, tag) = QueryProfile.tagged(spark, "skew") {
+        agged.queryExecution.toRdd.count()
+      }
       val dt = (System.nanoTime() - t0) / 1e9
-      // task-end events are dispatched async; drain the bus before reading
-      // the straggler max (a fixed sleep under-reports on loaded hosts)
-      org.apache.spark.graft.ListenerDrain.drain(spark.sparkContext, 10000L)
-      spark.sparkContext.removeSparkListener(listener)
       spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
       spark.conf.unset("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes")
       spark.conf.unset("spark.sql.adaptive.advisoryPartitionSizeInBytes")
       spark.conf.unset("spark.sql.adaptive.forceOptimizeSkewedJoin")
       spark.conf.set("spark.sql.adaptive.enabled", true)
-      (dt, listener.maxMs / 1e3)
+      // max task duration: the STRAGGLER metric. Wall time on a 32-core
+      // box understates skew (31 idle cores don't slow the clock much and
+      // host noise swamps the signal); the serialized reducer shows up
+      // directly as the longest task, and that task IS the job's critical
+      // path on a real cluster where every core has queued work
+      (dt, QueryProfile.read(spark, tag).taskMaxMs / 1e3)
     }
 
     // interleaved rounds — see benchBucketed for why
@@ -648,338 +644,33 @@ object Bench {
   private def benchDistinctSketch(spark: SparkSession, sfDir: String): Seq[(String, Double)] =
     try {
       val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-      val shuffleBytes = new java.util.concurrent.atomic.AtomicLong(0)
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-          if (t.taskMetrics != null)
-            shuffleBytes.addAndGet(t.taskMetrics.shuffleWriteMetrics.bytesWritten)
-          ()
-      }
-      spark.sparkContext.addSparkListener(listener)
-      try {
-        def run(df: => org.apache.spark.sql.DataFrame): (Double, Double) = {
-          // aged-heap hygiene (the bpe256/skew discipline): this micro
-          // runs late in the full-registry JVM; r15's committed board
-          // read 36.3 s here against 2.86 s idle — don't bill earlier
-          // demos' garbage (or a collection landing mid-region) to the
-          // row that exists to look cheap
-          System.gc()
-          shuffleBytes.set(0)
-          val t0 = System.nanoTime()
+      def run(df: => org.apache.spark.sql.DataFrame): (Double, Double) = {
+        // aged-heap hygiene (the bpe256/skew discipline): this micro
+        // runs late in the full-registry JVM; r15's committed board
+        // read 36.3 s here against 2.86 s idle — don't bill earlier
+        // demos' garbage (or a collection landing mid-region) to the
+        // row that exists to look cheap
+        System.gc()
+        val t0 = System.nanoTime()
+        val (_, tag) = QueryProfile.tagged(spark, "distinct_ngrams") {
           df.queryExecution.toRdd.count()
-          val dt = (System.nanoTime() - t0) / 1e9
-          org.apache.spark.graft.ListenerDrain.drain(spark.sparkContext, 10000L)
-          (dt, shuffleBytes.get() / 1e6)
         }
-        val (_, exactMb) = run(
-          graft.text.Eval.distinctNgramStats(docs, "source", "text", maxN = 3))
-        val (t1, sketchMb) = run(
-          graft.text.Eval.distinctNgramStatsApprox(docs, "source", "text", maxN = 3))
-        val (t2, _) = run(
-          graft.text.Eval.distinctNgramStatsApprox(docs, "source", "text", maxN = 3))
-        Seq(
-          "distinct_ngrams_sketch" -> math.min(t1, t2),
-          "distinct_ngrams_sketch_shuffle_mb" -> sketchMb,
-          "distinct_ngrams_exact_shuffle_mb" -> exactMb)
-      } finally spark.sparkContext.removeSparkListener(listener)
+        val dt = (System.nanoTime() - t0) / 1e9
+        (dt, QueryProfile.read(spark, tag).shuffleWriteBytes / 1e6)
+      }
+      val (_, exactMb) = run(
+        graft.text.Eval.distinctNgramStats(docs, "source", "text", maxN = 3))
+      val (t1, sketchMb) = run(
+        graft.text.Eval.distinctNgramStatsApprox(docs, "source", "text", maxN = 3))
+      val (t2, _) = run(
+        graft.text.Eval.distinctNgramStatsApprox(docs, "source", "text", maxN = 3))
+      Seq(
+        "distinct_ngrams_sketch" -> math.min(t1, t2),
+        "distinct_ngrams_sketch_shuffle_mb" -> sketchMb,
+        "distinct_ngrams_exact_shuffle_mb" -> exactMb)
     } catch {
       case scala.util.control.NonFatal(e) =>
         System.err.println(s"[bench] sketch distinct-n micro failed: $e"); Seq.empty
-    }
-
-  /** q191's six-stage CCNet chain with per-stage wall attribution: each
-    * stage materializes (toRdd.count) against its ALREADY-materialized
-    * inputs, so a regression names the stage instead of the chain. Same
-    * code path as the registry row — the stage frames are the exact
-    * pinned intermediates q191 builds; the composed row's time stays the
-    * end-to-end truth (these rows do NOT sum to it exactly: the composed
-    * plan shares scans the stage-grain materialization repeats).
-    */
-  private def benchCcnetStages(spark: SparkSession, sfDir: String): Seq[(String, Double)] = {
-    import org.apache.spark.sql.DataFrame
-    import org.apache.spark.storage.StorageLevel
-    val pinned = scala.collection.mutable.ListBuffer[DataFrame]()
-    def mat(df: DataFrame): (DataFrame, Double) = {
-      val t0 = System.nanoTime()
-      val p = df.persist(StorageLevel.MEMORY_AND_DISK)
-      p.queryExecution.toRdd.count()
-      pinned += p
-      (p, (System.nanoTime() - t0) / 1e9)
-    }
-    try {
-      val d = spark.read.parquet(s"$sfDir/documents.parquet")
-      // stage 1: span-removal clean — the corpus checkpoint
-      val (cleaned, tClean) = mat(graft.curation.Curation.removeDupSpans(d)
-        .join(d.select("doc_id", "lang"), Seq("doc_id"))
-        .select(col("doc_id"), col("lang"), col("n_kept"),
-          col("clean_text").as("text")))
-      val tgt = cleaned.filter(col("doc_id") % 2 === 1)
-      val ref = cleaned.filter(col("doc_id") % 2 === 0)
-      // stage 2: quality funnel
-      val (funnelIds, tFunnel) = mat(
-        graft.curation.Curation.funnelSurvivors(tgt).select("doc_id"))
-      // stage 3: bloom decontamination
-      val toks0 = split(trim(col("text")), "\\s+")
-      val bench = d.filter(col("doc_id") % 50 === 0)
-        .select(array_join(
-          slice(toks0, lit(3), greatest(size(toks0) - 2, lit(0))), " ").as("btext"))
-      val (deconIds, tDecon) = mat(graft.curation.Curation
-        .bloomDecontaminateSurvivors(
-          tgt.select("doc_id", "text"), bench, benchTextCol = "btext")
-        .select("doc_id"))
-      val surv12 = funnelIds.join(deconIds, Seq("doc_id"), "left_semi")
-      // stage 4: cross-surprisal LM scoring
-      val (scores12, tSurprisal) = mat(graft.curation.Curation
-        .crossSurprisalScores(tgt, ref, strataCol = "lang")
-        .join(surv12, Seq("doc_id"), "left_semi"))
-      // stage 5: tercile keep
-      val (keepIds, tTerciles) = mat(
-        graft.curation.Curation.tercileKeepIds(scores12, "lang"))
-      // stage 6: token budget + packing + per-lang report
-      val counted = tgt.select(col("lang"), col("doc_id"), col("n_kept").as("n"))
-        .join(keepIds, Seq("doc_id"), "left_semi")
-        .filter(col("n") > 0)
-      val t0 = System.nanoTime()
-      val k4 = graft.curation.Curation.cumsumByStratum(counted, "lang", "doc_id", "n")
-        .filter(col("cum") <= 4000)
-      graft.curation.Curation.packSegments(k4.select("lang", "doc_id", "n"),
-          seqTokens = 256)
-        .groupBy("lang").agg(countDistinct("seq").as("sequences"),
-          sum("seg_len").as("packed_tokens"))
-        .queryExecution.toRdd.count()
-      val tPack = (System.nanoTime() - t0) / 1e9
-      Seq(
-        "ccnet_stage_clean" -> tClean,
-        "ccnet_stage_funnel" -> tFunnel,
-        "ccnet_stage_decon" -> tDecon,
-        "ccnet_stage_surprisal" -> tSurprisal,
-        "ccnet_stage_terciles" -> tTerciles,
-        "ccnet_stage_pack_report" -> tPack)
-    } catch {
-      case scala.util.control.NonFatal(e) =>
-        System.err.println(s"[bench] ccnet stage micro failed: $e"); Seq.empty
-    } finally {
-      pinned.foreach(p => { p.unpersist(); () })
-    }
-  }
-
-  /** q267's fastText-shaped inference with per-stage wall attribution
-    * (the benchCcnetStages pattern): the registry row fuses bigram
-    * construction, feature hashing, weight lookup and the scored global
-    * sort into one row-local expression — at 7.9 s idle it was the most
-    * expensive un-attributed row left (VERDICT r15 #8). Each stage here
-    * materializes against its ALREADY-pinned predecessor so a regression
-    * names the stage; the composed registry row stays the end-to-end
-    * truth (stage rows do not sum to it exactly — the fused plan never
-    * materializes the intermediate gram/bucket arrays these pins do).
-    * The expressions are the SHARED [[graft.text.QualityClassifier]]
-    * builders q267 itself composes, applied here at stage grain — a
-    * recipe change cannot decouple these rows from the registry row.
-    */
-  private def benchQcStages(spark: SparkSession, sfDir: String): Seq[(String, Double)] = {
-    import org.apache.spark.sql.DataFrame
-    import org.apache.spark.storage.StorageLevel
-    val pinned = scala.collection.mutable.ListBuffer[DataFrame]()
-    def mat(df: DataFrame): (DataFrame, Double) = {
-      val t0 = System.nanoTime()
-      val p = df.persist(StorageLevel.MEMORY_AND_DISK)
-      p.queryExecution.toRdd.count()
-      pinned += p
-      (p, (System.nanoTime() - t0) / 1e9)
-    }
-    try {
-      import graft.text.QualityClassifier
-      val d = spark.read.parquet(s"$sfDir/documents.parquet")
-      val toks = graft.text.TextFunctions.tokens(col("text"))
-      // stage 1: tokenize + word-bigram feature construction
-      val (grams, tGrams) = mat(
-        d.select(col("doc_id"), col("lang"), QualityClassifier.bigrams(toks).as("grams")))
-      // stage 2: hashing-trick bucket ids (md5 per gram — the hot md5)
-      val (buckets, tHash) = mat(grams.select(col("doc_id"), col("lang"),
-        transform(col("grams"), g => QualityClassifier.bucket(g)).as("buckets")))
-      // stage 3: content-addressed weights + dot product
-      val (scored, tScore) = mat(buckets.select(col("doc_id"), col("lang"),
-        aggregate(col("buckets"), lit(0L),
-          (acc, b) => acc + QualityClassifier.weight(b)).as("score")))
-      // stage 4: verdict gate + the global doc_id sort (the one exchange)
-      val t0 = System.nanoTime()
-      scored.select(col("doc_id"), col("lang"), col("score"),
-          when(col("score") >= 0, "keep").otherwise("drop").as("verdict"))
-        .orderBy("doc_id")
-        .queryExecution.toRdd.count()
-      val tSort = (System.nanoTime() - t0) / 1e9
-      Seq(
-        "qc_stage_bigrams" -> tGrams,
-        "qc_stage_hash" -> tHash,
-        "qc_stage_score" -> tScore,
-        "qc_stage_verdict_sort" -> tSort)
-    } catch {
-      case scala.util.control.NonFatal(e) =>
-        System.err.println(s"[bench] qc stage micro failed: $e"); Seq.empty
-    } finally {
-      pinned.foreach(p => { p.unpersist(); () })
-    }
-  }
-
-  /** q215's segment-merge lifecycle with per-stage wall attribution
-    * (VERDICT r16 #3: q215 drifted 1.92× between idle boards with no
-    * plan-touching diff — the only nearby change was relocating its
-    * segment dirs under the shared [[graft.io.Scratch]] root). Each
-    * stage is q215's OWN recipe at stage grain — same builds over the
-    * corpus halves, same merge, same closing query — so a regression
-    * names the stage (build-A / build-B / merge / query) instead of the
-    * composed row; the registry row stays the end-to-end truth. Fresh
-    * Scratch dirs per invocation, same as the registry row's.
-    */
-  private def benchInvIndexMergeStages(spark: SparkSession, sfDir: String): Seq[(String, Double)] =
-    try {
-      val d = spark.read.parquet(s"$sfDir/documents.parquet")
-      val base = graft.io.Scratch.dir("graft_inv_merge_stages")
-      def timed(f: => Unit): Double = {
-        System.gc() // aged-heap hygiene — see benchBucketed
-        val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-      }
-      val tA = timed(graft.text.InvertedIndex.build(spark,
-        d.filter(col("doc_id") % 2 === 0), s"$base/a"))
-      val tB = timed(graft.text.InvertedIndex.build(spark,
-        d.filter(col("doc_id") % 2 === 1), s"$base/b"))
-      val tM = timed(graft.text.InvertedIndex.merge(spark,
-        s"$base/a", s"$base/b", s"$base/m"))
-      val tQ = timed(graft.text.InvertedIndex.query(spark, s"$base/m",
-        Seq("spark", "window", "hash")).queryExecution.toRdd.count())
-      Seq(
-        "inv_merge_stage_build_a" -> tA,
-        "inv_merge_stage_build_b" -> tB,
-        "inv_merge_stage_merge" -> tM,
-        "inv_merge_stage_query" -> tQ)
-    } catch {
-      case scala.util.control.NonFatal(e) =>
-        System.err.println(s"[bench] inv-merge stage micro failed: $e"); Seq.empty
-    }
-
-  /** q196's video ingest-verdict pipeline with per-stage wall attribution
-    * (the benchCcnetStages pattern; VERDICT r17 #1 — the family's cost was
-    * asserted "fixture synthesis" without stage numbers). Stages mirror
-    * the registry row's recipe against ALREADY-pinned inputs: synthesize
-    * (render the per-doc AVI containers), decode (container walk →
-    * sampled frame feature rows), band (dHash + band explode + key),
-    * verdict (the two-phase clip-verdict joins). Stage rows do not sum to
-    * the composed row exactly — q196's own plan pins `banded`, sharing
-    * one synthesis+decode+band pass across both phases.
-    */
-  private def benchVideoStages(spark: SparkSession, sfDir: String): Seq[(String, Double)] = {
-    import org.apache.spark.sql.DataFrame
-    import org.apache.spark.storage.StorageLevel
-    import graft.multimodal.{Multimodal, VisualDedup}
-    val g = 4
-    val pinned = scala.collection.mutable.ListBuffer[DataFrame]()
-    def mat(df: DataFrame): (DataFrame, Double) = {
-      val t0 = System.nanoTime()
-      val p = df.persist(StorageLevel.MEMORY_AND_DISK)
-      p.queryExecution.toRdd.count()
-      pinned += p
-      (p, (System.nanoTime() - t0) / 1e9)
-    }
-    try {
-      import spark.implicits._
-      // stage 1: container synthesis — the corpus render
-      val (assetsDf, tSynth) = mat(
-        Multimodal.videoAssetsWithNearDups(spark, sfDir).toDF())
-      val assets = assetsDf.as[Multimodal.Asset]
-      // stage 2: container walk → stride-sampled frame features
-      val (feats, tDecode) = mat(
-        Multimodal.videoFrameFeatures(assets, grid = g, stride = 2).toDF())
-      // stage 3: dHash + LSH band explode + frame-aligned band key
-      val (banded, tBand) = mat(
-        VisualDedup.explodeBands(
-            feats.withColumn("dhash", VisualDedup.dhash("", g)), g)
-          .withColumn("band_key", Multimodal.videoBandKey(""))
-          .select("asset_id", "frame_idx", "n_frames", "band_key",
-            "width", "height", "box_sums"))
-      // stage 4: the two-phase clip verdicts (q196's exact join shape,
-      // including the registry row's data-adaptive aggregate width)
-      val t1 = System.nanoTime()
-      val w = Some(graft.util.Widths.adaptive(spark, banded.count()))
-      val b1 = banded.filter(col("asset_id") % 2 === 0)
-      val b2 = banded.filter(col("asset_id") % 2 === 1)
-      val ids1 = banded.select("asset_id").distinct().filter(col("asset_id") % 2 === 0)
-      val ids2 = banded.select("asset_id").distinct().filter(col("asset_id") % 2 === 1)
-      val v1 = Multimodal.videoClipVerdicts(ids1, b1, b1.limit(0), g, 2, w)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      pinned += v1
-      val store = b1.join(
-        v1.filter(col("verdict") === "accepted").select("asset_id"),
-        Seq("asset_id"))
-      val v2 = Multimodal.videoClipVerdicts(ids2, b2, store, g, 2, w)
-      v1.withColumn("phase", lit(1L))
-        .unionByName(v2.withColumn("phase", lit(2L)))
-        .select("asset_id", "phase", "verdict")
-        .orderBy("asset_id")
-        .queryExecution.toRdd.count()
-      val tVerdict = (System.nanoTime() - t1) / 1e9
-      Seq(
-        "video_stage_synthesize" -> tSynth,
-        "video_stage_decode" -> tDecode,
-        "video_stage_band" -> tBand,
-        "video_stage_verdict" -> tVerdict)
-    } catch {
-      case scala.util.control.NonFatal(e) =>
-        System.err.println(s"[bench] video stage micro failed: $e"); Seq.empty
-    } finally {
-      pinned.foreach(p => { p.unpersist(); () })
-    }
-  }
-
-  /** The forget/rebuild lifecycles with per-stage wall attribution
-    * (VERDICT r17 #6: q216/q182/q209 hold ~3 s each with scaling ratio
-    * ≈1.0 — these rows say whether the residual is the fresh build, the
-    * delete/compact rewrite, the retrain, or the manifest recount).
-    * Same code paths as the registry rows, private scratch dirs.
-    */
-  private def benchLifecycleStages(spark: SparkSession, sfDir: String): Seq[(String, Double)] =
-    try {
-      val d = spark.read.parquet(s"$sfDir/documents.parquet")
-      def timed(f: => Unit): Double = {
-        System.gc() // aged-heap hygiene — see benchBucketed
-        val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-      }
-      // q216's recipe: fresh build, tombstone delete, exact compaction
-      val invBase = graft.io.Scratch.dir("graft_inv_forget_stages")
-      val tIB = timed(graft.text.InvertedIndex.build(spark, d, s"$invBase/idx"))
-      val tID = timed(graft.text.InvertedIndex.delete(spark, s"$invBase/idx",
-        d.filter(col("doc_id") % 10 === 3).select("doc_id")))
-      val tIC = timed(graft.text.InvertedIndex.compact(spark, s"$invBase/idx"))
-      val tIQ = timed(graft.text.InvertedIndex.query(spark, s"$invBase/idx",
-        Seq("spark", "window", "hash")).queryExecution.toRdd.count())
-      // q182's recipe: stale slice build, full retrain + root swap
-      val e = spark.read.parquet(s"$sfDir/embeddings.parquet")
-      val annBase = graft.io.Scratch.dir("graft_ann_rebuild_stages")
-      val tAB = timed(graft.ml.AnnIndex.build(spark,
-        e.filter(col("vec_id") % 4 === 0), s"$annBase/idx"))
-      val tAR = timed(graft.ml.AnnIndex.rebuildAndSwap(spark, e, s"$annBase/idx"))
-      // q209's recipe: pack, forget, manifest-verified read-back
-      val pkBase = graft.io.Scratch.dir("graft_packed_forget_stages")
-      val tPW = timed(graft.curation.Curation.writePackedCorpus(d, pkBase))
-      val tPF = timed { graft.curation.Curation.forgetFromPackedCorpus(spark,
-        pkBase, d.filter(col("doc_id") % 10 === 3).select("doc_id")); () }
-      val tPR = timed {
-        val (manifest, _) = graft.curation.Curation.readPackedCorpus(spark, pkBase)
-        manifest.orderBy("lang").queryExecution.toRdd.count()
-        ()
-      }
-      Seq(
-        "inv_forget_stage_build" -> tIB,
-        "inv_forget_stage_delete" -> tID,
-        "inv_forget_stage_compact" -> tIC,
-        "inv_forget_stage_query" -> tIQ,
-        "ann_rebuild_stage_stale_build" -> tAB,
-        "ann_rebuild_stage_retrain_swap" -> tAR,
-        "packed_forget_stage_write" -> tPW,
-        "packed_forget_stage_forget" -> tPF,
-        "packed_forget_stage_read" -> tPR)
-    } catch {
-      case scala.util.control.NonFatal(e) =>
-        System.err.println(s"[bench] lifecycle stage micro failed: $e"); Seq.empty
     }
 
   /** Parquet codec trade-off on the fact table: write cost, on-disk

@@ -1,0 +1,159 @@
+package graft
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.{InputAdapter, SparkPlan, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+
+/** What Spark did for one piece of work, read from Spark's own
+  * bookkeeping after the work ran. It adds no listener of its own:
+  *   - jobs, stages and tasks come from the live status store
+  *     ([[org.apache.spark.graft.SparkStatus]]), selected by a job tag
+  *     set around the work ([[tagged]]). A tag, not a job group:
+  *     [[graft.api.ProgressTracker.trackStage]] sets and clears the job
+  *     group inside pipeline calls, which would drop every later job of
+  *     the work;
+  *   - per-operator numbers come from the SQL metrics of the executed plan
+  *     of the frame the work returned, AQE stages unwrapped, with the plans
+  *     of the cached relations it scans. These fill in
+  *     whether or not the action ran under a SQL execution id, so
+  *     `queryExecution.toRdd.count()` is profiled like `collect()`.
+  */
+object QueryProfile {
+
+  /** One job: its call-site name and wall duration. Jobs that AQE
+    * submits from its own threads carry a call site inside Spark
+    * (`…withThreadLocalCaptured… at CompletableFuture.java`); `after` then
+    * names the last job of the work with a call site in user code, which
+    * is the action these stage jobs serve or follow.
+    */
+  final case class Job(name: String, ms: Long, after: Option[String])
+
+  /** One physical operator that carries a metric profiled here: its node
+    * name, the plan it belongs to (0 = the frame's own plan, k = the k-th
+    * cached relation it scans, whose codegen ids are numbered apart), its
+    * whole-stage-codegen stage (0 when interpreted), and each metric it
+    * has — rows out, the codegen stage's pipeline time, shuffle bytes
+    * written, peak memory.
+    */
+  final case class Op(name: String, plan: Int, codegenStage: Int, rows: Option[Long],
+      pipelineMs: Option[Long], shuffleBytes: Option[Long], peakMemory: Option[Long])
+
+  /** `taskP50Ms` is the median of the stages' median task durations,
+    * weighted by each stage's task count (exact when one stage holds most
+    * of the tasks); `taskMaxMs` is exact. Bytes are summed over every
+    * attempt of every stage the tagged jobs ran.
+    */
+  final case class Profile(jobs: Seq[Job], stages: Int, tasks: Long,
+      taskP50Ms: Long, taskMaxMs: Long, shuffleReadBytes: Long,
+      shuffleWriteBytes: Long, spillBytes: Long, ops: Seq[Op]) {
+
+    /** One `{"metric":"profile",…}` line for `name`. */
+    def json(name: String): String = {
+      def str(s: String) = "\"" + s.flatMap {
+        case '"' => "\\\""
+        case '\\' => "\\\\"
+        case c if c < ' ' => f"\\u${c.toInt}%04x"
+        case c => c.toString
+      } + "\""
+      def mb(b: Long) = f"${b / 1e6}%.3f"
+      val js = jobs.map(j => s"""{"name":${str(j.name)},"ms":${j.ms}""" +
+        j.after.fold("")(a => s""","after":${str(a)}""") + "}")
+      val os = ops.map { o =>
+        (Seq(s""""op":${str(o.name)}""") ++
+          Option(o.plan).filter(_ > 0).map(k => s""""plan":$k""") ++
+          Seq(s""""wscg":${o.codegenStage}""") ++
+          o.rows.map(r => s""""rows":$r""") ++
+          o.pipelineMs.map(t => s""""pipeline_ms":$t""") ++
+          o.shuffleBytes.map(b => s""""shuffle_mb":${mb(b)}""") ++
+          o.peakMemory.map(b => s""""peak_mb":${mb(b)}"""))
+          .mkString("{", ",", "}")
+      }
+      s"""{"metric":"profile","name":${str(name)},"jobs":${jobs.size},""" +
+        s""""stages":$stages,"tasks":$tasks,"task_p50_ms":$taskP50Ms,""" +
+        s""""task_max_ms":$taskMaxMs,"shuffle_read_mb":${mb(shuffleReadBytes)},""" +
+        s""""shuffle_write_mb":${mb(shuffleWriteBytes)},"spill_mb":${mb(spillBytes)},""" +
+        s""""job_list":${js.mkString("[", ",", "]")},"ops":${os.mkString("[", ",", "]")}}"""
+    }
+  }
+
+  private val seq = new java.util.concurrent.atomic.AtomicLong()
+
+  /** Run `body` with every job it submits from this thread (and from the
+    * threads Spark hands its local properties to, such as broadcast
+    * builds) tagged; returns its result and the tag to [[read]] with.
+    */
+  def tagged[T](spark: SparkSession, label: String)(body: => T): (T, String) = {
+    val tag = s"$label#${seq.incrementAndGet()}"
+    val sc = spark.sparkContext
+    sc.addJobTag(tag)
+    try (body, tag) finally sc.removeJobTag(tag)
+  }
+
+  /** The profile of the jobs tagged `tag`, with the operators of `df`'s
+    * executed plan when the work returned a frame.
+    */
+  def read(spark: SparkSession, tag: String, df: Option[DataFrame] = None): Profile = {
+    val (jobs, stages) = org.apache.spark.graft.SparkStatus.tagged(
+      spark.sparkContext, tag, Array(0.5, 1.0))
+    val byStage = stages.map { case (s, q) =>
+      val d = q.map(_.duration).getOrElse(IndexedSeq(0.0, 0.0))
+      (s.numCompleteTasks.toLong, d(0).toLong, d(1).toLong)
+    }
+    val tasks = byStage.map(_._1).sum
+    val p50 = byStage.sortBy(_._2).scanLeft((0L, 0L)) { case ((n, _), (k, m, _)) => (n + k, m) }
+      .find(_._1 * 2 >= tasks).fold(0L)(_._2)
+    val aqe = (name: String) => name.contains("withThreadLocalCaptured")
+    val lastNamed = jobs.scanLeft("")((last, j) => if (aqe(j.name)) last else j.name)
+    Profile(
+      jobs.zip(lastNamed).map { case (j, last) =>
+        Job(j.name, (for (s <- j.submissionTime; e <- j.completionTime)
+          yield e.getTime - s.getTime).getOrElse(-1L),
+          if (aqe(j.name) && last.nonEmpty) Some(last) else None)
+      },
+      stages.size, tasks, p50,
+      if (byStage.isEmpty) 0L else byStage.map(_._3).max,
+      stages.map(_._1.shuffleReadBytes).sum,
+      stages.map(_._1.shuffleWriteBytes).sum,
+      stages.map { case (s, _) => s.memoryBytesSpilled + s.diskBytesSpilled }.sum,
+      df.fold(Seq.empty[Op])(d => operators(d.queryExecution.executedPlan)))
+  }
+
+  /** Every operator of `plan` carrying a profiled metric, AQE wrappers
+    * unwrapped, subqueries and the plans of cached relations it scans
+    * included (their metrics hold the cache fill, which Bench's
+    * `clearCache` before each row keeps inside the row). A reused
+    * exchange is a leaf here, so its bytes count once, at the exchange
+    * that wrote them.
+    */
+  private def operators(plan: SparkPlan): Seq[Op] = {
+    val cached = scala.collection.mutable.ArrayBuffer[SparkPlan]()
+    def metric(p: SparkPlan, key: String) = p.metrics.get(key).map(m => math.max(m.value, 0L))
+    def walk(p: SparkPlan, in: Int, wscg: Int): Seq[Op] = p match {
+      case a: AdaptiveSparkPlanExec => walk(a.executedPlan, in, wscg)
+      case s: QueryStageExec => walk(s.plan, in, wscg)
+      case m: InMemoryTableScanExec =>
+        val c = m.relation.cachedPlan
+        val seen = cached.exists(_ eq c)
+        if (!seen) cached += c
+        val k = cached.indexWhere(_ eq c) + 1
+        Op(s"${m.nodeName} (plan $k)", in, wscg, metric(m, "numOutputRows"), None, None, None) +:
+          (if (seen) Nil else walk(c, k, 0))
+      case _ =>
+        val stage = p match {
+          case w: WholeStageCodegenExec => w.codegenStageId
+          case _: InputAdapter => 0
+          case _ => wscg
+        }
+        val op = Op(p.nodeName, in, stage, metric(p, "numOutputRows"),
+          metric(p, "pipelineTime"), metric(p, "shuffleBytesWritten"),
+          metric(p, "peakMemory"))
+        val self =
+          if (Seq(op.rows, op.pipelineMs, op.shuffleBytes, op.peakMemory).exists(_.isDefined))
+            Seq(op)
+          else Nil
+        self ++ (p.children ++ p.subqueries).flatMap(walk(_, in, stage))
+    }
+    walk(plan, 0, 0)
+  }
+}

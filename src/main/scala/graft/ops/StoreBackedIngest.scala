@@ -24,8 +24,8 @@ object StoreBackedIngest {
   /** Store-backed STREAMING ingest over a bucketed catalog table. Each
     * micro-batch:
     *   1. recovers a crashed compaction swap of the store;
-    *   2. turns the batch into store rows ONCE (`rows`, persisted for
-    *      the batch);
+    *   2. turns the batch into store rows ONCE (`rows`, persisted and
+    *      filled for the batch before anything reads it);
     *   3. takes (id, verdict) rows from `verdicts(batch, pinned rows,
     *      store minus the batch's ids)` — the store side is the bucketed
     *      table, so the modality's `bucketKey` join reads it with no
@@ -86,8 +86,12 @@ object StoreBackedIngest {
         // must still heal the store
         graft.io.Compact.recoverBucketedTable(s, storeTable)
         val pinned = rows(batch).persist()
-        val batchIds = pinned.select(col(storeId)).distinct()
         try {
+          // fill the pin before any consumer: the broadcast of its ids and
+          // the verdict plan's concurrent stages would otherwise each
+          // compute a not-yet-cached partition
+          pinned.count()
+          val batchIds = pinned.select(col(storeId)).distinct()
           val store =
             (if (s.catalog.tableExists(storeTable))
               s.table(storeTable).select(pinned.columns.map(col): _*)

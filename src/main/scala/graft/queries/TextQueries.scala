@@ -2143,7 +2143,7 @@ object TextQueries {
     // weights and replays the dot product exactly.
     Q("q267_quality_classifier",
       (s, dir) => {
-        // builders shared with Bench.benchQcStages — see QualityClassifier
+        // feature/weight builders: see QualityClassifier
         val score = graft.text.QualityClassifier.score(tokens(col("text")))
         t(s, dir, "documents")
           .select(col("doc_id"), col("lang"), score.as("score"))

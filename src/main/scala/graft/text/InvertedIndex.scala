@@ -67,6 +67,9 @@ object InvertedIndex {
         TextSketch.termPostings(toks).as("po"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
+      // fill the pin first: the broadcast df aggregate and the postings
+      // write would otherwise both compute a not-yet-cached partition
+      perDoc.count()
       val tf = perDoc
         .select(col("doc_id"), col("dl"), explode(col("po")).as("p"))
         .select(col("p.term").as("term"), col("doc_id"), col("dl"),

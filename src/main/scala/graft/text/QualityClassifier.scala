@@ -4,11 +4,8 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** The fastText-shaped hashed-feature linear classifier's expression
-  * builders — ONE definition shared by the oracle-checked registry row
-  * (q267, TextQueries) and its per-stage bench attribution
-  * (Bench.benchQcStages), so a change to the feature recipe can never
-  * silently decouple the stage rows from the pipeline they attribute.
-  * Word-bigram features hash into [[Buckets]] buckets (first 8 md5 hex
+  * builders, used by the oracle-checked registry row (q267,
+  * TextQueries). Word-bigram features hash into [[Buckets]] buckets (first 8 md5 hex
   * digits mod B — the hashing trick); weights are content-addressed
   * integers in [-1000, 1000] (md5-derived — no stored model artifact,
   * every engine rederives identical weights); the forward pass is a
@@ -29,7 +26,7 @@ object QualityClassifier {
     * previous `transform(sequence(...), i -> concat_ws(" ", slice(toks,
     * i, 2)))` HOF chain, which allocated a slice array and an interpreted
     * lambda frame per bigram (the dominant stage of the q267 forward
-    * pass, per the qc_stage_bigrams bench row).
+    * pass, as a per-stage bench row measured it).
     */
   def bigrams(toks: Column): Column = TextSketch.arrayBigrams(toks)
 

@@ -1,0 +1,38 @@
+package org.apache.spark.graft
+
+import org.apache.spark.SparkContext
+import org.apache.spark.status.api.v1.{JobData, StageData, StageStatus, TaskMetricDistributions}
+
+/** `SparkContext.listenerBus` and `statusStore` are `private[spark]`, so
+  * the engine reads Spark's own job, stage and task bookkeeping through
+  * this accessor placed in the `org.apache.spark` namespace; its caller
+  * is [[graft.QueryProfile]]. It registers no listener: the status store
+  * is fed by Spark's own, with or without the UI.
+  */
+object SparkStatus {
+  /** Block until the async listener bus has dispatched every queued event,
+    * or `timeoutMs` elapses (best-effort on timeout: a read then reflects
+    * whatever was delivered).
+    */
+  def drain(sc: SparkContext, timeoutMs: Long): Unit =
+    try sc.listenerBus.waitUntilEmpty(timeoutMs)
+    catch { case _: java.util.concurrent.TimeoutException => () }
+
+  /** The retained jobs carrying job tag `tag`, and every attempt of the
+    * stages they ran (stages a job skipped are left out) with each
+    * attempt's task quantiles at `quantiles`. Drains the bus first, so a
+    * job that just returned is complete in the store.
+    */
+  def tagged(sc: SparkContext, tag: String, quantiles: Array[Double])
+      : (Seq[JobData], Seq[(StageData, Option[TaskMetricDistributions])]) = {
+    drain(sc, 10000L)
+    val store = sc.statusStore
+    val jobs = store.jobsList(null).filter(_.jobTags.contains(tag)).sortBy(_.jobId)
+    val stages = jobs.flatMap(_.stageIds).distinct.sorted.flatMap { id =>
+      scala.util.Try(store.stageData(id)).getOrElse(Nil)
+        .filter(_.status != StageStatus.SKIPPED)
+        .map(s => s -> store.taskSummary(s.stageId, s.attemptId, quantiles))
+    }
+    (jobs, stages)
+  }
+}

@@ -9,7 +9,7 @@ import org.apache.spark.sql.catalyst.expressions.Expression
   * no function registered by name; the SQL names live in one catalog,
   * [[graft.sql.NativeCatalog]], for `spark.sql` callers only. Same
   * justified package-escape shape as
-  * [[org.apache.spark.graft.ListenerDrain]].
+  * [[org.apache.spark.graft.SparkStatus]].
   */
 object ColumnBridge {
   def column(e: Expression): Column =

@@ -1,0 +1,95 @@
+package graft
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec, AdaptiveSparkPlanHelper}
+import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.functions._
+
+/** QueryProfile reads Spark's own bookkeeping for the jobs of one tag:
+  * what it reports must agree with the executed plan, ignore untagged
+  * work running beside it, and survive a pipeline call that sets and
+  * clears the job group.
+  */
+class QueryProfileSpec extends SparkSpec with AdaptiveSparkPlanHelper {
+
+  private val mapTasks = 3
+  private val keys = 50L
+
+  /** A fresh two-stage groupBy (fresh, so no run reuses another's shuffle). */
+  private def grouped(): DataFrame =
+    spark.range(0, 20000, 1, mapTasks).groupBy((col("id") % keys).as("k")).count()
+
+  private def run(df: DataFrame): Unit = { df.queryExecution.toRdd.count(); () }
+
+  /** Stages and tasks `df`'s executed plan implies: one map stage per
+    * exchange plus the result stage; map tasks plus the reduce side's
+    * (post-AQE) partitions.
+    */
+  private def planShape(df: DataFrame): (Int, Long, ShuffleExchangeExec) = {
+    val plan = df.queryExecution.executedPlan
+    val exchanges = collect(plan) { case e: ShuffleExchangeExec => e }
+    assert(exchanges.size == 1)
+    val reduce = collect(plan) { case r: AQEShuffleReadExec => r.partitionSpecs.size }
+      .headOption.getOrElse(exchanges.head.numPartitions)
+    (exchanges.size + 1, mapTasks.toLong + reduce, exchanges.head)
+  }
+
+  test("a tagged groupBy's stages, tasks, shuffle bytes and rows match its plan") {
+    val df = grouped()
+    val (_, tag) = QueryProfile.tagged(spark, "groupBy")(run(df))
+    val p = QueryProfile.read(spark, tag, Some(df))
+    val (stages, tasks, exchange) = planShape(df)
+    assert(p.stages == stages && p.tasks == tasks, p)
+    assert(p.jobs.nonEmpty && p.jobs.forall(_.ms >= 0), p.jobs)
+    val written = exchange.metrics("shuffleBytesWritten").value
+    assert(written > 0 && p.shuffleWriteBytes == written, p)
+    assert(p.shuffleReadBytes == written, p)
+    assert(p.ops.exists(o => o.shuffleBytes.contains(written)), p.ops)
+    // the plan's first (topmost) aggregate is the final one
+    val finalAgg = collectFirst(df.queryExecution.executedPlan) { case a: HashAggregateExec => a }.get
+    assert(finalAgg.metrics("numOutputRows").value == keys)
+    assert(p.ops.find(_.name == "HashAggregate").flatMap(_.rows).contains(keys), p.ops)
+    assert(p.ops.exists(o => o.name.startsWith("WholeStageCodegen") && o.pipelineMs.isDefined))
+    assert(p.taskMaxMs >= p.taskP50Ms && p.taskP50Ms >= 0)
+    assert(p.json("groupBy").startsWith("""{"metric":"profile","name":"groupBy","jobs":"""))
+  }
+
+  test("untagged jobs on another thread add nothing") {
+    val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val foreign = new java.util.concurrent.atomic.AtomicInteger(0)
+    // started before the tag is set: threads inherit Spark's local
+    // properties (and so the tag) only when created inside the tagged span
+    val other = new Thread(() =>
+      while (!stop.get()) { run(grouped()); foreign.incrementAndGet(); () })
+    other.start()
+    val df = grouped()
+    val (_, tag) = try {
+      while (foreign.get() == 0) Thread.sleep(10)
+      QueryProfile.tagged(spark, "beside") {
+        val seen = foreign.get()
+        run(df)
+        // keep the tagged span open until a foreign job has run inside it
+        while (foreign.get() == seen) Thread.sleep(10)
+      }
+    } finally { stop.set(true); other.join() }
+    val p = QueryProfile.read(spark, tag, Some(df))
+    val (stages, tasks, exchange) = planShape(df)
+    assert(p.stages == stages && p.tasks == tasks, p)
+    assert(p.shuffleWriteBytes == exchange.metrics("shuffleBytesWritten").value, p)
+  }
+
+  test("a body that calls ProgressTracker.trackStage is fully attributed") {
+    val frames = Seq.fill(3)(grouped())
+    val pid = graft.api.ProgressTracker.createProcess()
+    val (_, tag) = QueryProfile.tagged(spark, "tracked") {
+      run(frames(0))
+      graft.api.ProgressTracker.trackStage(spark, pid, 2, "processing")(run(frames(1)))
+      run(frames(2))
+    }
+    val p = QueryProfile.read(spark, tag)
+    val shapes = frames.map(planShape)
+    assert(p.stages == shapes.map(_._1).sum && p.tasks == shapes.map(_._2).sum, p)
+    assert(p.shuffleWriteBytes == shapes.map(_._3.metrics("shuffleBytesWritten").value).sum, p)
+  }
+}

@@ -127,7 +127,7 @@ class AnnIndexSpec extends SparkSpec
       val n = df.collect().length
       assert(n > 0)
     } finally {
-      org.apache.spark.graft.ListenerDrain.drain(spark.sparkContext, 10000L)
+      org.apache.spark.graft.SparkStatus.drain(spark.sparkContext, 10000L)
       spark.sparkContext.removeSparkListener(listener)
     }
     assert(jobs <= 10, s"batch search over 50 queries must not launch per-query jobs (saw $jobs)")

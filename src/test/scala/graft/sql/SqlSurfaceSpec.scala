@@ -3,10 +3,6 @@ package graft.sql
 import graft.{GraftSession, SparkSpec}
 import graft.curation.Curation
 import graft.geo.SpatialFilterRule
-import org.apache.logging.log4j.LogManager
-import org.apache.logging.log4j.core.{LogEvent, Logger}
-import org.apache.logging.log4j.core.appender.AbstractAppender
-import org.apache.logging.log4j.core.config.Property
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 import org.apache.spark.sql.functions._
@@ -128,33 +124,21 @@ class SqlSurfaceSpec extends SparkSpec {
   }
 
   test("create logs no 'replaced a previously registered function' warning") {
-    val replaced = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val capture = new AbstractAppender("graft-replaced", null, null, true,
-        Property.EMPTY_ARRAY) {
-      override def append(e: LogEvent): Unit = {
-        val m = e.getMessage.getFormattedMessage
-        if (m.contains("replaced a previously registered function")) replaced.add(m)
-      }
-    }
-    capture.start()
-    val root = LogManager.getRootLogger.asInstanceOf[Logger]
-    root.addAppender(capture)
-    try {
-      spark.sparkContext.setLogLevel("WARN")
-      // control: the appender does see a genuine re-registration (the
-      // registry stays silent when the same (info, builder) pair returns)
-      val (id, info, build) = NativeCatalog.scalars.head
+    def replaced(body: => Unit) =
+      graft.LogCapture("", "replaced a previously registered function")(body)
+    spark.sparkContext.setLogLevel("WARN")
+    // control: the capture does see a genuine re-registration (the
+    // registry stays silent when the same (info, builder) pair returns)
+    val (id, info, build) = NativeCatalog.scalars.head
+    assert(replaced {
       spark.sessionState.functionRegistry.registerFunction(id,
         new ExpressionInfo(info.getClassName, id.funcName), build)
-      assert(replaced.size == 1)
-      replaced.clear()
+    }.size == 1)
+    val fromCreate = replaced {
       GraftSession.create(
         shufflePartitions = spark.conf.get("spark.sql.shuffle.partitions").toInt)
-      assert(replaced.isEmpty, replaced)
-    } finally {
-      root.removeAppender(capture)
-      capture.stop()
     }
+    assert(fromCreate.isEmpty, fromCreate)
   }
 
 

@@ -163,4 +163,26 @@ class InvertedIndexSpec extends SparkSpec
         s"compacted index diverged from the clean build on $terms")
     assert(!new java.io.File(s"$base/.idx.compact_staging").exists())
   }
+
+  test("build fills its per-doc pin before any consumer reads it") {
+    val base = Files.createTempDirectory("inv_idx_pin").toString
+    val docs = sf("documents", dir)
+    var tag = ""
+    val warnings = graft.LogCapture.recomputedBlocks {
+      tag = graft.QueryProfile.tagged(spark, "inv-build") {
+        InvertedIndex.build(spark, docs, s"$base/idx")
+      }._2
+    }
+    assert(warnings.isEmpty, warnings)
+    // the df aggregate and the postings write read the pin in one plan;
+    // unfilled, AQE submits one cache-filling job per reader at once (a
+    // racing task then waits on the block and logs the warning above).
+    // Filled first, the build's jobs run one at a time.
+    val (jobs, _) = org.apache.spark.graft.SparkStatus.tagged(
+      spark.sparkContext, tag, Array.empty)
+    val spans = jobs.map(j => (j.jobId, j.submissionTime.get.getTime,
+      j.completionTime.get.getTime)).sortBy(_._2)
+    val overlapping = spans.zip(spans.drop(1)).filter { case (a, b) => b._2 < a._3 }
+    assert(overlapping.isEmpty, s"concurrent jobs (id, start, end): $overlapping")
+  }
 }

@@ -1,7 +1,10 @@
 // Dump the EXECUTED plan (post-AQE, with *(n) whole-stage-codegen
 // markers) for a comma-separated list of registry queries to
-// $GRAFT_EXPLAIN_OUT/<name>_$GRAFT_EXPLAIN_TAG.txt. Unlike
-// explain_dump.scala this runs each query (toRdd.count) first, so the
+// $GRAFT_EXPLAIN_OUT/<name>_$GRAFT_EXPLAIN_TAG.txt, and the query's
+// profile line (graft.QueryProfile: jobs by call site, stages, tasks,
+// shuffle, spill and per-operator metrics) to
+// <name>_$GRAFT_EXPLAIN_TAG_profile.json. Unlike explain_dump.scala this
+// runs each query (toRdd.count, as Bench times it) first, so the
 // AdaptiveSparkPlan is final and codegen collapse has happened.
 val done = {
   val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -18,12 +21,18 @@ val done = {
   spark.sparkContext.setLogLevel("ERROR")
   for (n <- names) {
     spark.catalog.clearCache()
-    val df = graft.SparkEntry.queries(n)(spark, sfDir)
-    df.queryExecution.toRdd.count()
+    val (df, profileTag) = graft.QueryProfile.tagged(spark, n) {
+      val df = graft.SparkEntry.queries(n)(spark, sfDir)
+      df.queryExecution.toRdd.count()
+      df
+    }
     val plan = df.queryExecution.executedPlan.toString
     java.nio.file.Files.write(
       java.nio.file.Paths.get(s"$out/${n}_$tag.txt"), plan.getBytes("UTF-8"))
-    println(s"[explain-exec] wrote $out/${n}_$tag.txt (${plan.length} chars)")
+    val profile = graft.QueryProfile.read(spark, profileTag, Some(df)).json(n)
+    java.nio.file.Files.write(java.nio.file.Paths.get(s"$out/${n}_${tag}_profile.json"),
+      (profile + "\n").getBytes("UTF-8"))
+    println(s"[explain-exec] wrote $out/${n}_$tag.txt (${plan.length} chars) and its profile")
   }
   "ok"
 }

@@ -42,7 +42,7 @@ val listener = new org.apache.spark.sql.util.QueryExecutionListener {
 def capture(label: String)(f: => Unit): Unit = {
   plans.clear()
   f
-  org.apache.spark.graft.ListenerDrain.drain(spark.sparkContext, 10000L)
+  org.apache.spark.graft.SparkStatus.drain(spark.sparkContext, 10000L)
   val all = plans.toArray(Array.empty[(String, String)])
   // keep only write/command plans (save/parquet/insert) — the point is
   // the exchange structure feeding each write
