@@ -1,7 +1,6 @@
 package graft.api
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.clean.CleanFunctions.pctRate
 
@@ -15,39 +14,37 @@ import graft.clean.CleanFunctions.pctRate
   *
   * Scale notes: every endpoint is one hash-aggregate over the lab frame
   * (map-side partial, narrow shuffle on the group key). The year-over-year
-  * change in [[kpiData]] windows over the per-YEAR aggregate — a frame of
-  * a few rows — never over raw records.
+  * change in [[kpiData]] reads the per-YEAR aggregate — a frame of a few
+  * rows — collected into one sorted list, never raw records.
   */
 object DashboardPipeline {
 
   /** get_kpi_data: totals + data-true period change (latest year vs the
-    * one before, the reference's hardcoded "5.2%" slot).
+    * one before, the reference's hardcoded "5.2%" slot). One aggregate
+    * over the per-year rows gives the totals and the years in ascending,
+    * nulls-first order — so a null-year group is the "previous" row of
+    * the first real year, as `lag` over `ORDER BY year` makes it.
     */
   def kpiData(lab: DataFrame): DataFrame = {
     val byYear = lab.groupBy("year").agg(
+      count(lit(1)).as("n"),
       sum(when(col("is_positive"), 1L).otherwise(0L)).as("pos"),
       sum(when(col("test_result") === "Negative", 1L).otherwise(0L)).as("neg"))
-    // tiny post-aggregate frame (one row per year): the unpartitioned
-    // window is deliberate and safe
-    val latest = byYear
-      .withColumn("prev_pos", lag("pos", 1).over(Window.orderBy("year")))
-      .withColumn("prev_neg", lag("neg", 1).over(Window.orderBy("year")))
-      .withColumn("rn", row_number().over(Window.orderBy(desc("year"))))
-      .filter(col("rn") === 1)
-      .select(col("pos").as("l_pos"), col("neg").as("l_neg"),
-        col("prev_pos"), col("prev_neg"))
-    val totals = lab.agg(
-      count(lit(1)).as("total_tests"),
-      sum(when(col("is_positive"), 1L).otherwise(0L)).as("total_positive"),
-      sum(when(col("test_result") === "Negative", 1L).otherwise(0L)).as("total_negative"))
-    // left join on true, not crossJoin: an empty lab frame has zero
-    // latest-year rows, and crossJoin would return NO KPI row at all
-    // instead of a zeroed card (pctChangeStr handles the null lat cols)
-    totals.join(latest, lit(true), "left").select(
+    // an empty lab frame still yields one (zeroed) card: a global
+    // aggregate always returns a row, and an empty year list reads as
+    // null latest/previous values (pctChangeStr handles those)
+    val card = byYear.agg(
+      coalesce(sum("n"), lit(0L)).as("total_tests"),
+      sum("pos").as("total_positive"),
+      sum("neg").as("total_negative"),
+      sort_array(collect_list(struct(col("year"), col("pos"), col("neg")))).as("years"))
+    val latest = try_element_at(col("years"), lit(-1))
+    val previous = try_element_at(col("years"), lit(-2))
+    card.select(
       col("total_tests"), col("total_positive"), col("total_negative"),
       pctRate(col("total_positive"), col("total_tests")).as("avg_positivity_rate"),
-      pctChangeStr(col("l_pos"), col("prev_pos")).as("positive_change"),
-      pctChangeStr(col("l_neg"), col("prev_neg")).as("negative_change"))
+      pctChangeStr(latest("pos"), previous("pos")).as("positive_change"),
+      pctChangeStr(latest("neg"), previous("neg")).as("negative_change"))
   }
 
   /** "+5.2%"-style change string (1 decimal, banker's rounding like every

@@ -161,6 +161,11 @@ object GeoPipeline {
     * the whole merge is one declarative job, so "Batch k/n" becomes
     * task-level percent from the engine's own scheduler.
     *
+    * Two actions in all: one fills the zonal-stats pin and tallies it
+    * (`processedFeatures`, `slopePointsUsed`); one computes the merge —
+    * the write when saving, whose row count is `totalBoundaryFeatures`,
+    * or a count otherwise. Nothing is counted before it is written.
+    *
     * @param outDir when set, the merged result is written (replace-mode)
     *   under the reference's saving checkpoint before completion
     */
@@ -181,27 +186,28 @@ object GeoPipeline {
       processId.foreach(ProgressTracker.update(_, 1, 0, msg, error = Some(msg)))
       throw new IllegalArgumentException(msg)
     }
-    val totalFeatures =
-      tracked(1, "Loading data and converting to WGS84...")(boundaries.count())
+    // the boundaries are read by the merge below, which counts them
+    tracked(1, "Loading data and converting to WGS84...")(())
 
-    val stats = tracked(2, "Processing slope analysis in WGS84...") {
-      val s = zonalSlopeStatsIndexed(boundaries, samples).persist()
-      s.count()
-      s
+    // one action fills the zonal-stats pin and tallies it: one row per
+    // boundary id that has points, so duplicate boundary rows count once
+    val stats = zonalSlopeStatsIndexed(boundaries, samples).persist()
+    val tallies = tracked(2, "Processing slope analysis in WGS84...")(
+      stats.agg(count(lit(1)).as("n"), coalesce(sum("slope_points_used"), lit(0L)).as("pts"))
+        .head())
+    // persisted: the save below and the caller's consumption must not
+    // re-run the zonal-stats lineage after stats unpersists. A left join
+    // onto at most one stats row per id keeps one row per boundary row,
+    // so the merge's row count is the boundary count — taken from the
+    // write when saving, from a count otherwise
+    val merged = boundaries.join(stats, Seq("boundary_id"), "left").persist()
+    val totalFeatures = outDir match {
+      case Some(dir) =>
+        tracked(3, "Merging zonal statistics onto boundaries...")(())
+        tracked(3, "Saving WGS84 results...")(graft.io.Writers.overwrite(merged, dir))
+      case None =>
+        tracked(3, "Merging zonal statistics onto boundaries...")(merged.count())
     }
-    // persisted: the save below, the caller's consumption, and the tallies
-    // must not re-run the zonal-stats lineage after stats unpersists
-    val merged = tracked(3, "Merging zonal statistics onto boundaries...") {
-      val m = boundaries.join(stats, Seq("boundary_id"), "left").persist()
-      m.count()
-      m
-    }
-    outDir.foreach { dir =>
-      tracked(3, "Saving WGS84 results...")(graft.io.Writers.overwrite(merged, dir))
-    }
-    val tallies = stats
-      .agg(count(lit(1)).as("n"), coalesce(sum("slope_points_used"), lit(0L)).as("pts"))
-      .head()
     stats.unpersist()
     processId.foreach(ProgressTracker.complete(_,
       "Processing completed with WGS84 coordinates!"))

@@ -10,6 +10,13 @@ import graft.io.Writers
   * 5 analytics → load, with the reference's request parameters preserved.
   * The per-filter dynamic TABLE NAMES become output subdirectories (the
   * engine partitions instead of mangling table names, §1.1).
+  *
+  * The load is one commit ([[Writers.overwriteAll]]): the raw table (in
+  * replace mode) and the five analytics tables are written concurrently
+  * to staging, and none goes live unless all of them staged — a failure
+  * leaves every table of the previous run in place. Each analytics plan
+  * runs once: its row count comes from its write, not from a count
+  * before it.
   */
 object LabPipeline {
 
@@ -96,29 +103,32 @@ object LabPipeline {
         }
       else Nil
 
-    val counts = tracked(2, "Calculating analytics")(
-      analytics.map { case (name, df) => name -> df.count() }.toMap)
-
-    if (params.saveToDb) outDir.foreach { dir =>
-      tracked(3, "Saving tables") {
+    // each analytics table's plan runs once: with a save, its row count
+    // comes from its write; without one, from a count
+    val counts: Map[String, Long] = outDir.filter(_ => params.saveToDb) match {
+      case Some(dir) =>
+        // the analytics are computed by their writes, in the saving span
+        tracked(2, "Calculating analytics")(())
         val rawPath = s"$dir/$rawTable"
-        params.updateMode match {
-          case "append" =>
-            // stage analytics FIRST (their plans scan the current raw
-            // files, which the upsert's rename-rename swap is about to
-            // delete), but commit them live only AFTER the raw upsert
-            // lands: a crash in between leaves the old analytics
-            // describing the old raw store — never fresh analytics over
-            // a merge the raw path never persisted
-            val commits = analytics.map { case (name, df) =>
-              Writers.overwriteStaged(df, s"$dir/$name") }
-            Writers.upsertPath(spark, lineage, rawPath, Seq("unique_id"))
-            commits.foreach(_.apply())
-          case _ =>
-            Writers.overwrite(lineage, rawPath)
-            analytics.foreach { case (name, df) => Writers.overwrite(df, s"$dir/$name") }
+        val tables = analytics.map { case (name, df) => df -> s"$dir/$name" }
+        val rows = tracked(3, "Saving tables") {
+          params.updateMode match {
+            case "append" =>
+              // stage analytics FIRST (their plans scan the current raw
+              // files, which the upsert's rename-rename swap is about to
+              // delete), but promote them only AFTER the raw upsert
+              // lands: a crash in between leaves the old analytics
+              // describing the old raw store — never fresh analytics over
+              // a merge the raw path never persisted
+              Writers.overwriteAll(tables,
+                beforePromote = Writers.upsertPath(spark, lineage, rawPath, Seq("unique_id")))
+            case _ => Writers.overwriteAll((lineage -> rawPath) +: tables).tail
+          }
         }
-      }
+        analytics.map(_._1).zip(rows).toMap
+      case None =>
+        tracked(2, "Calculating analytics")(
+          analytics.map { case (name, df) => name -> df.count() }.toMap)
     }
     lineage.unpersist()
 

@@ -101,7 +101,9 @@ object WeatherPipeline {
     * reference's dynamic table name ([[TableNames.weatherTableName]]), an
     * optional replace-mode save, and the
     * `Successfully saved N weather records to 'table'` terminal message
-    * (:693-695).
+    * (:693-695). The grid is computed once: with a save, N is the row
+    * count of the write itself (no count before it); without one, a
+    * count computes the grid and fills the pin.
     *
     * @return (merged frame — persisted, caller may unpersist —, table name,
     *   record count)
@@ -123,13 +125,18 @@ object WeatherPipeline {
     processId.foreach(ProgressTracker.update(_, 1, 100, "Validating input columns"))
     val merged = monthlyMerge(spark, precip, temp, years, district, sector,
       precStation, tempStation).persist()
-    val n = tracked(2, "Computing monthly precipitation and temperature records")(
-      merged.count())
     val table = TableNames.weatherTableName(precStation, tempStation, district,
       sector, years)
-    outDir.foreach { dir =>
-      tracked(3, s"Saving weather records to '$table'")(
-        graft.io.Writers.overwrite(merged, s"$dir/$table"))
+    // one action computes the grid, fills the pin and counts it: the
+    // write when saving, a count otherwise
+    val n = outDir match {
+      case Some(dir) =>
+        tracked(2, "Computing monthly precipitation and temperature records")(())
+        tracked(3, s"Saving weather records to '$table'")(
+          graft.io.Writers.overwrite(merged, s"$dir/$table"))
+      case None =>
+        tracked(2, "Computing monthly precipitation and temperature records")(
+          merged.count())
     }
     processId.foreach(ProgressTracker.complete(_,
       s"Successfully saved $n weather records to '$table'"))

@@ -1826,17 +1826,16 @@ object Curation {
     // threads lets the scheduler overlap them instead of paying one
     // driver-blocking round trip per stratum (guide §1.2; the crash
     // contract is unchanged — a failure mid-fleet leaves the same state
-    // a failure mid-loop did, and re-running heals via the backup dirs)
+    // a failure mid-loop did, and re-running heals via the backup dirs).
+    // On a failed stratum the pool drains before the failure propagates,
+    // so a caller that catches and re-runs forget never races its heal
+    // pass against still-live rewrites
     val hitDirs = fs.listStatus(segRoot)
       .filter(st => st.isDirectory && st.getPath.getName.contains("="))
       .filter(st => hitCounts.contains(st.getPath.getName))
       .toSeq
     if (hitDirs.nonEmpty) fs.mkdirs(bakRoot)
-    import scala.concurrent.{Await, Future, ExecutionContext}
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(8, math.max(1, hitDirs.size)))
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
-    val fleet = Future.traverse(hitDirs) { st => Future {
+    val removed = graft.io.Parallel.map(hitDirs) { st =>
       val name = st.getPath.getName
       val nFiles = math.max(1, fs.listStatus(st.getPath)
         .count(_.getPath.getName.endsWith(".parquet")))
@@ -1849,18 +1848,7 @@ object Curation {
         .parquet(stg.toString)
       graft.io.Swap.promote(fs, stg, st.getPath, new Path(bakRoot, name))
       hitCounts(name)
-    } }
-    val removed =
-      try Await.result(fleet, scala.concurrent.duration.Duration.Inf).sum
-      finally {
-        // on a failed stratum Await rethrows IMMEDIATELY while sibling
-        // futures may still be renaming/swapping their strata — drain the
-        // pool before propagating, so a caller that catches and re-runs
-        // forget never races its heal pass against still-live rewrites
-        pool.shutdown()
-        pool.awaitTermination(1, java.util.concurrent.TimeUnit.HOURS)
-        ()
-      }
+    }.sum
     fs.delete(stgRoot, true)
     if (fs.exists(bakRoot) && fs.listStatus(bakRoot).isEmpty)
       fs.delete(bakRoot, true)

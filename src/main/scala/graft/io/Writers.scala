@@ -1,7 +1,7 @@
 package graft.io
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Sink layer replacing the reference's PostgreSQL drop/create/insert and
@@ -10,7 +10,10 @@ import org.apache.spark.sql.functions._
   *
   *  - replace-mode DROP+INSERT → `overwrite` (stage, then [[Swap]]; improved
   *    failure semantics over the reference, which loses data if the insert
-  *    loop dies after the DROP — documented divergence)
+  *    loop dies after the DROP — documented divergence); several tables of
+  *    one refresh → `overwriteAll` (stage all concurrently, promote none
+  *    unless all staged). Both return the rows written, observed by the
+  *    write job — there is no count-then-write
   *  - `ON CONFLICT (key) DO UPDATE` + inserted/updated tallies → left-anti
   *    union with join-derived [[UpsertStats]] (the reference counts via
   *    `xmax = 0`, postgresql_service.py:169-203)
@@ -26,12 +29,37 @@ object Writers {
     * previous dataset, and a failed first write never leaves a live path
     * (a bare SaveMode.Overwrite deletes the old directory before the new
     * job commits — exactly the reference's DROP-then-die hole this sink
-    * exists to close).
+    * exists to close). Returns the rows written, counted by the write job
+    * itself: callers take a table's row count from here, not from a
+    * `count()` that would run its plan a second time.
     */
-  def overwrite(df: DataFrame, path: String): Unit = {
-    val (fs, live, staged, bak) = restoreSwap(df.sparkSession, path)
-    df.write.mode(SaveMode.Overwrite).parquet(staged.toString)
-    Swap.promote(fs, staged, live, bak)
+  def overwrite(df: DataFrame, path: String): Long = {
+    val staged = overwriteStaged(df, path)
+    staged.promote()
+    staged.rows
+  }
+
+  /** A table written to its staging sibling but not yet live: `rows`
+    * written, and the [[Swap.promote]] that makes them live.
+    */
+  final case class Staged(rows: Long, promote: () => Unit)
+
+  /** Several replace-mode tables as one commit: every table is written to
+    * its `._graft_staging` sibling concurrently ([[Parallel.map]]), then
+    * `beforePromote` runs, then each staged table is promoted over its
+    * live path. Returns the rows written, in table order.
+    *
+    * Nothing is promoted unless every table staged and `beforePromote`
+    * returned: a failed write (or hook) leaves every live table with its
+    * old content and no backup sibling, and the exception surfaces only
+    * after the other writes have drained. Their staging debris is
+    * overwritten by the next write to each path.
+    */
+  def overwriteAll(tables: Seq[(DataFrame, String)], beforePromote: => Unit = ()): Seq[Long] = {
+    val staged = Parallel.map(tables) { case (df, path) => overwriteStaged(df, path) }
+    beforePromote
+    staged.foreach(_.promote())
+    staged.map(_.rows)
   }
 
   /** S10/J6 upsert: incoming rows win on key collision; returns the merged
@@ -90,18 +118,25 @@ object Writers {
   }
 
   /** Two-phase overwrite: materialize `df` to the staging sibling NOW,
-    * return a commit thunk that promotes it LATER. For multi-table
-    * writes where derived tables must not become visible unless a primary
-    * write commits first (e.g. analytics recomputed over a raw store the
-    * upsert is about to replace): stage the derived tables, run the
-    * primary write, then commit. A crash before commit leaves the OLD
-    * derived tables — consistent with whatever raw state survived — and
-    * the next write to the path overwrites the staging debris.
+    * return its row count and the promote that makes it live LATER. For
+    * multi-table writes where derived tables must not become visible
+    * unless a primary write commits first (e.g. analytics recomputed over
+    * a raw store the upsert is about to replace): stage the derived
+    * tables, run the primary write, then promote ([[overwriteAll]] with a
+    * `beforePromote`). A crash before the promote leaves the OLD derived
+    * tables — consistent with whatever raw state survived — and the next
+    * write to the path overwrites the staging debris.
+    *
+    * The count rides the write as an [[Observation]] (one `count(lit(1))`
+    * collected by the write job); on a persisted frame the write reads —
+    * and fills — the cache like any other action.
     */
-  def overwriteStaged(df: DataFrame, path: String): () => Unit = {
+  def overwriteStaged(df: DataFrame, path: String): Staged = {
     val (fs, live, staged, bak) = restoreSwap(df.sparkSession, path)
-    df.write.mode(SaveMode.Overwrite).parquet(staged.toString)
-    () => Swap.promote(fs, staged, live, bak)
+    val written = Observation()
+    df.observe(written, count(lit(1)).as("rows"))
+      .write.mode(SaveMode.Overwrite).parquet(staged.toString)
+    Staged(written.get("rows").asInstanceOf[Long], () => Swap.promote(fs, staged, live, bak))
   }
 
   /** Upsert into a parquet path (read-merge-swap). For Delta-style storage

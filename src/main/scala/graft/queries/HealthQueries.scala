@@ -245,8 +245,8 @@ object HealthQueries {
         FROM lab""")),
 
     // ---- J8 dashboard KPI card (get_kpi_data, data-true version) ----------
-    // Totals + latest-vs-previous-year change strings; the window runs over
-    // the per-YEAR aggregate (a handful of rows), never over raw records.
+    // Totals + latest-vs-previous-year change strings; the change reads the
+    // per-YEAR aggregate (a handful of rows), never raw records.
     Q("q83_dashboard_kpis",
       (s, dir) => graft.api.DashboardPipeline.kpiData(labRecords(s, dir)),
       Some(s"""

@@ -250,4 +250,81 @@ class PipelinesSpec extends SparkSpec {
     assert(YearsParser.parseAny(2024) == Seq(2024))
     assert(YearsParser.parseAny(2024.0) == Seq(2024))
   }
+
+  private def labBatch(year: String, n: Int) = (1 to n).map { i =>
+    (year, (i % 12 + 1).toString, "Gasabo", "Remera", s"HC${i % 3}", s"V${i % 7}",
+      (20 + i % 40).toString, if (i % 2 == 0) "M" else "F",
+      if (i % 3 == 0) "POSITIVE" else "negative")
+  }.toDF("Year", "Month", "District", "Sector", "Health Center", "Village",
+    "Age", "Gender", "Slide Status")
+
+  private def assertCountsMatchStore(res: LabPipeline.Result, dir: String): Unit = {
+    assert(res.analyticsCounts.keySet == res.tableNamesCreated.tail.toSet)
+    res.analyticsCounts.foreach { case (name, n) =>
+      assert(spark.read.parquet(s"$dir/$name").count() == n, name)
+    }
+  }
+
+  test("LabPipeline: analytics counts come from the writes, in replace and append mode") {
+    val dir = Files.createTempDirectory("lab_counts").toString
+    val (first, tag) = graft.QueryProfile.tagged(spark, "lab") {
+      LabPipeline.run(spark, labBatch("2023", 60), LabPipeline.Params(years = Seq(2023)),
+        Some(dir))
+    }
+    assertCountsMatchStore(first, dir)
+    assert(first.analyticsCounts("yearly_statist") == 1)
+    // the lineage pin is the only count the run makes
+    val counts = graft.QueryProfile.read(spark, tag).jobs
+      .filter(_.name.startsWith("count at LabPipeline"))
+    assert(counts.size == 1, counts)
+
+    val second = LabPipeline.run(spark, labBatch("2024", 40),
+      LabPipeline.Params(years = Seq(2024), updateMode = "append"), Some(dir))
+    assertCountsMatchStore(second, dir)
+    assert(second.analyticsCounts("yearly_statist") == 2)
+    assert(spark.read.parquet(s"$dir/hc_raw").count() == 100)
+  }
+
+  test("LabPipeline without a save counts each analytics table") {
+    val res = LabPipeline.run(spark, labBatch("2023", 30),
+      LabPipeline.Params(years = Seq(2023), saveToDb = false))
+    assert(res.analyticsCounts("yearly_statist") == 1)
+    assert(res.analyticsCounts("hc_data_sum") == 1)
+    assert(res.analyticsCounts("hc_data_monthly_pos") == 12)
+  }
+
+  test("WeatherPipeline.run counts the grid with and without a save") {
+    val precip = Seq(("2022", "1", 10.0), ("2023", "2", 80.0)).toDF("Year", "Month", "PRECIP")
+    val temp = Seq(("2023", "1", 25.0)).toDF("Year", "Month", "TMPMAX")
+    val dir = Files.createTempDirectory("weather_counts").toString
+    for (out <- Seq(Some(dir), None)) {
+      val (merged, table, n) = WeatherPipeline.run(spark, precip, temp, Seq(2022, 2023),
+        "Kigali", "all", "p", "t", outDir = out)
+      assert(n == 24, out)
+      assert(merged.count() == 24)
+      out.foreach(d => assert(spark.read.parquet(s"$d/$table").count() == 24))
+      merged.unpersist()
+    }
+  }
+
+  test("GeoPipeline.MergeStats with and without a save, duplicate boundary ids included") {
+    def rect(x0: Double, y0: Double, x1: Double, y1: Double) =
+      Seq(Seq(Seq(x0, y0), Seq(x1, y0), Seq(x1, y1), Seq(x0, y1), Seq(x0, y0)))
+    val boundaries = Seq(
+      ("a", rect(0, 0, 10, 10)),
+      ("a", rect(0, 0, 10, 10)), // the same id twice: one stats row, two merged rows
+      ("b", rect(10, 0, 20, 10)),
+      ("empty", rect(30, 30, 40, 40))).toDF("boundary_id", "geom")
+    val samples = Seq((1.0, 1.0, 2.0), (2.0, 2.0, 4.0), (11.0, 1.0, 20.0), (50.0, 50.0, 9.0))
+      .toDF("x", "y", "value")
+    val dir = Files.createTempDirectory("geo_counts").toString + "/merged"
+    for (out <- Seq(Some(dir), None)) {
+      val (merged, stats) = GeoPipeline.run(spark, boundaries, samples, outDir = out)
+      assert(stats == GeoPipeline.MergeStats(
+        totalBoundaryFeatures = 4, processedFeatures = 2, slopePointsUsed = 3), out)
+      assert(merged.count() == 4)
+      out.foreach(d => assert(spark.read.parquet(d).count() == 4))
+      merged.unpersist()
+    }
+  }
 }

@@ -45,10 +45,11 @@ class WritersSpec extends SparkSpec {
   test("overwriteStaged defers visibility until commit") {
     val dir = Files.createTempDirectory("staged").toString + "/t"
     Writers.overwrite(Seq((1, "old")).toDF("id", "v"), dir)
-    val commit = Writers.overwriteStaged(Seq((1, "new"), (2, "new2")).toDF("id", "v"), dir)
+    val staged = Writers.overwriteStaged(Seq((1, "new"), (2, "new2")).toDF("id", "v"), dir)
+    assert(staged.rows == 2)
     // staged but not committed: readers still see the old table
     assert(spark.read.parquet(dir).collect().map(_.getString(1)).toSeq == Seq("old"))
-    commit()
+    staged.promote()
     val back = spark.read.parquet(dir).collect().map(r => r.getInt(0) -> r.getString(1)).toMap
     assert(back == Map(1 -> "new", 2 -> "new2"))
   }
@@ -57,9 +58,9 @@ class WritersSpec extends SparkSpec {
     val dir = Files.createTempDirectory("stagedfresh").toString + "/t"
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val commit = Writers.overwriteStaged(Seq((1, "a")).toDF("id", "v"), dir)
+    val staged = Writers.overwriteStaged(Seq((1, "a")).toDF("id", "v"), dir)
     assert(!fs.exists(new org.apache.hadoop.fs.Path(dir))) // not yet visible
-    commit()
+    staged.promote()
     assert(spark.read.parquet(dir).count() == 1)
   }
 
@@ -179,5 +180,84 @@ class WritersSpec extends SparkSpec {
       assert(!new java.io.File(dir).exists(),
         s"$name: a failed first write left a live path behind")
     }
+  }
+
+  test("overwrite and overwriteStaged return the rows they wrote") {
+    import org.apache.spark.sql.functions._
+    val base = Files.createTempDirectory("rowsout").toString
+    assert(Writers.overwrite(spark.range(0, 1000, 1, 4).toDF("id"), s"$base/a") == 1000)
+    assert(spark.read.parquet(s"$base/a").count() == 1000)
+    // a persisted frame: the write fills the cache and still counts
+    val pinned = spark.range(0, 50, 1, 3).toDF("id").filter(col("id") % 2 === 0).persist()
+    try assert(Writers.overwrite(pinned, s"$base/b") == 25)
+    finally pinned.unpersist()
+    // empty frames, with and without partitions
+    assert(Writers.overwrite(spark.range(0, 10).filter(col("id") < 0).toDF("id"), s"$base/c") == 0)
+    assert(Writers.overwrite(Seq.empty[(Int, String)].toDF("id", "v"), s"$base/d") == 0)
+    val staged = Writers.overwriteStaged(Seq((1, "a"), (2, "b"), (3, "c")).toDF("id", "v"),
+      s"$base/e")
+    assert(staged.rows == 3)
+    staged.promote()
+    assert(spark.read.parquet(s"$base/e").count() == 3)
+  }
+
+  test("overwriteAll lands every table with its row count") {
+    val base = Files.createTempDirectory("overwriteall").toString
+    Writers.overwrite(Seq((0, "old")).toDF("id", "v"), s"$base/t1")
+    val tables = (1 to 4).map(i => spark.range(0, i * 10L).toDF("id") -> s"$base/t$i")
+    assert(Writers.overwriteAll(tables) == Seq(10L, 20L, 30L, 40L))
+    (1 to 4).foreach { i =>
+      assert(spark.read.parquet(s"$base/t$i").count() == i * 10L)
+      assert(!new java.io.File(s"$base/t$i._graft_staging").exists())
+      assert(!new java.io.File(s"$base/t$i._graft_bak").exists())
+    }
+    assert(Writers.overwriteAll(Nil) == Nil)
+  }
+
+  test("overwriteAll promotes nothing when one table fails, after every write drained") {
+    import org.apache.spark.sql.functions._
+    val base = Files.createTempDirectory("overwriteallfail").toString
+    val paths = (0 to 2).map(i => s"$base/t$i")
+    paths.foreach(p => Writers.overwrite(Seq((-1L, "old")).toDF("id", "v"), p))
+    val failing = spark.range(0, 10).select(
+      when(col("id") === 5, raise_error(lit("boom"))).otherwise(col("id")).as("id"),
+      lit("new").as("v"))
+    // still writing when the failing table has already failed
+    val slowId = udf { (x: Long) => Thread.sleep(300); x }
+    val slow = spark.range(0, 4, 1, 4).select(slowId(col("id")).as("id"), lit("new").as("v"))
+    val fine = spark.range(0, 3).select(col("id"), lit("new").as("v"))
+    val e = intercept[Exception](
+      Writers.overwriteAll(Seq(failing -> paths(0), slow -> paths(1), fine -> paths(2))))
+    def messages(t: Throwable): Seq[String] =
+      if (t == null) Nil else Option(t.getMessage).toSeq ++ messages(t.getCause)
+    assert(messages(e).exists(_.contains("boom")))
+    // the slow write had finished before the failure surfaced
+    assert(new java.io.File(s"${paths(1)}._graft_staging/_SUCCESS").exists())
+    paths.foreach { p =>
+      assert(spark.read.parquet(p).collect().map(_.getString(1)).toSeq == Seq("old"), p)
+      assert(!new java.io.File(s"$p._graft_bak").exists(), p)
+    }
+  }
+
+  test("overwriteAll's jobs all carry the caller's QueryProfile tag") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.functions.col
+    val base = Files.createTempDirectory("overwritealltag").toString
+    val started = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = { started.add(j.jobId); () }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    val (_, tag) = try graft.QueryProfile.tagged(spark, "overwriteAll") {
+      Writers.overwriteAll((1 to 3).map(i =>
+        spark.range(0, 100, 1, 2).groupBy(col("id") % i).count().toDF("k", "n") -> s"$base/t$i"))
+    } finally {
+      org.apache.spark.graft.SparkStatus.drain(sc, 10000L)
+      sc.removeSparkListener(listener)
+    }
+    val profile = graft.QueryProfile.read(spark, tag)
+    assert(started.size >= 3)
+    assert(profile.jobs.size == started.size, profile.jobs)
   }
 }

@@ -15,9 +15,9 @@ val done = {
   java.nio.file.Files.createDirectories(java.nio.file.Paths.get(out))
   // spark-shell's session predates the graft extensions: install the
   // engine profile (native functions, SpatialFilterRule, engine confs)
-  // on it, keeping the shell's shuffle width
-  graft.GraftSession.create(
-    shufflePartitions = spark.conf.get("spark.sql.shuffle.partitions").toInt)
+  // on it, at Bench's shuffle width (one partition per core) so plans
+  // and profiles match Bench's
+  graft.GraftSession.create(shufflePartitions = spark.sparkContext.defaultParallelism)
   spark.sparkContext.setLogLevel("ERROR")
   for (n <- names) {
     spark.catalog.clearCache()
