@@ -23,6 +23,14 @@ object GraftSession {
     // expression-codegen fallback on the gram/bloom projection. A JVM
     // constant, not a data-scale tunable: identical on any cluster.
     "spark.sql.codegen.hugeMethodLimit" -> "8000",
+    // let AQE size a cache fill by its data like any other stage: at
+    // Spark's false default the final stage of every cached plan keeps
+    // one task per shuffle partition, so a 60-row persist fills (and a
+    // write from it makes) 32 tasks and 32 files. Where a pin's hash
+    // partitioning feeds a later join or aggregate, the pin site keeps it
+    // with `util.Widths.pinPartitioned`, a stated-count repartition that
+    // AQE never coalesces.
+    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning" -> "true",
     "spark.sql.session.timeZone" -> "UTC",
     "spark.ui.enabled" -> "false")
 

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.{InputAdapter, SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.window.WindowExec
+import org.apache.spark.graft.SparkStatus
 
 /** What Spark did for one piece of work, read from Spark's own
   * bookkeeping after the work ran. It adds no listener of its own:
@@ -23,11 +25,15 @@ object QueryProfile {
 
   /** One job: its call-site name and wall duration. Jobs that AQE
     * submits from its own threads carry a call site inside Spark
-    * (`…withThreadLocalCaptured… at CompletableFuture.java`); `after` then
-    * names the last job of the work with a call site in user code, which
-    * is the action these stage jobs serve or follow.
+    * (`…withThreadLocalCaptured… at CompletableFuture.java`); `site` then
+    * names the user call site of the action they serve: that of the SQL
+    * execution they ran under (its id is in their
+    * `…-execution-root-id-<n>` job tag), or, for an action outside any
+    * SQL execution such as `queryExecution.toRdd.count()`, the next job
+    * of the work with a call site in user code — the action's own job,
+    * which runs once AQE has materialised its stages.
     */
-  final case class Job(name: String, ms: Long, after: Option[String])
+  final case class Job(name: String, ms: Long, site: Option[String])
 
   /** One physical operator that carries a metric profiled here: its node
     * name, the plan it belongs to (0 = the frame's own plan, k = the k-th
@@ -39,6 +45,13 @@ object QueryProfile {
   final case class Op(name: String, plan: Int, codegenStage: Int, rows: Option[Long],
       pipelineMs: Option[Long], shuffleBytes: Option[Long], peakMemory: Option[Long])
 
+  /** A window operator with no `partitionSpec`: Spark moves all of its
+    * input into one partition and one task. `window` names its outputs
+    * and order keys; `rows` is its input row count, when an operator
+    * below it counts rows.
+    */
+  final case class SingleWindow(plan: Int, window: String, rows: Option[Long])
+
   /** `taskP50Ms` is the median of the stages' median task durations,
     * weighted by each stage's task count (exact when one stage holds most
     * of the tasks); `taskMaxMs` is exact. Bytes are summed over every
@@ -46,7 +59,8 @@ object QueryProfile {
     */
   final case class Profile(jobs: Seq[Job], stages: Int, tasks: Long,
       taskP50Ms: Long, taskMaxMs: Long, shuffleReadBytes: Long,
-      shuffleWriteBytes: Long, spillBytes: Long, ops: Seq[Op]) {
+      shuffleWriteBytes: Long, spillBytes: Long, ops: Seq[Op],
+      singleWindows: Seq[SingleWindow]) {
 
     /** One `{"metric":"profile",…}` line for `name`. */
     def json(name: String): String = {
@@ -58,7 +72,7 @@ object QueryProfile {
       } + "\""
       def mb(b: Long) = f"${b / 1e6}%.3f"
       val js = jobs.map(j => s"""{"name":${str(j.name)},"ms":${j.ms}""" +
-        j.after.fold("")(a => s""","after":${str(a)}""") + "}")
+        j.site.fold("")(a => s""","site":${str(a)}""") + "}")
       val os = ops.map { o =>
         (Seq(s""""op":${str(o.name)}""") ++
           Option(o.plan).filter(_ > 0).map(k => s""""plan":$k""") ++
@@ -69,11 +83,17 @@ object QueryProfile {
           o.peakMemory.map(b => s""""peak_mb":${mb(b)}"""))
           .mkString("{", ",", "}")
       }
+      val ws = singleWindows.map { w =>
+        (Option(w.plan).filter(_ > 0).map(k => s""""plan":$k""") ++
+          Seq(s""""window":${str(w.window)}""") ++ w.rows.map(r => s""""rows":$r"""))
+          .mkString("{", ",", "}")
+      }
       s"""{"metric":"profile","name":${str(name)},"jobs":${jobs.size},""" +
         s""""stages":$stages,"tasks":$tasks,"task_p50_ms":$taskP50Ms,""" +
         s""""task_max_ms":$taskMaxMs,"shuffle_read_mb":${mb(shuffleReadBytes)},""" +
         s""""shuffle_write_mb":${mb(shuffleWriteBytes)},"spill_mb":${mb(spillBytes)},""" +
-        s""""job_list":${js.mkString("[", ",", "]")},"ops":${os.mkString("[", ",", "]")}}"""
+        s""""job_list":${js.mkString("[", ",", "]")},"ops":${os.mkString("[", ",", "]")},""" +
+        s""""single_partition_windows":${ws.mkString("[", ",", "]")}}"""
     }
   }
 
@@ -90,12 +110,30 @@ object QueryProfile {
     try (body, tag) finally sc.removeJobTag(tag)
   }
 
+  private val rootExecution = """-execution-root-id-(\d+)$""".r.unanchored
+  private val frame = """(?:.*/)?([^/(]+)\.([^.(]+)\(([^:)]*)(?::(\d+))?\)""".r
+
+  /** Spark's short call-site form (`count at Foo.scala:12`) rebuilt from
+    * the long form a SQL execution records: the last Spark method on its
+    * first line, the first user frame on its second. The execution's
+    * description is the short form only while no job description is set
+    * (a [[graft.api.ProgressTracker]] stage sets one), so it is only the
+    * fallback.
+    */
+  private def shortForm(details: String, description: String): String =
+    details.split("\n").take(2) match {
+      case Array(frame(cls, method, _, _), frame(_, _, file, line)) =>
+        val m = if (method == "<init>") cls.substring(cls.lastIndexOf('.') + 1) else method
+        s"$m at $file:${Option(line).getOrElse("0")}"
+      case _ => description
+    }
+
   /** The profile of the jobs tagged `tag`, with the operators of `df`'s
     * executed plan when the work returned a frame.
     */
   def read(spark: SparkSession, tag: String, df: Option[DataFrame] = None): Profile = {
-    val (jobs, stages) = org.apache.spark.graft.SparkStatus.tagged(
-      spark.sparkContext, tag, Array(0.5, 1.0))
+    val sc = spark.sparkContext
+    val (jobs, stages) = SparkStatus.tagged(sc, tag, Array(0.5, 1.0))
     val byStage = stages.map { case (s, q) =>
       val d = q.map(_.duration).getOrElse(IndexedSeq(0.0, 0.0))
       (s.numCompleteTasks.toLong, d(0).toLong, d(1).toLong)
@@ -104,19 +142,25 @@ object QueryProfile {
     val p50 = byStage.sortBy(_._2).scanLeft((0L, 0L)) { case ((n, _), (k, m, _)) => (n + k, m) }
       .find(_._1 * 2 >= tasks).fold(0L)(_._2)
     val aqe = (name: String) => name.contains("withThreadLocalCaptured")
-    val lastNamed = jobs.scanLeft("")((last, j) => if (aqe(j.name)) last else j.name)
+    val nextNamed = jobs.scanRight("")((j, next) => if (aqe(j.name)) next else j.name).tail
+    val executionSite = (tags: collection.Seq[String]) => tags.collectFirst {
+      case rootExecution(id) => id.toLong
+    }.flatMap(SparkStatus.execution(sc, _)).map((shortForm _).tupled)
+    val (ops, windows) = df.fold((Seq.empty[Op], Seq.empty[SingleWindow]))(d =>
+      operators(d.queryExecution.executedPlan))
     Profile(
-      jobs.zip(lastNamed).map { case (j, last) =>
+      jobs.zip(nextNamed).map { case (j, next) =>
         Job(j.name, (for (s <- j.submissionTime; e <- j.completionTime)
           yield e.getTime - s.getTime).getOrElse(-1L),
-          if (aqe(j.name) && last.nonEmpty) Some(last) else None)
+          if (!aqe(j.name)) None
+          else executionSite(j.jobTags).orElse(Some(next).filter(_.nonEmpty)))
       },
       stages.size, tasks, p50,
       if (byStage.isEmpty) 0L else byStage.map(_._3).max,
       stages.map(_._1.shuffleReadBytes).sum,
       stages.map(_._1.shuffleWriteBytes).sum,
       stages.map { case (s, _) => s.memoryBytesSpilled + s.diskBytesSpilled }.sum,
-      df.fold(Seq.empty[Op])(d => operators(d.queryExecution.executedPlan)))
+      ops, windows)
   }
 
   /** Every operator of `plan` carrying a profiled metric, AQE wrappers
@@ -124,11 +168,20 @@ object QueryProfile {
     * included (their metrics hold the cache fill, which Bench's
     * `clearCache` before each row keeps inside the row). A reused
     * exchange is a leaf here, so its bytes count once, at the exchange
-    * that wrote them.
+    * that wrote them. Alongside: every window with no partition spec.
     */
-  private def operators(plan: SparkPlan): Seq[Op] = {
+  private def operators(plan: SparkPlan): (Seq[Op], Seq[SingleWindow]) = {
     val cached = scala.collection.mutable.ArrayBuffer[SparkPlan]()
+    val windows = scala.collection.mutable.ArrayBuffer[SingleWindow]()
     def metric(p: SparkPlan, key: String) = p.metrics.get(key).map(m => math.max(m.value, 0L))
+    // a window keeps its input's rows: count them at the nearest operator
+    // below that counts rows (the exchange into its one partition, if any)
+    def rowsIn(p: SparkPlan): Option[Long] = p match {
+      case a: AdaptiveSparkPlanExec => rowsIn(a.executedPlan)
+      case s: QueryStageExec => rowsIn(s.plan)
+      case _ => metric(p, "numOutputRows").orElse(metric(p, "shuffleRecordsWritten"))
+        .orElse(p.children match { case Seq(c) => rowsIn(c); case _ => None })
+    }
     def walk(p: SparkPlan, in: Int, wscg: Int): Seq[Op] = p match {
       case a: AdaptiveSparkPlanExec => walk(a.executedPlan, in, wscg)
       case s: QueryStageExec => walk(s.plan, in, wscg)
@@ -145,6 +198,13 @@ object QueryProfile {
           case _: InputAdapter => 0
           case _ => wscg
         }
+        p match {
+          case w: WindowExec if w.partitionSpec.isEmpty =>
+            val keys = w.orderSpec.map(_.child.references.map(_.name).mkString("+"))
+            windows += SingleWindow(in, w.windowExpression.map(_.name).mkString(",") +
+              keys.mkString(" ORDER BY ", ",", ""), rowsIn(w.child))
+          case _ =>
+        }
         val op = Op(p.nodeName, in, stage, metric(p, "numOutputRows"),
           metric(p, "pipelineTime"), metric(p, "shuffleBytesWritten"),
           metric(p, "peakMemory"))
@@ -154,6 +214,7 @@ object QueryProfile {
           else Nil
         self ++ (p.children ++ p.subqueries).flatMap(walk(_, in, stage))
     }
-    walk(plan, 0, 0)
+    val ops = walk(plan, 0, 0)
+    (ops, windows.toSeq)
   }
 }

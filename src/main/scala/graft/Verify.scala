@@ -16,10 +16,18 @@ object Verify {
       only.forall(_.contains(name))
     }
     selected.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+      // one profile line per query on stderr, leaving outDir as the oracle
+      // check reads it: the jobs, stages and tasks of its build and write
+      val (_, tag) = QueryProfile.tagged(spark, name) {
+        try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name")
+        catch { case e: Throwable =>
+          System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        }
+      }
+      try System.err.println(QueryProfile.read(spark, tag).json(name))
+      catch { case scala.util.control.NonFatal(e) =>
+        System.err.println(s"[verify] $name profile unreadable: $e")
       }
       // queries that persist() an intermediate (q35, q113) would otherwise
       // pin cached blocks across the whole 110-query sweep

@@ -3,6 +3,7 @@ package graft.graph
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
+import graft.util.Widths.pinPartitioned
 
 /** Link-graph quality signals for a document corpus — the CommonCrawl
   * discipline: a page's in-link structure is a quality prior (PageRank /
@@ -79,15 +80,15 @@ object LinkGraph {
     // and feeds the loop's data-adaptive shuffle width
     val nEdges = ed.count()
     withAdaptiveShuffleWidth(ed, nEdges) {
-      val nodes = ed.select(col("src").as("node_id"))
+      // both pins are hash-partitioned on the loop's join keys, so each
+      // round shuffles only its node-grain contributions
+      val nodes = pinPartitioned(ed.select(col("src").as("node_id"))
         .union(ed.select(col("dst").as("node_id")))
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .distinct(), "node_id")
       // outdeg rides WITH the edge rows so each iteration's contribution
       // pass is scan+join only — degree is paid once, not per round.
-      val e = ed
-        .join(ed.groupBy("src").agg(count(lit(1)).as("outdeg")), "src")
-        .persist(StorageLevel.MEMORY_AND_DISK)
+      val e = pinPartitioned(
+        ed.join(ed.groupBy("src").agg(count(lit(1)).as("outdeg")), "src"), "src")
       val base = scale * 15L / 100L
       var ranks = nodes.withColumn("pr", lit(scale))
       for (i <- 1 to iters) {
@@ -129,10 +130,11 @@ object LinkGraph {
       .persist(StorageLevel.MEMORY_AND_DISK)
     val nEdges = e.count() // materialize the pin + adaptive-width input
     withAdaptiveShuffleWidth(e, nEdges) {
-      val nodes = e.select(col("src").as("node_id"))
+      // partitioned on the rescale joins' key; the edges are joined on
+      // src and dst in turn, so no one partitioning of theirs serves both
+      val nodes = pinPartitioned(e.select(col("src").as("node_id"))
         .union(e.select(col("dst").as("node_id")))
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .distinct(), "node_id")
       var hub = nodes.withColumn("h", lit(scale))
       var auth = nodes.withColumn("a", lit(0L))
       for (_ <- 1 to iters) {
@@ -200,17 +202,16 @@ object LinkGraph {
         .union(ed.select(col("dst").as("node_id")))
         .distinct()
         .persist(StorageLevel.MEMORY_AND_DISK)
-      val e = ed
-        .join(ed.groupBy("src").agg(count(lit(1)).as("outdeg")), "src")
-        .persist(StorageLevel.MEMORY_AND_DISK)
+      // partitioned on the loop's join keys — see [[pagerank]]
+      val e = pinPartitioned(
+        ed.join(ed.groupBy("src").agg(count(lit(1)).as("outdeg")), "src"), "src")
       // distinct: a duplicated seed row would duplicate every rank row and
       // double that node's out-contribution each round.
-      val seeded = nodes.join(
+      val seeded = pinPartitioned(nodes.join(
         broadcast(seeds.select(col("node_id")).distinct()
           .withColumn("_is_seed", lit(1L))),
         Seq("node_id"), "left")
-        .select(col("node_id"), coalesce(col("_is_seed"), lit(0L)).as("s"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .select(col("node_id"), coalesce(col("_is_seed"), lit(0L)).as("s")), "node_id")
       val base = scale * 15L / 100L
       var ranks = seeded.select(col("node_id"), (col("s") * scale).as("pr"))
       for (i <- 1 to iters) {
@@ -265,10 +266,10 @@ object LinkGraph {
       // deterministic seed dedup: conflicting labels for one node resolve
       // to the max label (any duplicate row would otherwise duplicate the
       // node through every round and double its votes).
-      val seeded = nodes.join(
+      // partitioned on the per-round label and mode joins' key
+      val seeded = pinPartitioned(nodes.join(
         seeds.groupBy("node_id").agg(max(col("label")).as("seed_label")),
-        Seq("node_id"), "left")
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        Seq("node_id"), "left"), "node_id")
       var labels = seeded.select(col("node_id"), col("seed_label").as("label"))
       for (i <- 1 to iters) {
         val votes = e

@@ -1098,14 +1098,15 @@ object TextQueries {
         val bandRows = minhashBandRows(s, dir)
         val qIds = bandRows.select(col("doc_id")).distinct()
           .filter(col("doc_id") % 50 === 0 && col("doc_id") < 1000000L)
-        val cands = bandRows
+        // partitioned on the final shuffle-merge join's keys, which that
+        // join reuses instead of re-shuffling the pin under each text arm
+        val cands = graft.util.Widths.pinPartitioned(bandRows
           .join(broadcast(qIds), Seq("doc_id"))
           .select(col("band_key"), col("doc_id").as("q_id"))
           .join(bandRows.select(col("band_key"), col("doc_id").as("doc_b")),
             Seq("band_key"))
           .filter(col("doc_b") =!= col("q_id"))
-          .select("q_id", "doc_b").distinct()
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          .select("q_id", "doc_b").distinct(), "q_id", "doc_b")
         val docs = corpus(s, dir)
         // no broadcast hint on cands: the candidate frame is query-count ×
         // per-band-matches — a dup-heavy corpus or a large query set can

@@ -1,6 +1,7 @@
 package org.apache.spark.graft
 
 import org.apache.spark.SparkContext
+import org.apache.spark.sql.execution.ui.SQLAppStatusStore
 import org.apache.spark.status.api.v1.{JobData, StageData, StageStatus, TaskMetricDistributions}
 
 /** `SparkContext.listenerBus` and `statusStore` are `private[spark]`, so
@@ -35,4 +36,13 @@ object SparkStatus {
     }
     (jobs, stages)
   }
+
+  /** The call-site stack Spark recorded for SQL execution `id` (one
+    * frame a line, the last Spark method first) and its description, if
+    * the store still retains the execution. SQL executions share the
+    * application's store with jobs and stages.
+    */
+  def execution(sc: SparkContext, id: Long): Option[(String, String)] =
+    new SQLAppStatusStore(sc.statusStore.store, None).execution(id)
+      .map(e => (e.details, e.description))
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec, AdaptiveSparkPlanHelper}
 import org.apache.spark.sql.execution.aggregate.HashAggregateExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** QueryProfile reads Spark's own bookkeeping for the jobs of one tag:
@@ -91,5 +92,39 @@ class QueryProfileSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     val shapes = frames.map(planShape)
     assert(p.stages == shapes.map(_._1).sum && p.tasks == shapes.map(_._2).sum, p)
     assert(p.shuffleWriteBytes == shapes.map(_._3.metrics("shuffleBytesWritten").value).sum, p)
+  }
+
+  test("AQE's stage jobs are named by the action they serve") {
+    val (a, b) = (grouped(), grouped())
+    val (_, tag) = QueryProfile.tagged(spark, "sites") {
+      a.collect()
+      b.collect()
+      run(grouped()) // an RDD action: no SQL execution to name it
+    }
+    val p = QueryProfile.read(spark, tag)
+    // AQE submits all of a collect's jobs, its result stage's included,
+    // and the map stage of the RDD action; only that action's own job
+    // carries a user call site
+    val (stageJobs, actions) = p.jobs.partition(_.site.isDefined)
+    assert(actions.map(_.name.takeWhile(_ != ' ')) == Seq("count"), p.jobs)
+    assert(stageJobs.forall(_.name.contains("withThreadLocalCaptured")), p.jobs)
+    // each job is named by the action it serves, not by the one before it
+    val sites = p.jobs.map(j => j.site.getOrElse(j.name))
+    assert(sites.distinct.map(_.takeWhile(_ != ' ')) == Seq("collect", "collect", "count"), sites)
+    assert(sites == sites.distinct.flatMap(s => sites.filter(_ == s)), sites)
+    assert(sites.count(_ == sites.last) == 2, sites)
+  }
+
+  test("a window with no partition spec is flagged with its input rows") {
+    val df = spark.range(0, 500, 1, mapTasks)
+      .withColumn("rn", row_number().over(Window.orderBy(col("id").desc)))
+      .withColumn("r7", rank().over(Window.partitionBy(col("id") % 7).orderBy("id")))
+    val (_, tag) = QueryProfile.tagged(spark, "window")(run(df))
+    val p = QueryProfile.read(spark, tag, Some(df))
+    assert(p.singleWindows == Seq(QueryProfile.SingleWindow(0, "rn ORDER BY id", Some(500L))),
+      p.singleWindows)
+    assert(p.json("window").endsWith(
+      """"single_partition_windows":[{"window":"rn ORDER BY id","rows":500}]}"""))
+    assert(QueryProfile.read(spark, tag).singleWindows.isEmpty)
   }
 }

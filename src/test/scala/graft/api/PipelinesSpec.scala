@@ -307,6 +307,36 @@ class PipelinesSpec extends SparkSpec {
     }
   }
 
+  private def partFiles(dir: String): Int =
+    new java.io.File(dir).list().count(_.startsWith("part-"))
+
+  test("a saved weather grid and geo merge are each written as one part file") {
+    // small pins fill in as few tasks as their data needs, not one per
+    // shuffle partition of the session
+    val months = for (y <- 2019 to 2023; m <- 1 to 12) yield (y.toString, m.toString, m * 10.0)
+    val precip = months.toDF("Year", "Month", "PRECIP")
+    val temp = months.map { case (y, m, _) => (y, m, 25.0) }.toDF("Year", "Month", "TMPMAX")
+    val wdir = Files.createTempDirectory("weather_parts").toString
+    val (grid, table, n) = WeatherPipeline.run(spark, precip, temp, 2019 to 2023,
+      "Kigali", "all", "p", "t", outDir = Some(wdir))
+    assert(n == 60)
+    assert(partFiles(s"$wdir/$table") == 1)
+    grid.unpersist()
+
+    val cells = for (i <- 0 until 8; j <- 0 until 8) yield
+      (s"c$i$j", Seq(Seq(Seq(i * 10.0, j * 10.0), Seq(i * 10.0 + 10, j * 10.0),
+        Seq(i * 10.0 + 10, j * 10.0 + 10), Seq(i * 10.0, j * 10.0 + 10), Seq(i * 10.0, j * 10.0))))
+    // one partition, as ShapefileZip.read gives
+    val boundaries = spark.sparkContext.parallelize(cells, 1).toDF("boundary_id", "geom")
+    val samples = (for (x <- 0 until 80 by 3; y <- 0 until 80 by 3) yield (x + 0.5, y + 0.5, 1.0 * x))
+      .toDF("x", "y", "value")
+    val gdir = Files.createTempDirectory("geo_parts").toString + "/merged"
+    val (merged, stats) = GeoPipeline.run(spark, boundaries, samples, outDir = Some(gdir))
+    assert(stats.totalBoundaryFeatures == 64 && stats.processedFeatures == 64)
+    assert(partFiles(gdir) == 1)
+    merged.unpersist()
+  }
+
   test("GeoPipeline.MergeStats with and without a save, duplicate boundary ids included") {
     def rect(x0: Double, y0: Double, x1: Double, y1: Double) =
       Seq(Seq(Seq(x0, y0), Seq(x1, y0), Seq(x1, y1), Seq(x0, y1), Seq(x0, y0)))

@@ -1,8 +1,9 @@
 #!/usr/bin/env python3
 """Diff two sets of tools/explain_dump.scala outputs, ignoring run noise.
 
-explain_dump.scala writes <query>_<tag>.txt. This script pairs every
-<query>_<before>.txt with <query>_<after>.txt in one directory, normalises
+explain_dump.scala writes <query>_<tag>.txt (a plan too large to keep as
+text may be stored gzipped, as <query>_<tag>.txt.gz). This script pairs
+every <query>_<before>.txt with <query>_<after>.txt in one directory, normalises
 what changes between JVMs without changing the plan, and prints a unified
 diff per query whose plans differ:
 
@@ -20,6 +21,7 @@ file, 2 when no pair is found.
 """
 import argparse
 import difflib
+import gzip
 import os
 import re
 import sys
@@ -41,7 +43,7 @@ def normalise(text):
 
 def pairs(directory, before, after):
     suffix_b, suffix_a = f"_{before}.txt", f"_{after}.txt"
-    names = sorted(os.listdir(directory))
+    names = sorted(n[: -len(".gz")] if n.endswith(".gz") else n for n in os.listdir(directory))
     befores = {n[: -len(suffix_b)] for n in names if n.endswith(suffix_b)}
     afters = {n[: -len(suffix_a)] for n in names if n.endswith(suffix_a)}
     return sorted(befores & afters), sorted(befores ^ afters)
@@ -62,7 +64,12 @@ def main():
     for q in matched:
         texts = []
         for tag in (args.before, args.after):
-            with open(os.path.join(args.dir, f"{q}_{tag}.txt"), encoding="utf-8") as f:
+            path = os.path.join(args.dir, f"{q}_{tag}.txt")
+            if os.path.exists(path + ".gz"):
+                f = gzip.open(path + ".gz", "rt", encoding="utf-8")
+            else:
+                f = open(path, encoding="utf-8")
+            with f:
                 texts.append(normalise(f.read()).splitlines(keepends=True))
         diff = list(difflib.unified_diff(*texts, f"{q}_{args.before}", f"{q}_{args.after}"))
         if diff:
