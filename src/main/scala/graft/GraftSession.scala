@@ -23,6 +23,22 @@ object GraftSession {
     // expression-codegen fallback on the gram/bloom projection. A JVM
     // constant, not a data-scale tunable: identical on any cluster.
     "spark.sql.codegen.hugeMethodLimit" -> "8000",
+    // keep every generated class of a warm engine compiled: at Spark's
+    // 100 default one healthflow cycle (265-282 compiles) or one q191 run
+    // (~200) evicts the previous run's classes, so each request pays its
+    // Janino compiles again. Static: `CodeGenerator` reads it once per
+    // JVM, when it first compiles, so it takes effect only from a session
+    // built here (or a `--conf` at launch). Spark 4.1 keys an entry by
+    // (context class loader, source), so in local mode each whole-stage
+    // class is held twice: for the planner's compile check and for the
+    // tasks. Guava splits the bound over 4 segments; 2000 leaves ~4x
+    // headroom over the ~500 entries both benchmark chains need together.
+    "spark.sql.codegen.cache.maxEntries" -> "2000",
+    // and keep a class's source independent of the order AQE plans its
+    // stages: with the stage id in the class name, two concurrent
+    // aggregates (the weather grid's) swap ids between runs, and each
+    // swap is a cache miss. Class names lose the id; plans keep it.
+    "spark.sql.codegen.useIdInClassName" -> "false",
     // let AQE size a cache fill by its data like any other stage: at
     // Spark's false default the final stage of every cached plan keeps
     // one task per shuffle partition, so a 60-row persist fills (and a

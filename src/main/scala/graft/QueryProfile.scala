@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.execution.{InputAdapter, SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
@@ -19,7 +21,9 @@ import org.apache.spark.graft.SparkStatus
   *     of the frame the work returned, AQE stages unwrapped, with the plans
   *     of the cached relations it scans. These fill in
   *     whether or not the action ran under a SQL execution id, so
-  *     `queryExecution.toRdd.count()` is profiled like `collect()`.
+  *     `queryExecution.toRdd.count()` is profiled like `collect()`;
+  *   - codegen work (classes compiled, Janino time) is the change of
+  *     Spark's codegen counters across the tagged body ([[Tag]]).
   */
 object QueryProfile {
 
@@ -52,15 +56,27 @@ object QueryProfile {
     */
   final case class SingleWindow(plan: Int, window: String, rows: Option[Long])
 
+  /** A job tag set around one piece of work ([[tagged]]), with the
+    * classes Spark compiled while it ran and their Janino time. Those two
+    * come from JVM-wide counters (`CodegenMetrics.METRIC_COMPILATION_TIME`
+    * and `CodeGenerator.compileTime`), so they are exact only when nothing
+    * else compiles at the same time, as in Bench and Verify, which run
+    * their queries one at a time. A compile is a miss of Spark's codegen
+    * cache: rerunning a plan whose classes the cache still holds compiles
+    * nothing.
+    */
+  final case class Tag(name: String, compiles: Long, compileMs: Long)
+
   /** `taskP50Ms` is the median of the stages' median task durations,
     * weighted by each stage's task count (exact when one stage holds most
     * of the tasks); `taskMaxMs` is exact. Bytes are summed over every
-    * attempt of every stage the tagged jobs ran.
+    * attempt of every stage the tagged jobs ran. `compiles` and
+    * `compileMs` are the [[Tag]]'s.
     */
   final case class Profile(jobs: Seq[Job], stages: Int, tasks: Long,
       taskP50Ms: Long, taskMaxMs: Long, shuffleReadBytes: Long,
-      shuffleWriteBytes: Long, spillBytes: Long, ops: Seq[Op],
-      singleWindows: Seq[SingleWindow]) {
+      shuffleWriteBytes: Long, spillBytes: Long, compiles: Long, compileMs: Long,
+      ops: Seq[Op], singleWindows: Seq[SingleWindow]) {
 
     /** One `{"metric":"profile",…}` line for `name`. */
     def json(name: String): String = {
@@ -92,6 +108,7 @@ object QueryProfile {
         s""""stages":$stages,"tasks":$tasks,"task_p50_ms":$taskP50Ms,""" +
         s""""task_max_ms":$taskMaxMs,"shuffle_read_mb":${mb(shuffleReadBytes)},""" +
         s""""shuffle_write_mb":${mb(shuffleWriteBytes)},"spill_mb":${mb(spillBytes)},""" +
+        s""""compiles":$compiles,"compile_ms":$compileMs,""" +
         s""""job_list":${js.mkString("[", ",", "]")},"ops":${os.mkString("[", ",", "]")},""" +
         s""""single_partition_windows":${ws.mkString("[", ",", "]")}}"""
     }
@@ -103,11 +120,14 @@ object QueryProfile {
     * threads Spark hands its local properties to, such as broadcast
     * builds) tagged; returns its result and the tag to [[read]] with.
     */
-  def tagged[T](spark: SparkSession, label: String)(body: => T): (T, String) = {
-    val tag = s"$label#${seq.incrementAndGet()}"
+  def tagged[T](spark: SparkSession, label: String)(body: => T): (T, Tag) = {
+    val name = s"$label#${seq.incrementAndGet()}"
     val sc = spark.sparkContext
-    sc.addJobTag(tag)
-    try (body, tag) finally sc.removeJobTag(tag)
+    def compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val (c0, ns0) = (compiles, CodeGenerator.compileTime)
+    sc.addJobTag(name)
+    val result = try body finally sc.removeJobTag(name)
+    (result, Tag(name, compiles - c0, (CodeGenerator.compileTime - ns0) / 1000000L))
   }
 
   private val rootExecution = """-execution-root-id-(\d+)$""".r.unanchored
@@ -131,9 +151,9 @@ object QueryProfile {
   /** The profile of the jobs tagged `tag`, with the operators of `df`'s
     * executed plan when the work returned a frame.
     */
-  def read(spark: SparkSession, tag: String, df: Option[DataFrame] = None): Profile = {
+  def read(spark: SparkSession, tag: Tag, df: Option[DataFrame] = None): Profile = {
     val sc = spark.sparkContext
-    val (jobs, stages) = SparkStatus.tagged(sc, tag, Array(0.5, 1.0))
+    val (jobs, stages) = SparkStatus.tagged(sc, tag.name, Array(0.5, 1.0))
     val byStage = stages.map { case (s, q) =>
       val d = q.map(_.duration).getOrElse(IndexedSeq(0.0, 0.0))
       (s.numCompleteTasks.toLong, d(0).toLong, d(1).toLong)
@@ -160,7 +180,7 @@ object QueryProfile {
       stages.map(_._1.shuffleReadBytes).sum,
       stages.map(_._1.shuffleWriteBytes).sum,
       stages.map { case (s, _) => s.memoryBytesSpilled + s.diskBytesSpilled }.sum,
-      ops, windows)
+      tag.compiles, tag.compileMs, ops, windows)
   }
 
   /** Every operator of `plan` carrying a profiled metric, AQE wrappers

@@ -115,6 +115,21 @@ class QueryProfileSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(sites.count(_ == sites.last) == 2, sites)
   }
 
+  test("a plan's classes are compiled under its first tag only") {
+    // a fresh literal is inlined into the generated source, so no earlier
+    // suite can have compiled this plan's classes
+    val salt = System.nanoTime()
+    def df = spark.range(0, 2000, 1, mapTasks)
+      .groupBy(((col("id") * lit(salt)) % keys).as("k")).count()
+    val (_, first) = QueryProfile.tagged(spark, "first")(run(df))
+    val (_, again) = QueryProfile.tagged(spark, "again")(run(df))
+    assert(first.compiles > 0, first)
+    assert(again.compiles == 0, again)
+    val p = QueryProfile.read(spark, first)
+    assert(p.compiles == first.compiles && p.compileMs == first.compileMs, p)
+    assert(p.json("first").contains(s""""compiles":${first.compiles},"compile_ms":"""))
+  }
+
   test("a window with no partition spec is flagged with its input rows") {
     val df = spark.range(0, 500, 1, mapTasks)
       .withColumn("rn", row_number().over(Window.orderBy(col("id").desc)))

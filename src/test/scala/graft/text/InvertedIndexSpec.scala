@@ -171,7 +171,7 @@ class InvertedIndexSpec extends SparkSpec
     val warnings = graft.LogCapture.recomputedBlocks {
       tag = graft.QueryProfile.tagged(spark, "inv-build") {
         InvertedIndex.build(spark, docs, s"$base/idx")
-      }._2
+      }._2.name
     }
     assert(warnings.isEmpty, warnings)
     // the df aggregate and the postings write read the pin in one plan;

@@ -2,13 +2,16 @@
 // index-build / training / classifier hot paths in isolation (fresh
 // scratch dirs, same code paths as the registry rows). Iterate with:
 //   SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 /opt/spark/bin/spark-shell \
-//     --master 'local[32]' --jars target/scala-2.13/geoscalehealthflowetldjangoanalyticsspark_2.13-0.1.0.jar \
+//     --master 'local[32]' --conf spark.sql.codegen.cache.maxEntries=2000 \
+//     --jars target/scala-2.13/geoscalehealthflowetldjangoanalyticsspark_2.13-0.1.0.jar \
 //     -I tools/bench_probe.scala 2>/dev/null | grep PROBE
 import org.apache.spark.sql.functions._
 val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 // spark-shell's session predates the graft extensions: install the
 // engine profile (native functions, SpatialFilterRule, engine confs)
-// on it, keeping the shell's shuffle width
+// on it (a static conf never reaches an existing session: launch with
+// --conf spark.sql.codegen.cache.maxEntries=2000 to size the codegen
+// cache as GraftSession does), keeping the shell's shuffle width
 graft.GraftSession.create(
   shufflePartitions = spark.conf.get("spark.sql.shuffle.partitions").toInt)
 spark.sparkContext.setLogLevel("ERROR")

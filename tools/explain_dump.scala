@@ -4,7 +4,8 @@
 //   GRAFT_EXPLAIN_QUERIES=q215_inverted_index_merge,q267_quality_classifier \
 //   GRAFT_EXPLAIN_OUT=plans/r17 GRAFT_EXPLAIN_TAG=before \
 //   SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 \
-//   /opt/spark/bin/spark-shell --master 'local[8]' --jars <jar> -I tools/explain_dump.scala
+//   $SPARK_HOME/bin/spark-shell --master 'local[8]' \
+//     --conf spark.sql.codegen.cache.maxEntries=2000 --jars <jar> -I tools/explain_dump.scala
 val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 val out = sys.env.getOrElse("GRAFT_EXPLAIN_OUT", "plans/r17")
 val tag = sys.env.getOrElse("GRAFT_EXPLAIN_TAG", "before")
@@ -12,7 +13,9 @@ val names = sys.env.getOrElse("GRAFT_EXPLAIN_QUERIES", "").split(",").map(_.trim
 java.nio.file.Files.createDirectories(java.nio.file.Paths.get(out))
 // spark-shell's session predates the graft extensions: install the
 // engine profile (native functions, SpatialFilterRule, engine confs)
-// on it, keeping the shell's shuffle width
+// on it (a static conf never reaches an existing session: launch with
+// --conf spark.sql.codegen.cache.maxEntries=2000 to size the codegen
+// cache as GraftSession does), keeping the shell's shuffle width
 graft.GraftSession.create(
   shufflePartitions = spark.conf.get("spark.sql.shuffle.partitions").toInt)
 spark.sparkContext.setLogLevel("ERROR")

@@ -16,7 +16,9 @@ val done = {
   // spark-shell's session predates the graft extensions: install the
   // engine profile (native functions, SpatialFilterRule, engine confs)
   // on it, at Bench's shuffle width (one partition per core) so plans
-  // and profiles match Bench's
+  // and profiles match Bench's. A static conf never reaches an existing
+  // session: launch with --conf spark.sql.codegen.cache.maxEntries=2000,
+  // or the profiles' compile counts differ from Bench's
   graft.GraftSession.create(shufflePartitions = spark.sparkContext.defaultParallelism)
   spark.sparkContext.setLogLevel("ERROR")
   for (n <- names) {

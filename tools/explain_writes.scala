@@ -14,7 +14,8 @@
 // a loop over cell directories pairs up whatever order the FS lists
 // them in. Run once per jar and compare with tools/plan_diff.py:
 //   GRAFT_EXPLAIN_OUT=plans/<dir> GRAFT_EXPLAIN_TAG=before \
-//     spark-shell --master 'local[2]' --jars <jar> \
+//     spark-shell --master 'local[2]' \
+//     --conf spark.sql.codegen.cache.maxEntries=2000 --jars <jar> \
 //     -I tools/explain_writes.scala
 import org.apache.spark.sql.functions._
 import java.util.concurrent.ConcurrentLinkedQueue
@@ -24,7 +25,9 @@ val tag = sys.env.getOrElse("GRAFT_EXPLAIN_TAG", "after")
 java.nio.file.Files.createDirectories(java.nio.file.Paths.get(out))
 // spark-shell's session predates the graft extensions: install the
 // engine profile (native functions, SpatialFilterRule, engine confs)
-// on it, keeping the shell's shuffle width
+// on it (a static conf never reaches an existing session: launch with
+// --conf spark.sql.codegen.cache.maxEntries=2000 to size the codegen
+// cache as GraftSession does), keeping the shell's shuffle width
 graft.GraftSession.create(
   shufflePartitions = spark.conf.get("spark.sql.shuffle.partitions").toInt)
 spark.sparkContext.setLogLevel("ERROR")

@@ -1,12 +1,15 @@
 // A/B probe for q209_packed_corpus_forget (writePackedCorpus pin).
 // Run: SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 /opt/spark/bin/spark-shell \
 //   --master 'local[32]' --conf spark.sql.shuffle.partitions=32 \
+//   --conf spark.sql.codegen.cache.maxEntries=2000 \
 //   --jars <jar> -I tools/probe_q209.scala 2>/dev/null | grep PROBE
 import org.apache.spark.sql.functions._
 val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 // spark-shell's session predates the graft extensions: install the
 // engine profile (native functions, SpatialFilterRule, engine confs)
-// on it, keeping the shell's shuffle width
+// on it (a static conf never reaches an existing session: launch with
+// --conf spark.sql.codegen.cache.maxEntries=2000 to size the codegen
+// cache as GraftSession does), keeping the shell's shuffle width
 graft.GraftSession.create(
   shufflePartitions = spark.conf.get("spark.sql.shuffle.partitions").toInt)
 spark.sparkContext.setLogLevel("ERROR")
