@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.logging.log4j.Level
+import org.apache.logging.log4j.core.config.Configurator
 import org.apache.spark.sql.SparkSession
 
 /** Engine entry point: a SparkSession wired with the graft extensions
@@ -47,6 +49,16 @@ object GraftSession {
     // with `util.Widths.pinPartitioned`, a stated-count repartition that
     // AQE never coalesces.
     "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning" -> "true",
+    // bound the explain string Spark builds for every SQL execution start
+    // and every AQE plan update; it rides on a listener event that, with
+    // the UI off, nothing reads. A scan of a cached relation prints that
+    // relation's whole cached plan, so in q191 each string nests every
+    // pin's plan once per reference: one run built 146 MB of them, the
+    // largest 9.7 MB. 64k sits above every plan the healthflow chain
+    // renders (a healthflow run cuts none) and below q191's. Spark walks
+    // the whole tree before it cuts; code that needs a whole plan writes
+    // it through `TreeNode.treeString(append, …)`, which takes no bound.
+    "spark.sql.maxPlanStringLength" -> "64k",
     "spark.sql.session.timeZone" -> "UTC",
     "spark.ui.enabled" -> "false")
 
@@ -70,6 +82,10 @@ object GraftSession {
     val spark = builder(master, shufflePartitions).getOrCreate()
     sql.NativeCatalog.install(spark)
     spark.sparkContext.setLogLevel("WARN")
+    // a plan string cut at `spark.sql.maxPlanStringLength` already ends in
+    // Spark's own "... N more characters" marker; the WARN logged for each
+    // cut (29 per q191 run) says nothing more
+    Configurator.setLevel("org.apache.spark.sql.catalyst.util.StringUtils", Level.ERROR)
     spark
   }
 }

@@ -23,7 +23,9 @@ import org.apache.spark.graft.SparkStatus
   *     whether or not the action ran under a SQL execution id, so
   *     `queryExecution.toRdd.count()` is profiled like `collect()`;
   *   - codegen work (classes compiled, Janino time) is the change of
-  *     Spark's codegen counters across the tagged body ([[Tag]]).
+  *     Spark's codegen counters across the tagged body ([[Tag]]);
+  *   - driver time is the body's wall time that no tagged job covers:
+  *     planning, plan rendering and driver-side code between jobs.
   */
 object QueryProfile {
 
@@ -63,20 +65,22 @@ object QueryProfile {
     * else compiles at the same time, as in Bench and Verify, which run
     * their queries one at a time. A compile is a miss of Spark's codegen
     * cache: rerunning a plan whose classes the cache still holds compiles
-    * nothing.
+    * nothing. `wallMs` is the wall time of the body.
     */
-  final case class Tag(name: String, compiles: Long, compileMs: Long)
+  final case class Tag(name: String, compiles: Long, compileMs: Long, wallMs: Long)
 
   /** `taskP50Ms` is the median of the stages' median task durations,
     * weighted by each stage's task count (exact when one stage holds most
     * of the tasks); `taskMaxMs` is exact. Bytes are summed over every
-    * attempt of every stage the tagged jobs ran. `compiles` and
-    * `compileMs` are the [[Tag]]'s.
+    * attempt of every stage the tagged jobs ran. `compiles`, `compileMs`
+    * and `wallMs` are the [[Tag]]'s; `driverMs` is `wallMs` minus the
+    * union of the tagged jobs' intervals (submission to completion), the
+    * time the body ran with no job of its own running.
     */
   final case class Profile(jobs: Seq[Job], stages: Int, tasks: Long,
       taskP50Ms: Long, taskMaxMs: Long, shuffleReadBytes: Long,
       shuffleWriteBytes: Long, spillBytes: Long, compiles: Long, compileMs: Long,
-      ops: Seq[Op], singleWindows: Seq[SingleWindow]) {
+      wallMs: Long, driverMs: Long, ops: Seq[Op], singleWindows: Seq[SingleWindow]) {
 
     /** One `{"metric":"profile",…}` line for `name`. */
     def json(name: String): String = {
@@ -109,6 +113,7 @@ object QueryProfile {
         s""""task_max_ms":$taskMaxMs,"shuffle_read_mb":${mb(shuffleReadBytes)},""" +
         s""""shuffle_write_mb":${mb(shuffleWriteBytes)},"spill_mb":${mb(spillBytes)},""" +
         s""""compiles":$compiles,"compile_ms":$compileMs,""" +
+        s""""wall_ms":$wallMs,"driver_ms":$driverMs,""" +
         s""""job_list":${js.mkString("[", ",", "]")},"ops":${os.mkString("[", ",", "]")},""" +
         s""""single_partition_windows":${ws.mkString("[", ",", "]")}}"""
     }
@@ -124,10 +129,11 @@ object QueryProfile {
     val name = s"$label#${seq.incrementAndGet()}"
     val sc = spark.sparkContext
     def compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-    val (c0, ns0) = (compiles, CodeGenerator.compileTime)
+    val (c0, ns0, t0) = (compiles, CodeGenerator.compileTime, System.nanoTime())
     sc.addJobTag(name)
     val result = try body finally sc.removeJobTag(name)
-    (result, Tag(name, compiles - c0, (CodeGenerator.compileTime - ns0) / 1000000L))
+    (result, Tag(name, compiles - c0, (CodeGenerator.compileTime - ns0) / 1000000L,
+      (System.nanoTime() - t0) / 1000000L))
   }
 
   private val rootExecution = """-execution-root-id-(\d+)$""".r.unanchored
@@ -168,6 +174,12 @@ object QueryProfile {
     }.flatMap(SparkStatus.execution(sc, _)).map((shortForm _).tupled)
     val (ops, windows) = df.fold((Seq.empty[Op], Seq.empty[SingleWindow]))(d =>
       operators(d.queryExecution.executedPlan))
+    val spans = jobs.flatMap(j =>
+      for (s <- j.submissionTime; e <- j.completionTime) yield (s.getTime, e.getTime))
+    // the union of the job intervals: overlapping jobs count once
+    val (jobMs, _) = spans.sorted.foldLeft((0L, Long.MinValue)) {
+      case ((sum, end), (s, e)) => (sum + math.max(0L, e - math.max(s, end)), math.max(end, e))
+    }
     Profile(
       jobs.zip(nextNamed).map { case (j, next) =>
         Job(j.name, (for (s <- j.submissionTime; e <- j.completionTime)
@@ -180,7 +192,8 @@ object QueryProfile {
       stages.map(_._1.shuffleReadBytes).sum,
       stages.map(_._1.shuffleWriteBytes).sum,
       stages.map { case (s, _) => s.memoryBytesSpilled + s.diskBytesSpilled }.sum,
-      tag.compiles, tag.compileMs, ops, windows)
+      tag.compiles, tag.compileMs, tag.wallMs, math.max(0L, tag.wallMs - jobMs),
+      ops, windows)
   }
 
   /** Every operator of `plan` carrying a profiled metric, AQE wrappers

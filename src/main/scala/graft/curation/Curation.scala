@@ -1180,6 +1180,9 @@ object Curation {
       groupCol: String = "source", benchTextCol: String = "text"): DataFrame = {
     val (report, flagged) = bloomDecontaminateLazy(corpus, bench, gramK, mBits,
       textCol, idCol, groupCol, benchTextCol)
+    // fill the pin first: the report's per-doc and exact-verify branches
+    // would otherwise both compute a not-yet-cached partition
+    flagged.count()
     // pin the (tiny, one-row-per-group) report eagerly so the cached
     // flagged blocks can be released before returning — otherwise every
     // call leaks a corpus-sized cache into a long-lived session

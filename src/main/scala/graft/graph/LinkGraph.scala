@@ -270,6 +270,7 @@ object LinkGraph {
       val seeded = pinPartitioned(nodes.join(
         seeds.groupBy("node_id").agg(max(col("label")).as("seed_label")),
         Seq("node_id"), "left"), "node_id")
+      seeded.count() // fill the pin before each round's joins read it at once
       var labels = seeded.select(col("node_id"), col("seed_label").as("label"))
       for (i <- 1 to iters) {
         val votes = e

@@ -1419,8 +1419,13 @@ object ExtraQueries {
         // localCheckpoint'ed and both pins RELEASED before returning (the
         // LinkGraph.detach discipline) — a library-style caller outside
         // the harness no longer leaks two cached frames for the session.
-        def pin(df: org.apache.spark.sql.DataFrame) =
-          df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        // Each pin is filled before its readers, whose concurrent stages
+        // would otherwise each compute a not-yet-cached partition.
+        def pin(df: org.apache.spark.sql.DataFrame) = {
+          val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          p.count()
+          p
+        }
         val hist = pin(ev.groupBy("event_type", "v").agg(count(lit(1)).as("c")))
         val m2 = medianDoubled(hist, "v")
         val devHist = pin(hist.join(m2, "event_type")

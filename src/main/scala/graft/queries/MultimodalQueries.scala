@@ -789,6 +789,8 @@ object MultimodalQueries {
         val fps = Multimodal.audioFingerprints(
             Multimodal.audioAssetsWithTwins(s, dir)).toDF()
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        // fill the pin before the self-join's two sides read it at once
+        fps.count()
         def bandCol(j: Int) = concat_ws(",",
           (0 until 4).map(i => element_at(col("tv"), j * 4 + i + 1)): _*)
         val banded = fps

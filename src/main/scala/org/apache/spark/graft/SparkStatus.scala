@@ -45,4 +45,15 @@ object SparkStatus {
   def execution(sc: SparkContext, id: Long): Option[(String, String)] =
     new SQLAppStatusStore(sc.statusStore.store, None).execution(id)
       .map(e => (e.details, e.description))
+
+  /** Each retained SQL execution's root execution id with the physical
+    * plan text the store holds for it: the last explain string Spark
+    * posted for the execution, at its start or at an AQE plan update, cut
+    * at `spark.sql.maxPlanStringLength`. Drains the bus first.
+    */
+  def planDescriptions(sc: SparkContext): Seq[(Long, String)] = {
+    drain(sc, 10000L)
+    new SQLAppStatusStore(sc.statusStore.store, None).executionsList()
+      .map(e => (e.rootExecutionId, e.physicalPlanDescription))
+  }
 }

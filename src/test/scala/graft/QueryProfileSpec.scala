@@ -142,4 +142,15 @@ class QueryProfileSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       """"single_partition_windows":[{"window":"rn ORDER BY id","rows":500}]}"""))
     assert(QueryProfile.read(spark, tag).singleWindows.isEmpty)
   }
+
+  test("driver time between jobs counts toward driver_ms") {
+    val (_, tag) = QueryProfile.tagged(spark, "driver") {
+      run(grouped())
+      Thread.sleep(300)
+      run(grouped())
+    }
+    val p = QueryProfile.read(spark, tag)
+    assert(p.wallMs == tag.wallMs && p.driverMs >= 300 && p.driverMs <= p.wallMs, p)
+    assert(p.json("driver").contains(s""""wall_ms":${p.wallMs},"driver_ms":${p.driverMs},"""))
+  }
 }

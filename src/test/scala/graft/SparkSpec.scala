@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.trees.TreeNode
+import org.apache.spark.sql.internal.SQLConf
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -12,6 +14,20 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   def sf(name: String, dir: String = "/root/testdata/sf0.001") =
     spark.read.parquet(s"$dir/$name.parquet")
+
+  /** `plan` as `toString` prints it, but whole: `toString` cuts at the
+    * engine's `spark.sql.maxPlanStringLength`, and an assertion that a
+    * plan lacks an operator must see all of it. Writing through the
+    * `append` overload reads no plan-string bound and changes no conf, so
+    * it is safe on any thread, a listener's included.
+    */
+  def planText(plan: TreeNode[_]): String = {
+    val text = new java.lang.StringBuilder
+    plan.treeString(text.append(_), verbose = true, addSuffix = false,
+      maxFields = SQLConf.get.maxToStringFields, printOperatorId = false,
+      printOutputColumns = false)
+    text.toString
+  }
 
   /** Drop `table` from both the catalog and the warehouse directory — a
     * crashed earlier run can leave the location behind with no catalog
@@ -36,9 +52,9 @@ object SparkSpec {
   private var cached: SparkSession = _
   def session: SparkSession = synchronized {
     if (cached == null || cached.sparkContext.isStopped) {
-      // the production profile (engine confs + extensions), at test width
-      cached = GraftSession.builder("local[4]", shufflePartitions = 4).getOrCreate()
-      cached.sparkContext.setLogLevel("WARN")
+      // the production profile (engine confs, extensions, log levels), at
+      // test width
+      cached = GraftSession.create("local[4]", shufflePartitions = 4)
     }
     cached
   }

@@ -19,7 +19,7 @@ class BronzeSpec extends SparkSpec {
     assert(slice.count() == 2)
 
     // partition pruning is visible in the physical plan
-    val plan = slice.queryExecution.executedPlan.toString
+    val plan = planText(slice.queryExecution.executedPlan)
     assert(plan.contains("PartitionFilters:") && plan.contains("_district"),
       s"expected partition filters in:\n$plan")
     // and no row-group data filter needed for the partition columns
@@ -63,7 +63,7 @@ class BronzeSpec extends SparkSpec {
     // boundary-aware: the store path (".../docs_sigs") contains the docs
     // path (".../docs") as a substring, so check the docs dir with its
     // location-closing delimiters instead of a bare contains
-    val plan = verdicts.queryExecution.executedPlan.toString
+    val plan = planText(verdicts.queryExecution.executedPlan)
     assert(!plan.contains(s"$dir]") && !plan.contains(s"$dir,") && !plan.contains(s"$dir/"),
       "dedup plan scanned the bronze documents table")
     assert(plan.contains("docs_sigs"), "store scan missing from dedup plan")

@@ -627,8 +627,8 @@ class CurationWave3Spec extends SparkSpec {
       .collect().map(_.getLong(2))
     assert(keys.forall(_ === 1L))
     // the reshuffle is a COLUMN, not a sort: the plan stays scan-shaped
-    val plan = Curation.readPackedCorpus(spark, base, 3)._2
-      .queryExecution.executedPlan.toString
+    val plan = planText(Curation.readPackedCorpus(spark, base, 3)._2
+      .queryExecution.executedPlan)
     assert(!plan.contains("Sort"), s"epoch reshuffle must not sort:\n$plan")
   }
 

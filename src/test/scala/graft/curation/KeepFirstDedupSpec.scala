@@ -43,8 +43,8 @@ class KeepFirstDedupSpec extends SparkSpec
   }
 
   test("no corpus-sized window and no text column in any exchange") {
-    val plan = Curation.dedupSegmentsKeepFirst(docs, segmentTokens = 3)
-      .queryExecution.optimizedPlan.toString
+    val plan = planText(Curation.dedupSegmentsKeepFirst(docs, segmentTokens = 3)
+      .queryExecution.optimizedPlan)
     // keeper election must be an Aggregate, not a Window over h
     assert(!plan.contains("Window"), plan)
     // the drop-list join carries ids and positions; segment/token text

@@ -20,7 +20,7 @@ class SpatialFilterRuleSpec extends SparkSpec {
       ContainsPoint(typedlit(poly), col("x"), col("y")))
 
     // the rule injected range predicates that reach the parquet scan
-    val plan = filtered.queryExecution.executedPlan.toString
+    val plan = planText(filtered.queryExecution.executedPlan)
     assert(plan.contains("PushedFilters") &&
       plan.contains("GreaterThanOrEqual(x,2.0)") &&
       plan.contains("LessThanOrEqual(x,8.0)"),

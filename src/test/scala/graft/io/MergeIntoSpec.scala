@@ -57,7 +57,7 @@ class MergeIntoSpec extends SparkSpec {
     val executed = scala.collection.mutable.ArrayBuffer.empty[String]
     val listener = new QueryExecutionListener {
       override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-        executed.synchronized { executed += qe.executedPlan.toString }
+        executed.synchronized { executed += planText(qe.executedPlan) }
       override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
     }
     spark.listenerManager.register(listener)

@@ -152,14 +152,14 @@ class WritersSpec extends SparkSpec {
       "bkt_right", Seq("k"), buckets = 4)
     try {
       val joined = spark.table("bkt_left").join(spark.table("bkt_right"), "k")
-      val plan = joined.queryExecution.executedPlan.toString
+      val plan = planText(joined.queryExecution.executedPlan)
       assert(!plan.contains("Exchange hashpartitioning"),
         s"expected bucket co-location to avoid the shuffle:\n$plan")
       assert(joined.count() == 1000)
       // sanity: the same join on plain (unbucketed) frames does shuffle
       val plain = spark.range(0, 1000).selectExpr("id AS k", "id * 2 AS v1")
         .join(spark.range(0, 1000).selectExpr("id AS k", "id * 3 AS v2"), "k")
-      val planPlain = plain.queryExecution.executedPlan.toString
+      val planPlain = planText(plain.queryExecution.executedPlan)
       assert(planPlain.contains("Exchange") || planPlain.contains("Broadcast"))
     } finally {
       spark.sql("DROP TABLE IF EXISTS bkt_left")

@@ -79,8 +79,8 @@ class VerdictShapeParitySpec extends SparkSpec {
 
   test("videoClipVerdicts: one exchange feeds the pair dedup + count ladder") {
     val (b1, b2, ids2) = videoFixture()
-    val plan = Multimodal.videoClipVerdicts(ids2, b2, b1, g, 2, Some(2))
-      .queryExecution.executedPlan.toString
+    val plan = planText(Multimodal.videoClipVerdicts(ids2, b2, b1, g, 2, Some(2))
+      .queryExecution.executedPlan)
     // the pair-grain distinct and the matched-frame count share the
     // explicit pair-keyed exchange: no planner-inserted exchange may
     // re-cluster on the (pair, frame) distinct keys

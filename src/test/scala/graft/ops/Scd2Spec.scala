@@ -68,8 +68,8 @@ class Scd2Spec extends SparkSpec {
   }
 
   test("the plan shuffles once: both windows share one partitioning") {
-    val plan = Scd2.fromChangeLog(log, Seq("k"), "ts", Seq("attr"), Seq("seq"))
-      .queryExecution.executedPlan.toString
+    val plan = planText(Scd2.fromChangeLog(log, Seq("k"), "ts", Seq("attr"), Seq("seq"))
+      .queryExecution.executedPlan)
     val exchanges = "Exchange hashpartitioning".r.findAllIn(plan).length
     assert(exchanges == 1, s"expected ONE key exchange, got $exchanges:\n$plan")
   }

@@ -166,7 +166,7 @@ class CurationQueriesSpec extends SparkSpec {
 
     // THE design point: the dedup plan scans the signature store, never the
     // history documents — ingest was the last time history text was read
-    val plan = verdicts.queryExecution.executedPlan.toString
+    val plan = planText(verdicts.queryExecution.executedPlan)
     assert(plan.contains("sigs"), s"store scan missing from plan")
     assert(!plan.contains(histDir), s"history docs scanned by the batch path")
 

@@ -14,7 +14,7 @@ class PlanShapeSpec extends SparkSpec
   private val dir = "/root/testdata/sf0.001"
 
   private def physicalPlan(name: String): String =
-    SparkEntry.queries(name)(spark, dir).queryExecution.executedPlan.toString
+    planText(SparkEntry.queries(name)(spark, dir).queryExecution.executedPlan)
 
   test("q43 label centroids aggregates with constant-size state (no collect_list)") {
     val plan = physicalPlan("q43_label_centroids")
@@ -94,7 +94,7 @@ class PlanShapeSpec extends SparkSpec
 
   test("no query plans a CartesianProduct (unbroadcast cross joins are scale bombs)") {
     val offenders = SparkEntry.queries.keys.toSeq.sorted.flatMap { name =>
-      val plan = SparkEntry.queries(name)(spark, dir).queryExecution.executedPlan.toString
+      val plan = planText(SparkEntry.queries(name)(spark, dir).queryExecution.executedPlan)
       if (plan.contains("CartesianProduct")) Some(name) else None
     }
     assert(offenders.isEmpty, s"cartesian products in: $offenders")
@@ -104,7 +104,7 @@ class PlanShapeSpec extends SparkSpec
     // a single aggregate over an outer join — materializes through one job
     for (q <- Seq("q20_upsert_counts", "q39_dedup_keeplist")) {
       val df = SparkEntry.queries(q)(spark, dir)
-      assert(df.queryExecution.executedPlan.toString.contains("HashAggregate"))
+      assert(planText(df.queryExecution.executedPlan).contains("HashAggregate"))
       assert(df.count() == 1)
     }
   }
@@ -138,7 +138,7 @@ class PlanShapeSpec extends SparkSpec
     }
     assert(windows.isEmpty,
       s"multiplicity must not go through a window: ${windows.map(_.partitionSpec)}")
-    val textScans = plan.toString.linesIterator
+    val textScans = planText(plan).linesIterator
       .count(l => l.contains("Scan parquet") && l.contains("text#"))
     assert(textScans <= 2, s"expected at most two text-reading scans, got $textScans")
     val shuffles = collect(plan) {
@@ -170,7 +170,7 @@ class PlanShapeSpec extends SparkSpec
   test("q119/q120 stratified window inputs are narrow (no text through an exchange)") {
     for (q <- Seq("q119_stratified_sample", "q120_shard_pack")) {
       val plan = SparkEntry.queries(q)(spark, dir).queryExecution.executedPlan
-      assert(plan.toString.contains("Window"), s"$q: expected a window")
+      assert(planText(plan).contains("Window"), s"$q: expected a window")
       val shuffles = collect(plan) {
         case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e
       }
@@ -202,7 +202,7 @@ class PlanShapeSpec extends SparkSpec
     }.isEmpty, "indexed corpus must not shuffle into a merge join")
     // the ADC table lookups live ABOVE the probe join in the plan tree —
     // i.e. only probed residents pay the element_at scan
-    val s = plan.toString
+    val s = planText(plan)
     val adcAt = s.indexOf("element_at")
     val joinAt = s.indexOf("BroadcastHashJoin")
     assert(adcAt >= 0 && joinAt >= 0 && adcAt < joinAt,
@@ -223,7 +223,7 @@ class PlanShapeSpec extends SparkSpec
     assert(collect(plan) {
       case j: org.apache.spark.sql.execution.joins.SortMergeJoinExec => j
     }.isEmpty, "indexed corpus must not shuffle into a merge join")
-    val s = plan.toString
+    val s = planText(plan)
     val adcAt = s.indexOf("element_at")
     val joinAt = s.indexOf("BroadcastHashJoin")
     assert(adcAt >= 0 && joinAt >= 0 && adcAt < joinAt,
@@ -234,7 +234,7 @@ class PlanShapeSpec extends SparkSpec
   test("q136 subword tokenization is one pass: no explode, no text in exchanges") {
     val plan = SparkEntry.queries("q136_subword_tokenize")(spark, dir)
       .queryExecution.executedPlan
-    assert(!plan.toString.contains("Generate"),
+    assert(!planText(plan).contains("Generate"),
       "segmentation must not explode per-token rows")
     val scans = collect(plan) {
       case s: org.apache.spark.sql.execution.FileSourceScanExec => s
@@ -257,7 +257,7 @@ class PlanShapeSpec extends SparkSpec
     for (out <- exchanges; a <- out)
       assert(!a.name.toLowerCase.contains("payload"),
         s"image payload column '${a.name}' in an exchange")
-    assert(!plan.toString.contains("CartesianProduct"))
+    assert(!planText(plan).contains("CartesianProduct"))
   }
 
   test("q140 blocks on the dHash band key, not dims alone (fixed-size-corpus safety)") {
@@ -309,7 +309,7 @@ class PlanShapeSpec extends SparkSpec
       case j: org.apache.spark.sql.execution.joins.SortMergeJoinExec => j
     }.forall(j => j.output.forall(a => !a.name.toLowerCase.contains("doc_id"))),
       "doc-level rows must not shuffle into a merge join")
-    assert(!plan.toString.contains("text#"), "text column read by a mix-only query")
+    assert(!planText(plan).contains("text#"), "text column read by a mix-only query")
   }
 
   test("q144 exact re-rank fetches floats through a pushed In() point lookup") {
@@ -363,7 +363,7 @@ class PlanShapeSpec extends SparkSpec
       for (e <- exchanges; a <- e.output)
         assert(!Seq("gram", "text", "btext").contains(a.name.toLowerCase),
           s"corpus text column '${a.name}' reached an exchange")
-      assert(!plan.toString.contains("CartesianProduct"))
+      assert(!planText(plan).contains("CartesianProduct"))
     } finally flagged.unpersist()
   }
 
@@ -377,7 +377,7 @@ class PlanShapeSpec extends SparkSpec
     }; a <- e.output)
       assert(!a.name.toLowerCase.contains("text"),
         s"document text column '${a.name}' reached an exchange")
-    assert(!plan.toString.contains("CartesianProduct"))
+    assert(!planText(plan).contains("CartesianProduct"))
   }
 
   test("q191 CCNet chain: text scan-side only, no corpus-sized window") {
@@ -408,7 +408,7 @@ class PlanShapeSpec extends SparkSpec
       assert(bucketed || histogramGrain,
         s"corpus-sized window: partitions ${w.partitionSpec}, output ${w.output}")
     }
-    assert(!plan.toString.contains("CartesianProduct"))
+    assert(!planText(plan).contains("CartesianProduct"))
   }
 
   test("q194 video near-dup: payload bytes never reach an exchange") {
@@ -424,7 +424,7 @@ class PlanShapeSpec extends SparkSpec
       assert(!a.dataType.isInstanceOf[org.apache.spark.sql.types.BinaryType],
         s"binary column '${a.name}' reached an exchange")
     }
-    assert(!plan.toString.contains("CartesianProduct"))
+    assert(!planText(plan).contains("CartesianProduct"))
   }
 
   test("q187/q188 surprisal: gram text never reaches an exchange") {
@@ -441,7 +441,7 @@ class PlanShapeSpec extends SparkSpec
       }; a <- e.output)
         assert(!Seq("text", "g", "w", "gram").contains(a.name.toLowerCase),
           s"$name: text-bearing column '${a.name}' reached an exchange")
-      assert(!plan.toString.contains("CartesianProduct"), name)
+      assert(!planText(plan).contains("CartesianProduct"), name)
     }
   }
 
@@ -463,7 +463,7 @@ class PlanShapeSpec extends SparkSpec
         s"window partitions by ${w.partitionSpec} — a stratum-only window " +
           "serializes each stratum through one task")
     }
-    val s = plan.toString
+    val s = planText(plan)
     assert(!s.contains("SortMergeJoin") && !s.contains("ShuffledHashJoin"),
       "the offset join must broadcast, not shuffle")
     for (e <- collect(plan) {
@@ -572,7 +572,7 @@ class PlanShapeSpec extends SparkSpec
     for (e <- exchanges; a <- e.output)
       assert(!a.dataType.typeName.contains("binary"),
         s"q269: binary column '${a.name}' reached an exchange")
-    assert(plan.toString.contains("HashAggregate"),
+    assert(planText(plan).contains("HashAggregate"),
       "expected partial+final aggregation around the exchange")
   }
 

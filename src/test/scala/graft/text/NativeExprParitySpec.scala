@@ -237,7 +237,7 @@ class NativeExprParitySpec extends SparkSpec {
       val rows = df.collect() // throws if any generated code fails to compile
       // AQE finalizes (and codegen-collapses) the plan only at execution —
       // read it AFTER the collect
-      val plan = df.queryExecution.executedPlan.toString
+      val plan = planText(df.queryExecution.executedPlan)
       // AQE renders a whole-stage-codegen'd operator as a "*(n)" prefix
       assert(plan.contains("*(1) Project"), plan)
       assert(rows.length == 3)

@@ -59,7 +59,7 @@ class SetSimJoinSpec extends SparkSpec {
     val df = SetSimJoin.jaccardJoin(
       (0L until 10L).map(i => i -> Seq(s"a$i", "shared")).toDF("id", "tokens"),
       1, 2)
-    val plan = df.queryExecution.executedPlan.toString
+    val plan = planText(df.queryExecution.executedPlan)
     assert(!plan.contains("CartesianProduct"),
       s"prefix filter must drive an equi-join, got:\n$plan")
   }

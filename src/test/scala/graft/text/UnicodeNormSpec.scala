@@ -54,7 +54,7 @@ class UnicodeNormSpec extends SparkSpec {
     import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
     assert(!classOf[CodegenFallback].isAssignableFrom(classOf[NfcNormalize]))
     val df = sf("documents").select(UnicodeNorm.nfcNormalize(col("text")))
-    val plan = df.queryExecution.executedPlan.toString
+    val plan = planText(df.queryExecution.executedPlan)
     // "*(1) Project [nfcnormalize(...)" — the asterisk IS the
     // whole-stage-codegen marker; a fallback would print an unstarred
     // Project around the expression

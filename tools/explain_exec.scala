@@ -28,7 +28,13 @@ val done = {
       df.queryExecution.toRdd.count()
       df
     }
+    // the plan whole: the engine cuts plan strings at 64k characters. The
+    // query ran under the cut, as in Bench, so its profile's `wall_ms` and
+    // `driver_ms` match Bench's
+    val bound = "spark.sql.maxPlanStringLength"
+    spark.conf.unset(bound)
     val plan = df.queryExecution.executedPlan.toString
+    spark.conf.set(bound, graft.GraftSession.engineConf(bound))
     java.nio.file.Files.write(
       java.nio.file.Paths.get(s"$out/${n}_$tag.txt"), plan.getBytes("UTF-8"))
     val profile = graft.QueryProfile.read(spark, profileTag, Some(df)).json(n)

@@ -30,6 +30,8 @@ java.nio.file.Files.createDirectories(java.nio.file.Paths.get(out))
 // cache as GraftSession does), keeping the shell's shuffle width
 graft.GraftSession.create(
   shufflePartitions = spark.conf.get("spark.sql.shuffle.partitions").toInt)
+// and dump whole plans: the engine cuts plan strings at 64k characters
+spark.conf.unset("spark.sql.maxPlanStringLength")
 spark.sparkContext.setLogLevel("ERROR")
 val plans = new ConcurrentLinkedQueue[(String, String)]()
 val listener = new org.apache.spark.sql.util.QueryExecutionListener {
