@@ -52,12 +52,14 @@ object GraftSession {
     // bound the explain string Spark builds for every SQL execution start
     // and every AQE plan update; it rides on a listener event that, with
     // the UI off, nothing reads. A scan of a cached relation prints that
-    // relation's whole cached plan, so in q191 each string nests every
-    // pin's plan once per reference: one run built 146 MB of them, the
-    // largest 9.7 MB. 64k sits above every plan the healthflow chain
-    // renders (a healthflow run cuts none) and below q191's. Spark walks
-    // the whole tree before it cuts; code that needs a whole plan writes
-    // it through `TreeNode.treeString(append, …)`, which takes no bound.
+    // relation's whole cached plan, once per reference, so a query over
+    // pins read in place (`persist` alone) renders every plan below them.
+    // q191 reads its pins as plan leaves (`util.Pins.leaf`) and stays
+    // under the bound (~31k characters); the bound stays for the other
+    // nested-pin plans. 64k sits above every plan the healthflow chain
+    // renders (a healthflow run cuts none). Spark walks the whole tree
+    // before it cuts; code that needs a whole plan writes it through
+    // `TreeNode.treeString(append, …)`, which takes no bound.
     "spark.sql.maxPlanStringLength" -> "64k",
     "spark.sql.session.timeZone" -> "UTC",
     "spark.ui.enabled" -> "false")
@@ -84,7 +86,7 @@ object GraftSession {
     spark.sparkContext.setLogLevel("WARN")
     // a plan string cut at `spark.sql.maxPlanStringLength` already ends in
     // Spark's own "... N more characters" marker; the WARN logged for each
-    // cut (29 per q191 run) says nothing more
+    // cut says nothing more
     Configurator.setLevel("org.apache.spark.sql.catalyst.util.StringUtils", Level.ERROR)
     spark
   }

@@ -807,15 +807,15 @@ object CurationQueries {
           .select(explode(
             graft.text.TextSketch.wordShingles(col("btext"), 8)).as("gram"))
           .distinct()
-        val gpos = d.select(col("doc_id"),
+        // read twice (doc and chunk contamination): pinned and filled first
+        val gpos = graft.util.Pins.leaf(d.select(col("doc_id"),
             posexplode(graft.text.TextSketch.wordShingles(col("text"), 8))
               .as(Seq("gi", "gram")))
           .join(broadcast(bench), Seq("gram"), "left_semi")
           // g_doc, not doc_id: the chunk side descends from the SAME scan,
           // and a same-name dataset self-join condition degenerates to a
           // trivially-true predicate (cross-doc contamination)
-          .select(col("doc_id").as("g_doc"), (col("gi") + 1).cast("long").as("gpos"))
-          .persist()
+          .select(col("doc_id").as("g_doc"), (col("gi") + 1).cast("long").as("gpos")))
         val contDocs = gpos.select(col("g_doc").as("doc_id")).distinct()
           .withColumn("cont_doc", lit(1L))
         val ch = graft.curation.Curation.passageChunks(d)
@@ -1297,22 +1297,22 @@ object CurationQueries {
     Q("q191_ccnet_pipeline",
       (s, dir) => {
         val d = t(s, dir, "documents")
-        val cleaned = graft.curation.Curation.removeDupSpans(d)
+        // the cleaned corpus, then the stage id-sets, each computed
+        // scan-side off the cached corpus. Every id frame feeds TWO
+        // consumers (the next stage's semi-join AND its ledger count),
+        // and each is the result of a full gram/feature pass over the
+        // cached text — pin the narrow ids (the q166 discipline; bytes
+        // are trivial, the saved recompute is the pass itself). Each pin
+        // is filled here and read as a plan leaf, so no later plan nests
+        // the stages below it. Released by the harness's per-query
+        // clearCache.
+        import graft.util.Pins.{leaf => pin}
+        val cleaned = pin(graft.curation.Curation.removeDupSpans(d)
           .join(d.select("doc_id", "lang"), Seq("doc_id"))
           .select(col("doc_id"), col("lang"), col("n_kept"),
-            col("clean_text").as("text"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+            col("clean_text").as("text")))
         val ref = cleaned.filter(col("doc_id") % 2 === 0)
         val tgt = cleaned.filter(col("doc_id") % 2 === 1)
-        // stage id-sets, each computed scan-side off the cached corpus.
-        // Every id frame below feeds TWO consumers (the next stage's
-        // semi-join AND its ledger count), and each is the result of a
-        // full gram/feature pass over the cached text — persist the
-        // narrow ids (the q166 discipline; bytes are trivial, the saved
-        // recompute is the pass itself). Released by the harness's
-        // per-query clearCache.
-        def pin(df: org.apache.spark.sql.DataFrame) =
-          df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         val funnelIds = pin(graft.curation.Curation.funnelSurvivors(tgt)
           .select("doc_id"))
         val toks0 = split(trim(col("text")), "\\s+")

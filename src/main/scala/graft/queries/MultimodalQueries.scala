@@ -786,11 +786,9 @@ object MultimodalQueries {
     // synthesis parameters without parsing a byte.
     Q("q167_audio_neardup",
       (s, dir) => {
-        val fps = Multimodal.audioFingerprints(
-            Multimodal.audioAssetsWithTwins(s, dir)).toDF()
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        // fill the pin before the self-join's two sides read it at once
-        fps.count()
+        // filled before the self-join's two sides read it at once
+        val fps = graft.util.Pins.leaf(Multimodal.audioFingerprints(
+            Multimodal.audioAssetsWithTwins(s, dir)).toDF())
         def bandCol(j: Int) = concat_ws(",",
           (0 until 4).map(i => element_at(col("tv"), j * 4 + i + 1)): _*)
         val banded = fps

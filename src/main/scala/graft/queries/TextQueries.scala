@@ -180,11 +180,12 @@ object TextQueries {
     // to keep it sparse), and crucially text-free: a near-dup-heavy or
     // band-skewed corpus inflates the pair COUNT, not the broadcast row
     // width, so the failure mode is graceful. `pairs` is referenced by
-    // BOTH corpus joins, so it is persisted first — Spark has no
+    // BOTH corpus joins, so it is pinned first — Spark has no
     // DataFrame-level CSE and the two broadcast keys (doc_a vs doc_b)
-    // defeat exchange reuse; without the persist the whole band-join
-    // lineage would execute twice.
-    val pairsCached = pairs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // defeat exchange reuse; without the pin the whole band-join
+    // lineage would execute twice. Filled before either join reads it,
+    // so the two broadcasts do not both compute it.
+    val pairsCached = graft.util.Pins.leaf(pairs)
     val docs = corpus(s, dir)
     val withA = docs
       .select(col("doc_id").as("doc_a"), col("text").as("text_a"))
@@ -727,9 +728,9 @@ object TextQueries {
     Q("q153_leakage_safe_split",
       (s, dir) => {
         // the verified pair set feeds THREE consumers (CC edges + both
-        // leak measurements) — persist, or the band join runs three times
-        val pairs = minhashVerifiedPairs(s, dir).select("doc_a", "doc_b")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        // leak measurements) — pin, or the band join runs three times
+        val pairs = graft.util.Pins.leaf(
+          minhashVerifiedPairs(s, dir).select("doc_a", "doc_b"))
         val nonRoot = graft.ops.ConnectedComponents.run(
           pairs.select(col("doc_a").as("src"), col("doc_b").as("dst")))
         val comp = nonRoot.unionByName(
@@ -739,11 +740,10 @@ object TextQueries {
             .cast("int") % 100
         def splitOf(b: org.apache.spark.sql.Column) =
           when(b < 80, "train").when(b < 90, "val").otherwise("test")
-        val assigned = corpus(s, dir).select(col("doc_id"))
+        val assigned = graft.util.Pins.leaf(corpus(s, dir).select(col("doc_id"))
           .join(comp, col("doc_id") === col("node"), "left_outer")
           .select(col("doc_id"), coalesce(col("root"), col("doc_id")).as("root"))
-          .withColumn("split", splitOf(bucket(col("root"))))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          .withColumn("split", splitOf(bucket(col("root")))))
         val counts = assigned.agg(
           sum(when(col("split") === "train", 1L).otherwise(0L)).as("train_docs"),
           sum(when(col("split") === "val", 1L).otherwise(0L)).as("val_docs"),

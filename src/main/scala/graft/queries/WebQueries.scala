@@ -382,12 +382,10 @@ object WebQueries {
               lit("?utm_source=feed&v="), (col("uid") % 5).cast("string")).as("url"),
             concat(lit(PreA), col("cid").cast("string"), lit(PreB),
               col("cid").cast("string"), lit(PreC), col("ctext"), lit(Post)).as("html"))
-        val keys = CrawlIngest.pageKeys(pages)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        val keys = graft.util.Pins.leaf(CrawlIngest.pageKeys(pages))
         val k1 = keys.filter(col("page_id") % 2 === 0)
         val k2 = keys.filter(col("page_id") % 2 === 1)
-        val v1 = CrawlIngest.crawlVerdicts(k1, keys.limit(0))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        val v1 = graft.util.Pins.leaf(CrawlIngest.crawlVerdicts(k1, keys.limit(0)))
         val store = v1.filter(col("verdict") === "accepted")
           .select("page_id", "canon_url", "text_md5")
         val v2 = CrawlIngest.crawlVerdicts(k2, store)

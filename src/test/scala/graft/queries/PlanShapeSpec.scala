@@ -1,6 +1,8 @@
 package graft.queries
 
 import graft.{SparkEntry, SparkSpec}
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.functions._
 
 /** Plan-shape regression guards for the scale-sensitive queries: the
@@ -15,6 +17,26 @@ class PlanShapeSpec extends SparkSpec
 
   private def physicalPlan(name: String): String =
     planText(SparkEntry.queries(name)(spark, dir).queryExecution.executedPlan)
+
+  /** Every operator reachable from `roots`, each once: through AQE's
+    * current plans and query stages (as `collect` walks) and also into
+    * the plan each cached relation was filled by.
+    */
+  private def reachable(roots: Seq[SparkPlan]): Seq[SparkPlan] = {
+    val seen = java.util.Collections.newSetFromMap(
+      new java.util.IdentityHashMap[SparkPlan, java.lang.Boolean])
+    val order = Seq.newBuilder[SparkPlan]
+    def walk(p: SparkPlan): Unit = if (seen.add(p)) {
+      order += p
+      allChildren(p).foreach(walk)
+      p match {
+        case i: InMemoryTableScanExec => walk(i.relation.cachedPlan)
+        case _ =>
+      }
+    }
+    roots.foreach(walk)
+    order.result()
+  }
 
   test("q43 label centroids aggregates with constant-size state (no collect_list)") {
     val plan = physicalPlan("q43_label_centroids")
@@ -40,9 +62,12 @@ class PlanShapeSpec extends SparkSpec
 
   test("q35/q36 sketch expressions are not re-evaluated by pushdown or project collapse") {
     // a pushed-down isNotNull(sig) filter or band keys built straight over
-    // the sketch column would duplicate the full per-doc hash pass
-    val p35 = physicalPlan("q35_minhash_lsh")
-    assert(!p35.contains("isnotnull(minhashsig"), "sig-null filter was pushed below the projection")
+    // the sketch column would duplicate the full per-doc hash pass. The
+    // band join runs in the fill of q35's pair pin, before q35's own plan
+    val (_, p35) = executedPlans(SparkEntry.queries("q35_minhash_lsh")(spark, dir).collect())
+    assert(p35.exists(p => planText(p).contains("minhashsig")))
+    assert(!p35.exists(p => planText(p).contains("isnotnull(minhashsig")),
+      "sig-null filter was pushed below the projection")
     val p36 = physicalPlan("q36_simhash")
     assert("simhash60\\(".r.findAllIn(p36).length <= 12,
       "simhash inlined into band expressions (CollapseProject regression)")
@@ -387,18 +412,32 @@ class PlanShapeSpec extends SparkSpec
     // no exchange may carry document text, and every window must run at
     // md5-bucket grain (the cumsum), histogram grain (terciles), or a
     // narrow hash-multiplicity grain — never partitioned by a
-    // corpus-sized text/id-order key alone
-    val plan = SparkEntry.queries("q191_ccnet_pipeline")(spark, dir)
-      .queryExecution.executedPlan
-    for (e <- collect(plan) {
+    // corpus-sized text/id-order key alone. The stages are pins filled
+    // as the query is built, each its own SQL execution read as a plan
+    // leaf, so the guard walks every execution's plan, and the plan of
+    // every cached relation in it, not only the final query's.
+    val (df, executed) = executedPlans {
+      val df = SparkEntry.queries("q191_ccnet_pipeline")(spark, dir)
+      df.collect()
+      df
+    }
+    val plan = df.queryExecution.executedPlan
+    val operators = reachable(executed)
+    val exchanges = operators.collect {
       case e: org.apache.spark.sql.execution.exchange.Exchange => e
-    }; a <- e.output)
+    }
+    // the chain's stages hold 43 distinct exchanges and 4 windows (the
+    // count of its whole nested plan when every pin is read in place): a
+    // walk that finds fewer has lost a stage
+    assert(exchanges.size >= 43, s"${exchanges.size} exchanges in ${executed.size} executions")
+    for (e <- exchanges; a <- e.output)
       assert(!Seq("text", "ctext", "clean_text", "btext", "gram", "wtext")
           .contains(a.name.toLowerCase),
         s"text-bearing column '${a.name}' reached an exchange")
-    val windows = collect(plan) {
+    val windows = operators.collect {
       case w: org.apache.spark.sql.execution.window.WindowExec => w
     }
+    assert(windows.size >= 4, windows.size)
     for (w <- windows) {
       val bucketed = w.partitionSpec.exists(_.toString.contains("_bkt"))
       // histogram-grain windows (the tercile thresholds) run over
@@ -408,7 +447,12 @@ class PlanShapeSpec extends SparkSpec
       assert(bucketed || histogramGrain,
         s"corpus-sized window: partitions ${w.partitionSpec}, output ${w.output}")
     }
-    assert(!planText(plan).contains("CartesianProduct"))
+    assert(!executed.exists(p => planText(p).contains("CartesianProduct")))
+    // the final plan reads each pin as one scan: it nests no stage below
+    // a pin, so its whole text stays under the engine's plan-string bound
+    val whole = planText(plan)
+    assert(!whole.contains("InMemoryRelation"))
+    assert(whole.length < 65536, whole.length)
   }
 
   test("q194 video near-dup: payload bytes never reach an exchange") {

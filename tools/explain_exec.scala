@@ -5,7 +5,12 @@
 // shuffle, spill and per-operator metrics) to
 // <name>_$GRAFT_EXPLAIN_TAG_profile.json. Unlike explain_dump.scala this
 // runs each query (toRdd.count, as Bench times it) first, so the
-// AdaptiveSparkPlan is final and codegen collapse has happened.
+// AdaptiveSparkPlan is final and codegen collapse has happened. The
+// executed plans of the SQL executions the query ran while it was built
+// (the fills of its `util.Pins.leaf` pins, which its own plan reads as
+// one scan each, and any driver-side collect) go to
+// <name>_$GRAFT_EXPLAIN_TAG_fills.txt, one after another, each under a
+// "== execution <i>: <action> ==" header.
 val done = {
   val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
   val out = sys.env.getOrElse("GRAFT_EXPLAIN_OUT", "plans/r18")
@@ -21,26 +26,45 @@ val done = {
   // or the profiles' compile counts differ from Bench's
   graft.GraftSession.create(shufflePartitions = spark.sparkContext.defaultParallelism)
   spark.sparkContext.setLogLevel("ERROR")
+  val executions = new java.util.concurrent.ConcurrentLinkedQueue[
+    (String, org.apache.spark.sql.execution.QueryExecution)]
+  val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+    override def onSuccess(action: String,
+        qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
+      executions.add(action -> qe)
+    override def onFailure(action: String,
+        qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+  }
+  spark.listenerManager.register(listener)
   for (n <- names) {
     spark.catalog.clearCache()
+    executions.clear()
     val (df, profileTag) = graft.QueryProfile.tagged(spark, n) {
       val df = graft.SparkEntry.queries(n)(spark, sfDir)
       df.queryExecution.toRdd.count()
       df
     }
-    // the plan whole: the engine cuts plan strings at 64k characters. The
-    // query ran under the cut, as in Bench, so its profile's `wall_ms` and
-    // `driver_ms` match Bench's
+    org.apache.spark.graft.SparkStatus.drain(spark.sparkContext, 10000L)
+    // the plans whole: the engine cuts plan strings at 64k characters.
+    // The query ran under the cut, as in Bench, so its profile's `wall_ms`
+    // and `driver_ms` match Bench's
     val bound = "spark.sql.maxPlanStringLength"
     spark.conf.unset(bound)
     val plan = df.queryExecution.executedPlan.toString
+    import scala.jdk.CollectionConverters._
+    val fills = executions.asScala.toSeq.zipWithIndex.map { case ((action, qe), i) =>
+      s"== execution $i: $action ==\n${qe.executedPlan}\n"
+    }
     spark.conf.set(bound, graft.GraftSession.engineConf(bound))
     java.nio.file.Files.write(
       java.nio.file.Paths.get(s"$out/${n}_$tag.txt"), plan.getBytes("UTF-8"))
+    java.nio.file.Files.write(java.nio.file.Paths.get(s"$out/${n}_${tag}_fills.txt"),
+      fills.mkString("\n").getBytes("UTF-8"))
     val profile = graft.QueryProfile.read(spark, profileTag, Some(df)).json(n)
     java.nio.file.Files.write(java.nio.file.Paths.get(s"$out/${n}_${tag}_profile.json"),
       (profile + "\n").getBytes("UTF-8"))
-    println(s"[explain-exec] wrote $out/${n}_$tag.txt (${plan.length} chars) and its profile")
+    println(s"[explain-exec] wrote $out/${n}_$tag.txt (${plan.length} chars), " +
+      s"${fills.size} executions' plans and its profile")
   }
   "ok"
 }
