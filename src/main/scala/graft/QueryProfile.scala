@@ -3,14 +3,17 @@ package graft
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
-import org.apache.spark.sql.execution.{InputAdapter, SparkPlan, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.{InputAdapter, QueryExecution, SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.graft.SparkStatus
+import org.apache.spark.sql.util.QueryExecutionListener
+
+import scala.jdk.CollectionConverters._
 
 /** What Spark did for one piece of work, read from Spark's own
-  * bookkeeping after the work ran. It adds no listener of its own:
+  * bookkeeping after the work ran:
   *   - jobs, stages and tasks come from the live status store
   *     ([[org.apache.spark.graft.SparkStatus]]), selected by a job tag
   *     set around the work ([[tagged]]). A tag, not a job group:
@@ -18,10 +21,13 @@ import org.apache.spark.graft.SparkStatus
   *     group inside pipeline calls, which would drop every later job of
   *     the work;
   *   - per-operator numbers come from the SQL metrics of the executed plan
-  *     of the frame the work returned, AQE stages unwrapped, with the plans
-  *     of the cached relations it scans. These fill in
-  *     whether or not the action ran under a SQL execution id, so
-  *     `queryExecution.toRdd.count()` is profiled like `collect()`;
+  *     of the frame the work returned and of every SQL execution the work
+  *     ran (a pin's fill, a write, a driver-side collect; captured by a
+  *     query-execution listener around the work, see [[executions]]), AQE
+  *     stages unwrapped, with the plans of the cached relations they
+  *     scan. The frame's metrics fill in whether or not its action ran
+  *     under a SQL execution id, so `queryExecution.toRdd.count()` is
+  *     profiled like `collect()`;
   *   - codegen work (classes compiled, Janino time) is the change of
   *     Spark's codegen counters across the tagged body ([[Tag]]);
   *   - driver time is the body's wall time that no tagged job covers:
@@ -42,11 +48,12 @@ object QueryProfile {
   final case class Job(name: String, ms: Long, site: Option[String])
 
   /** One physical operator that carries a metric profiled here: its node
-    * name, the plan it belongs to (0 = the frame's own plan, k = the k-th
-    * cached relation it scans, whose codegen ids are numbered apart), its
-    * whole-stage-codegen stage (0 when interpreted), and each metric it
-    * has — rows out, the codegen stage's pipeline time, shuffle bytes
-    * written, peak memory.
+    * name, the plan it belongs to (numbered as [[reachable]] numbers them:
+    * 0 = the frame's own plan, then the plans of the SQL executions the
+    * work ran (the first is 0 when the work returned no frame), then each
+    * cached relation's plan; each numbers its codegen ids apart), its whole-stage-codegen stage (0 when interpreted), and
+    * each metric it has — rows out, the codegen stage's pipeline time,
+    * shuffle bytes written, peak memory.
     */
   final case class Op(name: String, plan: Int, codegenStage: Int, rows: Option[Long],
       pipelineMs: Option[Long], shuffleBytes: Option[Long], peakMemory: Option[Long])
@@ -65,9 +72,12 @@ object QueryProfile {
     * else compiles at the same time, as in Bench and Verify, which run
     * their queries one at a time. A compile is a miss of Spark's codegen
     * cache: rerunning a plan whose classes the cache still holds compiles
-    * nothing. `wallMs` is the wall time of the body.
+    * nothing. `wallMs` is the wall time of the body; `executions` are the
+    * SQL executions of the session that completed while it ran
+    * ([[executions]]), equally exact only for work that runs alone.
     */
-  final case class Tag(name: String, compiles: Long, compileMs: Long, wallMs: Long)
+  final case class Tag(name: String, compiles: Long, compileMs: Long, wallMs: Long,
+      executions: Seq[QueryExecution] = Nil)
 
   /** `taskP50Ms` is the median of the stages' median task durations,
     * weighted by each stage's task count (exact when one stage holds most
@@ -130,10 +140,37 @@ object QueryProfile {
     val sc = spark.sparkContext
     def compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     val (c0, ns0, t0) = (compiles, CodeGenerator.compileTime, System.nanoTime())
-    sc.addJobTag(name)
-    val result = try body finally sc.removeJobTag(name)
+    // the wall time stops before `executions` waits for the listener bus
+    val ((result, wallMs), ran) = executions(spark) {
+      sc.addJobTag(name)
+      try (body, (System.nanoTime() - t0) / 1000000L) finally sc.removeJobTag(name)
+    }
     (result, Tag(name, compiles - c0, (CodeGenerator.compileTime - ns0) / 1000000L,
-      (System.nanoTime() - t0) / 1000000L))
+      wallMs, ran))
+  }
+
+  /** `body`'s result and every SQL execution of `spark`'s session that
+    * completed while it ran, in completion order: a query whose pins are
+    * filled as it is built (`util.Pins.leaf`) runs each fill as an
+    * execution of its own, whose plan is no longer part of the query's.
+    * A query-execution listener collects them; after `body` it waits for
+    * the listener bus to deliver the last ones.
+    */
+  def executions[T](spark: SparkSession)(body: => T): (T, Seq[QueryExecution]) = {
+    val ran = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        ran.add(qe)
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit =
+        ()
+    }
+    spark.listenerManager.register(listener)
+    val result = try {
+      val r = body
+      SparkStatus.drain(spark.sparkContext, 10000L)
+      r
+    } finally spark.listenerManager.unregister(listener)
+    (result, ran.asScala.toSeq)
   }
 
   private val rootExecution = """-execution-root-id-(\d+)$""".r.unanchored
@@ -155,7 +192,8 @@ object QueryProfile {
     }
 
   /** The profile of the jobs tagged `tag`, with the operators of `df`'s
-    * executed plan when the work returned a frame.
+    * executed plan when the work returned a frame, and of the plans of
+    * the SQL executions the work ran.
     */
   def read(spark: SparkSession, tag: Tag, df: Option[DataFrame] = None): Profile = {
     val sc = spark.sparkContext
@@ -172,8 +210,9 @@ object QueryProfile {
     val executionSite = (tags: collection.Seq[String]) => tags.collectFirst {
       case rootExecution(id) => id.toLong
     }.flatMap(SparkStatus.execution(sc, _)).map((shortForm _).tupled)
-    val (ops, windows) = df.fold((Seq.empty[Op], Seq.empty[SingleWindow]))(d =>
-      operators(d.queryExecution.executedPlan))
+    val own = df.map(_.queryExecution).toSeq
+    val (ops, windows) = operators((own ++ tag.executions.filterNot(e => own.exists(_ eq e)))
+      .map(_.executedPlan))
     val spans = jobs.flatMap(j =>
       for (s <- j.submissionTime; e <- j.completionTime) yield (s.getTime, e.getTime))
     // the union of the job intervals: overlapping jobs count once
@@ -196,16 +235,52 @@ object QueryProfile {
       ops, windows)
   }
 
-  /** Every operator of `plan` carrying a profiled metric, AQE wrappers
-    * unwrapped, subqueries and the plans of cached relations it scans
-    * included (their metrics hold the cache fill, which Bench's
-    * `clearCache` before each row keeps inside the row). A reused
-    * exchange is a leaf here, so its bytes count once, at the exchange
-    * that wrote them. Alongside: every window with no partition spec.
+  /** One operator [[reachable]] from a set of plans: the plan it belongs
+    * to and its whole-stage-codegen stage (0 when interpreted).
     */
-  private def operators(plan: SparkPlan): (Seq[Op], Seq[SingleWindow]) = {
-    val cached = scala.collection.mutable.ArrayBuffer[SparkPlan]()
-    val windows = scala.collection.mutable.ArrayBuffer[SingleWindow]()
+  final case class Reached(op: SparkPlan, plan: Int, codegenStage: Int)
+
+  /** Every operator reachable from `roots`, each once, in walk order:
+    * through AQE's current plans and query stages, subqueries, and into
+    * the plan each cached relation was filled by. Root i is plan i; each
+    * cached relation's plan is numbered after the roots, as the walk
+    * first reaches it. A reused exchange is a leaf, so the stage below it
+    * counts once, where it ran.
+    */
+  def reachable(roots: Seq[SparkPlan]): Seq[Reached] = {
+    val seen = java.util.Collections.newSetFromMap(
+      new java.util.IdentityHashMap[SparkPlan, java.lang.Boolean])
+    val order = Seq.newBuilder[Reached]
+    var plans = roots.size
+    def walk(p: SparkPlan, in: Int, wscg: Int): Unit = if (seen.add(p)) {
+      val stage = p match {
+        case w: WholeStageCodegenExec => w.codegenStageId
+        case _: InputAdapter => 0
+        case _ => wscg
+      }
+      order += Reached(p, in, stage)
+      p match {
+        case a: AdaptiveSparkPlanExec => walk(a.executedPlan, in, wscg)
+        case s: QueryStageExec => walk(s.plan, in, wscg)
+        case m: InMemoryTableScanExec if !seen.contains(m.relation.cachedPlan) =>
+          plans += 1
+          walk(m.relation.cachedPlan, plans - 1, 0)
+        case _ => (p.children ++ p.subqueries).foreach(walk(_, in, stage))
+      }
+    }
+    roots.zipWithIndex.foreach { case (r, i) => walk(r, i, 0) }
+    order.result()
+  }
+
+  /** Every operator [[reachable]] from `roots` that carries a profiled
+    * metric. Their metrics hold the work's cache fills, which Bench's
+    * `clearCache` before each row keeps inside the row. Alongside: every
+    * window with no partition spec.
+    */
+  private def operators(roots: Seq[SparkPlan]): (Seq[Op], Seq[SingleWindow]) = {
+    val reached = reachable(roots)
+    val planOf = new java.util.IdentityHashMap[SparkPlan, Int]
+    reached.foreach(r => planOf.put(r.op, r.plan))
     def metric(p: SparkPlan, key: String) = p.metrics.get(key).map(m => math.max(m.value, 0L))
     // a window keeps its input's rows: count them at the nearest operator
     // below that counts rows (the exchange into its one partition, if any)
@@ -215,39 +290,23 @@ object QueryProfile {
       case _ => metric(p, "numOutputRows").orElse(metric(p, "shuffleRecordsWritten"))
         .orElse(p.children match { case Seq(c) => rowsIn(c); case _ => None })
     }
-    def walk(p: SparkPlan, in: Int, wscg: Int): Seq[Op] = p match {
-      case a: AdaptiveSparkPlanExec => walk(a.executedPlan, in, wscg)
-      case s: QueryStageExec => walk(s.plan, in, wscg)
-      case m: InMemoryTableScanExec =>
-        val c = m.relation.cachedPlan
-        val seen = cached.exists(_ eq c)
-        if (!seen) cached += c
-        val k = cached.indexWhere(_ eq c) + 1
-        Op(s"${m.nodeName} (plan $k)", in, wscg, metric(m, "numOutputRows"), None, None, None) +:
-          (if (seen) Nil else walk(c, k, 0))
-      case _ =>
-        val stage = p match {
-          case w: WholeStageCodegenExec => w.codegenStageId
-          case _: InputAdapter => 0
-          case _ => wscg
-        }
-        p match {
-          case w: WindowExec if w.partitionSpec.isEmpty =>
-            val keys = w.orderSpec.map(_.child.references.map(_.name).mkString("+"))
-            windows += SingleWindow(in, w.windowExpression.map(_.name).mkString(",") +
-              keys.mkString(" ORDER BY ", ",", ""), rowsIn(w.child))
-          case _ =>
-        }
-        val op = Op(p.nodeName, in, stage, metric(p, "numOutputRows"),
-          metric(p, "pipelineTime"), metric(p, "shuffleBytesWritten"),
-          metric(p, "peakMemory"))
-        val self =
-          if (Seq(op.rows, op.pipelineMs, op.shuffleBytes, op.peakMemory).exists(_.isDefined))
-            Seq(op)
-          else Nil
-        self ++ (p.children ++ p.subqueries).flatMap(walk(_, in, stage))
+    val windows = reached.collect {
+      case Reached(w: WindowExec, in, _) if w.partitionSpec.isEmpty =>
+        val keys = w.orderSpec.map(_.child.references.map(_.name).mkString("+"))
+        SingleWindow(in, w.windowExpression.map(_.name).mkString(",") +
+          keys.mkString(" ORDER BY ", ",", ""), rowsIn(w.child))
     }
-    val ops = walk(plan, 0, 0)
-    (ops, windows.toSeq)
+    val ops = reached.flatMap {
+      case Reached(_: AdaptiveSparkPlanExec | _: QueryStageExec, _, _) => None
+      case Reached(m: InMemoryTableScanExec, in, stage) =>
+        Some(Op(s"${m.nodeName} (plan ${planOf.get(m.relation.cachedPlan)})", in, stage,
+          metric(m, "numOutputRows"), None, None, None))
+      case Reached(p, in, stage) =>
+        Some(Op(p.nodeName, in, stage, metric(p, "numOutputRows"),
+          metric(p, "pipelineTime"), metric(p, "shuffleBytesWritten"),
+          metric(p, "peakMemory"))).filter(o =>
+          Seq(o.rows, o.pipelineMs, o.shuffleBytes, o.peakMemory).exists(_.isDefined))
+    }
+    (ops, windows)
   }
 }

@@ -17,7 +17,8 @@ object Verify {
     }
     selected.foreach { case (name, fn) =>
       // one profile line per query on stderr, leaving outDir as the oracle
-      // check reads it: the jobs, stages and tasks of its build and write
+      // check reads it: the jobs, stages and tasks of its build and write,
+      // and the operators of the SQL executions they ran
       val (_, tag) = QueryProfile.tagged(spark, name) {
         try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")

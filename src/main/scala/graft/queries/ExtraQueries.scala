@@ -1419,16 +1419,11 @@ object ExtraQueries {
         // localCheckpoint'ed and both pins RELEASED before returning (the
         // LinkGraph.detach discipline) — a library-style caller outside
         // the harness no longer leaks two cached frames for the session.
-        // Each pin is filled before its readers, whose concurrent stages
-        // would otherwise each compute a not-yet-cached partition.
-        def pin(df: org.apache.spark.sql.DataFrame) = {
-          val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          p.count()
-          p
-        }
-        val hist = pin(ev.groupBy("event_type", "v").agg(count(lit(1)).as("c")))
+        // Each pin is filled before its readers (util.Pins.filled).
+        val hist = graft.util.Pins.filled(
+          ev.groupBy("event_type", "v").agg(count(lit(1)).as("c")))
         val m2 = medianDoubled(hist, "v")
-        val devHist = pin(hist.join(m2, "event_type")
+        val devHist = graft.util.Pins.filled(hist.join(m2, "event_type")
           .withColumn("dev", abs(col("v") * 2 - col("m2")))
           .groupBy("event_type", "dev").agg(sum("c").as("c")))
         val mad2 = medianDoubled(devHist, "dev").withColumnRenamed("m2", "mad2")

@@ -787,7 +787,7 @@ object MultimodalQueries {
     Q("q167_audio_neardup",
       (s, dir) => {
         // filled before the self-join's two sides read it at once
-        val fps = graft.util.Pins.leaf(Multimodal.audioFingerprints(
+        val fps = graft.util.Pins.filled(Multimodal.audioFingerprints(
             Multimodal.audioAssetsWithTwins(s, dir)).toDF())
         def bandCol(j: Int) = concat_ws(",",
           (0 until 4).map(i => element_at(col("tv"), j * 4 + i + 1)): _*)

@@ -180,12 +180,11 @@ object TextQueries {
     // to keep it sparse), and crucially text-free: a near-dup-heavy or
     // band-skewed corpus inflates the pair COUNT, not the broadcast row
     // width, so the failure mode is graceful. `pairs` is referenced by
-    // BOTH corpus joins, so it is pinned first — Spark has no
+    // BOTH corpus joins, so it is persisted first — Spark has no
     // DataFrame-level CSE and the two broadcast keys (doc_a vs doc_b)
-    // defeat exchange reuse; without the pin the whole band-join
-    // lineage would execute twice. Filled before either join reads it,
-    // so the two broadcasts do not both compute it.
-    val pairsCached = graft.util.Pins.leaf(pairs)
+    // defeat exchange reuse; without the persist the whole band-join
+    // lineage would execute twice.
+    val pairsCached = pairs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val docs = corpus(s, dir)
     val withA = docs
       .select(col("doc_id").as("doc_a"), col("text").as("text_a"))

@@ -65,11 +65,10 @@ object InvertedIndex {
     val perDoc = docs
       .select(col(idCol).as("doc_id"), size(toks).as("dl"),
         TextSketch.termPostings(toks).as("po"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      // fill the pin first: the broadcast df aggregate and the postings
-      // write would otherwise both compute a not-yet-cached partition
-      perDoc.count()
+      // filled first: the broadcast df aggregate and the postings write
+      // would otherwise both compute a not-yet-cached partition
+      graft.util.Pins.filled(perDoc)
       val tf = perDoc
         .select(col("doc_id"), col("dl"), explode(col("po")).as("p"))
         .select(col("p.term").as("term"), col("doc_id"), col("dl"),

@@ -143,6 +143,25 @@ class QueryProfileSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(QueryProfile.read(spark, tag).singleWindows.isEmpty)
   }
 
+  test("the plans of the SQL executions the work ran are profiled, a pin's fill included") {
+    // a leaf pin's fill runs as an execution of its own, and the reader's
+    // plan holds only the leaf's scan: the window is in the fill's plan
+    val (df, tag) = QueryProfile.tagged(spark, "fill") {
+      val df = graft.util.Pins.leaf(spark.range(0, 500, 1, mapTasks)
+          .withColumn("rn", row_number().over(Window.orderBy(col("id").desc))))
+        .groupBy().count()
+      run(df)
+      df
+    }
+    try {
+      assert(tag.executions.nonEmpty)
+      val p = QueryProfile.read(spark, tag, Some(df))
+      assert(p.singleWindows.map(w => (w.window, w.rows)) == Seq(("rn ORDER BY id", Some(500L))),
+        p.singleWindows)
+      assert(p.singleWindows.forall(_.plan > 0) && p.ops.exists(_.plan > 0), p.ops)
+    } finally spark.catalog.clearCache()
+  }
+
   test("driver time between jobs counts toward driver_ms") {
     val (_, tag) = QueryProfile.tagged(spark, "driver") {
       run(grouped())

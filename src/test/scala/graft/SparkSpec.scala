@@ -1,15 +1,11 @@
 package graft
 
-import org.apache.spark.graft.SparkStatus
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.trees.TreeNode
-import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.internal.SQLConf
-import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
-
-import scala.jdk.CollectionConverters._
 
 /** Shared local SparkSession for specs, on the engine profile users get. */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
@@ -35,24 +31,13 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   /** `body`'s result and the executed plan of every SQL execution it ran,
-    * in completion order: a query whose pins are filled as it is built
-    * runs those fills as executions of their own, and their plans are no
-    * longer part of the query's.
+    * in completion order ([[QueryProfile.executions]]): a query whose pins
+    * are filled as it is built runs those fills as executions of their
+    * own, and their plans are no longer part of the query's.
     */
   def executedPlans[T](body: => T): (T, Seq[SparkPlan]) = {
-    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]
-    val listener = new QueryExecutionListener {
-      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-        plans.add(qe.executedPlan)
-      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    val result = try {
-      val r = body
-      SparkStatus.drain(spark.sparkContext, 10000L)
-      r
-    } finally spark.listenerManager.unregister(listener)
-    (result, plans.asScala.toSeq)
+    val (result, ran) = QueryProfile.executions(spark)(body)
+    (result, ran.map(_.executedPlan))
   }
 
   /** Drop `table` from both the catalog and the warehouse directory — a

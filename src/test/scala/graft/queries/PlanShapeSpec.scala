@@ -1,8 +1,7 @@
 package graft.queries
 
-import graft.{SparkEntry, SparkSpec}
-import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import graft.{QueryProfile, SparkEntry, SparkSpec}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Plan-shape regression guards for the scale-sensitive queries: the
@@ -18,24 +17,13 @@ class PlanShapeSpec extends SparkSpec
   private def physicalPlan(name: String): String =
     planText(SparkEntry.queries(name)(spark, dir).queryExecution.executedPlan)
 
-  /** Every operator reachable from `roots`, each once: through AQE's
-    * current plans and query stages (as `collect` walks) and also into
-    * the plan each cached relation was filled by.
+  /** Whether any plan `build` makes holds a CartesianProduct: the frame's
+    * executed plan, and the plans of the SQL executions that ran while it
+    * was built, such as the fills of pins its plan reads as one scan.
     */
-  private def reachable(roots: Seq[SparkPlan]): Seq[SparkPlan] = {
-    val seen = java.util.Collections.newSetFromMap(
-      new java.util.IdentityHashMap[SparkPlan, java.lang.Boolean])
-    val order = Seq.newBuilder[SparkPlan]
-    def walk(p: SparkPlan): Unit = if (seen.add(p)) {
-      order += p
-      allChildren(p).foreach(walk)
-      p match {
-        case i: InMemoryTableScanExec => walk(i.relation.cachedPlan)
-        case _ =>
-      }
-    }
-    roots.foreach(walk)
-    order.result()
+  private def plansCartesian(build: => DataFrame): Boolean = {
+    val (df, fills) = executedPlans(build)
+    (df.queryExecution.executedPlan +: fills).exists(p => planText(p).contains("CartesianProduct"))
   }
 
   test("q43 label centroids aggregates with constant-size state (no collect_list)") {
@@ -62,12 +50,9 @@ class PlanShapeSpec extends SparkSpec
 
   test("q35/q36 sketch expressions are not re-evaluated by pushdown or project collapse") {
     // a pushed-down isNotNull(sig) filter or band keys built straight over
-    // the sketch column would duplicate the full per-doc hash pass. The
-    // band join runs in the fill of q35's pair pin, before q35's own plan
-    val (_, p35) = executedPlans(SparkEntry.queries("q35_minhash_lsh")(spark, dir).collect())
-    assert(p35.exists(p => planText(p).contains("minhashsig")))
-    assert(!p35.exists(p => planText(p).contains("isnotnull(minhashsig")),
-      "sig-null filter was pushed below the projection")
+    // the sketch column would duplicate the full per-doc hash pass
+    val p35 = physicalPlan("q35_minhash_lsh")
+    assert(!p35.contains("isnotnull(minhashsig"), "sig-null filter was pushed below the projection")
     val p36 = physicalPlan("q36_simhash")
     assert("simhash60\\(".r.findAllIn(p36).length <= 12,
       "simhash inlined into band expressions (CollapseProject regression)")
@@ -118,11 +103,29 @@ class PlanShapeSpec extends SparkSpec
   }
 
   test("no query plans a CartesianProduct (unbroadcast cross joins are scale bombs)") {
-    val offenders = SparkEntry.queries.keys.toSeq.sorted.flatMap { name =>
-      val plan = planText(SparkEntry.queries(name)(spark, dir).queryExecution.executedPlan)
-      if (plan.contains("CartesianProduct")) Some(name) else None
-    }
+    val offenders = SparkEntry.queries.keys.toSeq.sorted
+      .filter(name => plansCartesian(SparkEntry.queries(name)(spark, dir)))
     assert(offenders.isEmpty, s"cartesian products in: $offenders")
+  }
+
+  test("the CartesianProduct sweep sees into the fill of a pin read as a plan leaf") {
+    // with no join broadcast, a conditioned cross join plans as a
+    // CartesianProduct; pinned as a leaf it runs in the pin's fill, and
+    // the reader's own plan holds only the leaf's scan
+    val keys = Seq("spark.sql.autoBroadcastJoinThreshold",
+      "spark.sql.adaptive.autoBroadcastJoinThreshold")
+    keys.foreach(spark.conf.set(_, "-1"))
+    try {
+      def build = graft.util.Pins.leaf(spark.range(20).toDF("a")
+          .join(spark.range(20).toDF("b"), col("a") < col("b")))
+        .groupBy().count()
+      val (reader, _) = executedPlans(build)
+      assert(!planText(reader.queryExecution.executedPlan).contains("CartesianProduct"))
+      assert(plansCartesian(build))
+    } finally {
+      keys.foreach(spark.conf.unset)
+      spark.catalog.clearCache()
+    }
   }
 
   test("q20/q39 accounting is one declarative plan (no driver-side multi-action counts)") {
@@ -422,7 +425,7 @@ class PlanShapeSpec extends SparkSpec
       df
     }
     val plan = df.queryExecution.executedPlan
-    val operators = reachable(executed)
+    val operators = QueryProfile.reachable(executed).map(_.op)
     val exchanges = operators.collect {
       case e: org.apache.spark.sql.execution.exchange.Exchange => e
     }

@@ -105,4 +105,17 @@ class PinsSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       spark.catalog.clearCache()
     }
   }
+
+  test("a fill's jobs are named by the line that pinned, not by the helper") {
+    val (_, tag) = graft.QueryProfile.tagged(spark, "pin site") {
+      Pins.leaf(spark.range(0, 100, 1, 2).groupBy((col("id") % 3).as("k")).count())
+    }
+    try {
+      val jobs = graft.QueryProfile.read(spark, tag).jobs
+      assert(jobs.nonEmpty, jobs)
+      // an AQE job carries its action's site in `site`
+      for (j <- jobs)
+        assert((j.name +: j.site.toSeq).exists(_.startsWith("count at PinsSpec.scala:")), jobs)
+    } finally spark.catalog.clearCache()
+  }
 }

@@ -8,9 +8,9 @@
 // AdaptiveSparkPlan is final and codegen collapse has happened. The
 // executed plans of the SQL executions the query ran while it was built
 // (the fills of its `util.Pins.leaf` pins, which its own plan reads as
-// one scan each, and any driver-side collect) go to
-// <name>_$GRAFT_EXPLAIN_TAG_fills.txt, one after another, each under a
-// "== execution <i>: <action> ==" header.
+// one scan each, and any driver-side collect; the profile's tag collects
+// them) go to <name>_$GRAFT_EXPLAIN_TAG_fills.txt, one after another,
+// each under a "== execution <i> ==" header.
 val done = {
   val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
   val out = sys.env.getOrElse("GRAFT_EXPLAIN_OUT", "plans/r18")
@@ -26,34 +26,21 @@ val done = {
   // or the profiles' compile counts differ from Bench's
   graft.GraftSession.create(shufflePartitions = spark.sparkContext.defaultParallelism)
   spark.sparkContext.setLogLevel("ERROR")
-  val executions = new java.util.concurrent.ConcurrentLinkedQueue[
-    (String, org.apache.spark.sql.execution.QueryExecution)]
-  val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-    override def onSuccess(action: String,
-        qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
-      executions.add(action -> qe)
-    override def onFailure(action: String,
-        qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
-  }
-  spark.listenerManager.register(listener)
   for (n <- names) {
     spark.catalog.clearCache()
-    executions.clear()
     val (df, profileTag) = graft.QueryProfile.tagged(spark, n) {
       val df = graft.SparkEntry.queries(n)(spark, sfDir)
       df.queryExecution.toRdd.count()
       df
     }
-    org.apache.spark.graft.SparkStatus.drain(spark.sparkContext, 10000L)
     // the plans whole: the engine cuts plan strings at 64k characters.
     // The query ran under the cut, as in Bench, so its profile's `wall_ms`
     // and `driver_ms` match Bench's
     val bound = "spark.sql.maxPlanStringLength"
     spark.conf.unset(bound)
     val plan = df.queryExecution.executedPlan.toString
-    import scala.jdk.CollectionConverters._
-    val fills = executions.asScala.toSeq.zipWithIndex.map { case ((action, qe), i) =>
-      s"== execution $i: $action ==\n${qe.executedPlan}\n"
+    val fills = profileTag.executions.zipWithIndex.map { case (qe, i) =>
+      s"== execution $i ==\n${qe.executedPlan}\n"
     }
     spark.conf.set(bound, graft.GraftSession.engineConf(bound))
     java.nio.file.Files.write(
